@@ -1,12 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // engine-semantics confs (OHA fallback threshold etc.) live in the ONE
     // shared builder — see EngineSession
-    val spark = EngineSession.builder(cpus).getOrCreate()
+    val spark = EngineSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm up JVM/codegen/scan paths once so the first timed query doesn't
     // absorb several seconds of cold-start; standard steady-state
@@ -56,15 +54,8 @@ object Bench {
             -1.0
           }
         times(name) = times(name) :+ t
-        // Post-measurement storage release (OUTSIDE the timed window):
-        // every localCheckpoint(true) block stays pinned until its
-        // DataFrame is GC'd and the ContextCleaner notices — across
-        // 201×3 executions that accumulation degraded the r9 sf1.0
-        // rehearsal into localCheckpoint/unpersist warning spew. A
-        // rehearsal must measure queries, not storage pressure.
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        // a rehearsal must measure queries, not storage pressure
+        EngineSession.release(spark)
       }
     }
     val results = names.map { case (name, _) =>

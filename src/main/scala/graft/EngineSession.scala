@@ -3,12 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The ONE place engine-semantics session configuration lives (judge r13
-  * #5): Bench, Verify and Explain all build their session through
-  * [[builder]], and [[tune]] applies the same settings to an
-  * externally-provided session (the driver hands SparkEntry a session the
-  * harness never built) via the [[Tables]] first-touch hook — so no query
-  * path can silently run with different aggregation/read semantics than
-  * the ones the suite was measured and oracle-proven under.
+  * #5): Bench, Verify, Explain, Profile and the test suite all build their
+  * session through [[builder]], and [[tune]] applies the same settings to
+  * an externally-provided session (a caller hands SparkEntry a session
+  * the harness never built) via the [[Tables]] first-touch hook — so no
+  * query path can silently run with different aggregation/read semantics
+  * than the ones the suite was measured and oracle-proven under.
   */
 object EngineSession {
 
@@ -27,37 +27,62 @@ object EngineSession {
     */
   def ohaFallback: String = sys.env.getOrElse("SPARK_GRAFT_OHA_FALLBACK", "65536")
 
-  /** Local-mode session builder for the harness mains. `cpus` comes from
-    * `$SPARK_GRAFT_CPUS` at every call site — the driver also runs the
-    * bench at a lower core count to measure scaling, so the master is
-    * never hard-coded.
+  /** Local-mode core count: `$SPARK_GRAFT_CPUS` (scaling runs lower it, so
+    * the master is never hard-coded), else every processor of the machine.
     */
-  def builder(cpus: String): SparkSession.Builder =
+  def localCpus: String = sys.env.getOrElse(
+    "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
+
+  /** The engine-semantics runtime SQL confs, set at build time by
+    * [[builder]] and post-start by [[tune]]:
+    *  - nanosAsLong BEFORE any events read (see [[Tables]]' class doc);
+    *  - UTC for the NTZ bridge;
+    *  - the ObjectHashAggregate fallback ([[ohaFallback]]);
+    *  - a 1-byte floor on AQE's coalesced partition size. AQE coalesces
+    *    toward `max(min(advisory, shuffleBytes / cores), minPartitionSize)`;
+    *    at the 1 MiB default an exchange whose whole shuffle is under
+    *    `cores` MiB collapses to ONE task however heavy the stage it feeds
+    *    (ICWS scoring, hamming joins, partitioned index writes). The floor
+    *    keeps such exchanges at core width; shuffles of `cores` MiB and up
+    *    coalesce exactly as before.
+    */
+  private val sqlConfs: Map[String, String] = Map(
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> ohaFallback,
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1b")
+
+  /** Local-mode session builder for the harness mains and the tests. */
+  def builder(cpus: String = localCpus): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cpus]")
       .withExtensions(new functions.GraftExtensions)
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        ohaFallback)
       .config("spark.ui.enabled", "false")
+      .config(sqlConfs)
 
   /** Engine-semantics runtime confs for a session the harness did NOT
-    * build. Everything here is a runtime SQL conf (settable post-start);
-    * called from the [[Tables]] first-touch path so any session that
-    * reads the fixtures — including the driver's own — runs the query
-    * functions under the same semantics the suite was measured with.
+    * build. Called from the [[Tables]] first-touch path so any session
+    * that reads the fixtures — including a caller's own — runs the
+    * query functions under the same semantics the suite was measured with.
     */
   def tune(spark: SparkSession): Unit = {
-    // nanosAsLong BEFORE any events read (see Tables' class doc); UTC for
-    // the NTZ bridge
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set(
-      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold", ohaFallback)
+    sqlConfs.foreach { case (k, v) => spark.conf.set(k, v) }
     // a session built without GraftExtensions still needs the SQL names
     // (graft_dot / graft_cells / graft_sketch / ... appear inside expr()
     // strings on many query paths)
     functions.register(spark)
+  }
+
+  /** Per-query storage release, outside any timed span: drops cached
+    * frames and every persisted RDD (each `localCheckpoint(true)` block
+    * otherwise stays pinned until its DataFrame is GC'd and the
+    * ContextCleaner notices — across hundreds of executions that
+    * accumulation turned a run into storage pressure and
+    * localCheckpoint/unpersist warning spew).
+    */
+  def release(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev-loop plan auditor: print the formatted physical plan and a timed
   * count for the named queries — the `.explain("formatted")` iteration
@@ -9,8 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = EngineSession.builder(cpus).getOrCreate()
+    val spark = EngineSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     args.tail.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

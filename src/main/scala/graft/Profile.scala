@@ -7,14 +7,13 @@ import org.apache.spark.sql.SparkSession
   * SparkListener capturing per-job wall time, inter-job driver gaps, and
   * per-stage task counts / summed task time — the decomposition that says
   * whether a key is stage-latency-bound, task-collapse-bound (1-2 tasks on
-  * 32 cores), or genuinely compute-bound. Dev tool only; never part of the
+  * many cores), or genuinely compute-bound. Dev tool only; never part of the
   * bench/verify contract. Usage: runMain graft.Profile <sfDir> <q> [q ...]
   */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = EngineSession.builder(cpus).getOrCreate()
+    val spark = EngineSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Tables.all.foreach(t => Tables(spark, sfDir, t).count())
     args.tail.foreach { name => profile(spark, sfDir, name) }
@@ -22,15 +21,11 @@ object Profile {
   }
 
   private def profile(spark: SparkSession, sfDir: String, name: String): Unit = {
-    def clear(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
     // warm run (JIT/codegen/page cache), not profiled
     val tw0 = System.nanoTime()
     SparkEntry.queries(name)(spark, sfDir).count()
     val warmSec = (System.nanoTime() - tw0) / 1e9
-    clear()
+    EngineSession.release(spark)
 
     case class Job(id: Int, var start: Long = 0L, var end: Long = 0L,
       var desc: String = "")
@@ -73,7 +68,7 @@ object Profile {
     val sec = (System.nanoTime() - t0) / 1e9
     Thread.sleep(300) // let the listener bus drain
     spark.sparkContext.removeSparkListener(listener)
-    clear()
+    EngineSession.release(spark)
 
     val js = jobs.values.toSeq.sortBy(_.start)
     val jobWall = js.map(j => (j.end - j.start).max(0L)).sum / 1e3

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,8 +8,7 @@ object Verify {
     // run (dev-loop convenience; the driver always passes just two args)
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = EngineSession.builder(cpus).getOrCreate()
+    val spark = EngineSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
@@ -21,12 +19,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // release cached frames + localCheckpoint blocks per query — the
-      // same storage-accumulation hygiene as Bench (197 queries of
-      // pinned checkpoint blocks otherwise ride the whole dump)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      EngineSession.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -472,7 +472,7 @@ object Aggregates {
     (s, dir) => {
       // byCores: the 1-task fixture scan otherwise serializes 600k md5
       // digests onto one core (profiled 1.7 s on 3 tasks); a wide
-      // production scan skips the repartition entirely (see Llm.Par)
+      // production scan skips the repartition entirely (see Par)
       val li = Par.byCores(
         Tables(s, dir, "lineitem").select(col("l_partkey").as("k")), col("k"))
       val sketch = cmUpdates(li)

@@ -192,14 +192,7 @@ object AnnIndex {
   private[graft] val IdxDirParts = 64
   private def withCellPart(df: DataFrame): DataFrame =
     df.withColumn("cell_part", pmod(col("cell"), lit(IdxDirParts)))
-      // Par.pin, not a column-only repartition: the keyless-count form is
-      // an AQE coalesce target, and the index rows are small in BYTES —
-      // profiled: ONE task wrote all 64 cell_part directories (0.6-0.8 s
-      // single-task write stages on build/update). The explicit-count pin
-      // keeps the write at core width; each cell_part still lands whole
-      // in exactly one task, so the one-file-per-directory layout is
-      // unchanged (the q_etl_zorder fix, applied to this family).
-      .transform(Par.pin(_, col("cell_part")))
+      .repartition(col("cell_part"))
 
   /** Build + persist, returning the on-disk path and the written
     * schema. The overwrite is STATIC (whole-path truncate, not
@@ -220,12 +213,7 @@ object AnnIndex {
     // rule; without the checkpoint the _cents write below re-runs the
     // whole corpus sample)
     val cents = Llm.ivfOccCentRows(s, dir).localCheckpoint(true)
-    // byCores on the vector scan: the routed election (graft_cells per
-    // vector against the broadcast quantizer) is the build's dominant CPU
-    // and otherwise inherits the 1-task fixture scan (profiled 0.8 s
-    // single-task); no-op on a wide production scan
-    val df = withCellPart(assignCells(
-      Par.byCores(Llm.vecs(s, dir), col("vec_id")), cents, Llm.EmbRouteSalt))
+    val df = withCellPart(assignCells(Llm.vecs(s, dir), cents, Llm.EmbRouteSalt))
     // invalidate-before-truncate: a crash between here and the marker
     // commit leaves NO marker, never one pointing at a half-written path
     java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(path + ".marker"))
@@ -401,11 +389,7 @@ object AnnIndex {
     // embedded in every assignment plan via the broadcast —
     // checkpointing sp and the 1-row cents frame leaves one corpus scan
     // for the split and one for the sample
-    // byCores BEFORE the checkpoint: the blocks materialize at core width,
-    // so both generations' routed elections (the update's dominant CPU)
-    // and the write exchanges' map sides all run parallel instead of
-    // inheriting the 1-task fixture scan
-    val sp = Par.byCores(updSplit(s, dir), col("vec_id")).localCheckpoint(true)
+    val sp = updSplit(s, dir).localCheckpoint(true)
     val cents = baseCentRows(sp).localCheckpoint(true)
     val base = withCellPart(assignCells(sp.filter(col("is_base")), cents, UpdRouteSalt)
       .withColumn("gen", lit("base")))
@@ -511,10 +495,8 @@ object AnnIndex {
       // is the re-pack, not a rebuild of its input
       val (upd, schema) = ensureUpdArtifact(s, dir)
       val cpath = indexPath(dir) + "_cmp"
-      // Par.pin for the same reason as withCellPart: the column-only
-      // repartition AQE-coalesced the re-pack write onto one task
-      val merged = Par.pin(s.read.schema(schema).parquet(upd)
-        .withColumn("gen", lit("base")), col("cell_part"))
+      val merged = s.read.schema(schema).parquet(upd)
+        .withColumn("gen", lit("base")).repartition(col("cell_part"))
       Partitioned.writeStatic(merged, cpath, 1 << 18, "cell_part")
       s.read.schema(schema).parquet(cpath)
         .groupBy("cell")

@@ -1260,9 +1260,9 @@ object Etl {
   private val qEtlZorder = Q(
     "q_etl_zorder",
     (s, dir) => {
-      // byCores: parallelizes the bit-interleave map AND the partitioned
-      // write (the 1-task fixture scan wrote all 64 zb directories from
-      // one task — 2.2 s of this key's 2.8 s); no-op on a wide scan
+      // byCores: parallelizes the bit-interleave map, which otherwise runs
+      // on the 1-task fixture scan (2.1 vs 2.8 s at sf0.1 on 4 cores);
+      // no-op on a wide scan
       val o = Par.byCores(Tables(s, dir, "orders"), col("o_orderkey"))
       val prm = o.agg(
         min("o_custkey").as("minc"), max("o_custkey").as("maxc"),
@@ -1283,11 +1283,9 @@ object Etl {
       val md = java.security.MessageDigest.getInstance("MD5")
       val h = md.digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
       val path = s"${System.getProperty("java.io.tmpdir")}/graft_zorder_$h"
-      // pin by zb before the partitioned write: each zb lands wholly in
-      // one task, so the layout stays one file per zb directory while 32
-      // tasks write in parallel instead of one task writing all 64
+      // each zb lands wholly in one task: one file per zb directory
       graft.sources.Partitioned.writeStatic(
-        Par.pin(z, col("zb")), path, 1 << 18, "zb")
+        z.repartition(col("zb")), path, 1 << 18, "zb")
       s.read.schema(z.schema).parquet(path)
         .groupBy("zb")
         .agg(count(lit(1)).as("n_rows"), sum("o_orderkey").as("key_sum"),

@@ -488,7 +488,7 @@ object Graph {
       .join(deg.select(col("n").as("b"), col("deg").as("db")), "b")
     val aLtB = col("da") < col("db") ||
       (col("da") === col("db") && col("a") < col("b"))
-    // NOT pinned: a Par.pin(src) here was tried (r14) and reverted — it
+    // NOT repartitioned: a repartition(src) was tried (r14) and reverted — it
     // forces the wedge join and the closing semi-join onto co-partitioned
     // SMJs, shuffling and sorting the full wedge stream that the planner
     // otherwise handles with broadcast joins over the small ori frame
@@ -733,7 +733,7 @@ object Graph {
         .join(deg.select(col("n").as("b"), col("deg").as("db")), "b")
       val aLtB = col("da") < col("db") ||
         (col("da") === col("db") && col("a") < col("b"))
-      // not pinned — see triCounts' ori note (the pin regressed the
+      // not repartitioned — see triCounts' ori note (that regressed the
       // wedge machinery by forcing SMJs over the wedge stream)
       val ori = ann.select(
           when(aLtB, col("a")).otherwise(col("b")).as("src"),

@@ -628,13 +628,7 @@ object Llm {
     val dfS = mat.groupBy("sh").agg(count(lit(1)).as("df"))
       .filter(col("df") <= ShingleDfCap)
     val tot = docs.agg(count(lit(1)).as("n_docs"))
-    // pin the sh join input: the join's OUTPUT partitioning is what the
-    // consumers checkpoint and then explode 16× through the ICWS scoring
-    // (md5+ln per row) — the AQE-coalesced 2-partition join output made
-    // that stage run 2 tasks / 5.6 s at sf0.1 (see [[Par]]); dfS's own
-    // groupBy already hash-partitions by sh at full width, so only the
-    // checkpointed mat side needs the explicit exchange
-    Par.pin(mat, col("sh")).join(dfS, "sh")
+    mat.join(dfS, "sh")
       .crossJoin(broadcast(tot))
       .withColumn("w", expr(idfUnits("df")))
       .select("doc_id", "sh", "w")
@@ -758,14 +752,7 @@ object Llm {
     // ratio only grows with corpus-scale duplication. The per-(k, sh)
     // values are identical IEEE doubles either way (same expressions on
     // the same inputs), so the per-doc argmin elects the same samples.
-    // Par.pin(sh) on the vocab: the distinct's own exchange is
-    // AQE-coalescible and the vocab is tiny in BYTES (27k rows) but the
-    // 16× explode + md5 chain above it is the heavy CPU — without the
-    // pin the whole scoring stage coalesced to ONE task (profiled
-    // 7.5 s). Pinned by sh (not the distinct's (sh, w) key) so
-    // EnsureRequirements keeps it, and the sh-keyed join below reuses
-    // the partitioning.
-    val vocabScored = Par.pin(shw.select("sh", "w").distinct(), col("sh"))
+    val vocabScored = shw.select("sh", "w").distinct()
       .withColumn("k", explode(expr(s"sequence(0, ${WcwsK - 1})")))
       .withColumn("hg", expr(
         "graft_md5w32(concat('wcg_', CAST(k AS STRING), '_', CAST(sh AS STRING)))"))
@@ -1162,7 +1149,7 @@ object Llm {
       // and joined two d-double arrays back onto every pair (13.3 s of
       // the sf1.0 rehearsal). cos is a deterministic pair function, so
       // dedup-after-filter is result-identical.
-      val withVec = lshBuckets(s, dir, margins = false, pinned = true)
+      val withVec = lshBuckets(s, dir, margins = false)
         .join(vecs(s, dir).select("vec_id", "v", "nrm"), "vec_id")
       val a = withVec.select(col("vec_id").as("d1"), col("band"), col("sig"),
         col("v").as("qv"), col("nrm").as("qn"))
@@ -1410,26 +1397,20 @@ object Llm {
     lshBuckets(s, dir)
 
   private def lshBuckets(s: SparkSession, dir: String,
-      margins: Boolean = true, pinned: Boolean = false): DataFrame = {
-    // byCores: the per-vector plane dots + sig/margin math otherwise
-    // inherit the 1-task fixture scan (see [[Par]]); no-op on a wide scan
+      margins: Boolean = true): DataFrame = {
+    // Neither branch repartitions the 1-task fixture scan. On the
+    // native-sketch branch the added exchange cost its consumers more than
+    // the parallelism bought (q_dedup_embed 2.35-2.38 -> 1.93-2.22 s,
+    // q_sim_ann_lsh 2.74-2.75 -> 2.19-2.75 s at sf0.1); on the margins
+    // branch q_sim_ann_lsh_probed measured the same either way. Every
+    // consumer's next op re-keys by (band, sig) off the dropHotKeys
+    // checkpoint.
     val buckets =
-      // consumer-gated parallelism repair (judge r13 #1): the margins=true
-      // (multi-probe) branch keeps Par.byCores — its per-row work is the
-      // full ds/|margin|/argmin HOF chain and profiles showed the 1-task
-      // fixture scan serializing it. The native-sketch branch does NOT
-      // repartition: its map is one primitive pass per row, and the added
-      // exchange measurably cost its consumers more than the parallelism
-      // bought (q_dedup_embed 2.35-2.38 -> 1.93-2.22 s, q_sim_ann_lsh
-      // 2.74-2.75 -> 2.19-2.75 s, reproduced A/B at sf0.1) — the r13
-      // q_dedup_embed regression was exactly this exchange. Downstream
-      // parallelism is unaffected: every consumer's next op re-keys by
-      // (band, sig) off the dropHotKeys checkpoint.
       if (!margins)
         vecs(s, dir).crossJoin(broadcast(lshPlanes(s, dir))).select(col("vec_id"),
             posexplode(expr("graft_sketch(v, pl, rb)")).as(Seq("b", "sig")))
           .select(col("vec_id"), col("b").cast("long").as("band"), col("sig"))
-      else Par.byCores(vecs(s, dir), col("vec_id"))
+      else vecs(s, dir)
         .crossJoin(broadcast(lshPlanes(s, dir)))
         .select(col("vec_id"), explode(expr(
           s"""transform(sequence(0, $LshBands - 1), b -> named_struct(
@@ -1458,24 +1439,7 @@ object Llm {
     // pathological-skew guard (see SignBucketCap): an over-cap sign
     // bucket is a mega-cluster of (near-)identical vectors; its
     // members keep their other 7 bands' candidates
-    val bk = dropHotKeys(buckets, Seq("band", "sig"), SignBucketCap)
-    // `pinned` is the consumer gate for the (band, sig) parallelism pin:
-    // the exact-probe FOLD consumer scores every raw match's cosine in
-    // the (band, sig) self-join stage — CPU-heavy, byte-light, the AQE
-    // byte-coalescing trap (measured 1 task / 2.7 s of a 3.5 s key at
-    // sf0.1 without it). The checkpoint BELOW the pin is load-bearing:
-    // it reads back as UnknownPartitioning, so the REPARTITION_BY_NUM
-    // survives physical planning — pinned directly over the anti-join
-    // (whose ENSURE exchange already provides this partitioning through
-    // the downstream broadcast joins) the pin is deleted as redundant by
-    // EnsureRequirements.optimizeOutRepartition and the scoring stage
-    // still collapses to one task. The skinny candidate-pair consumers
-    // (q_dedup_embed, lshCandidates) skip both extra steps.
-    // pinWide ×8, not pin: the (band, sig) key universe is 8 bands × 2^rb
-    // values — cores-width hashing collides heavy buckets (see
-    // lshTopkScreened's pin rationale; same profile shape here)
-    if (pinned) Par.pinWide(bk.localCheckpoint(true), 8, col("band"), col("sig"))
-    else bk
+    dropHotKeys(buckets, Seq("band", "sig"), SignBucketCap)
   }
 
   /** One row holding the [[LshSketchWords]]·[[LshSketchBits]] dedicated
@@ -1652,7 +1616,7 @@ object Llm {
     * so no mirror step exists either.
     */
   private def lshTopkFold(s: SparkSession, dir: String): DataFrame = {
-    val withVec = lshBuckets(s, dir, margins = false, pinned = true)
+    val withVec = lshBuckets(s, dir, margins = false)
       .join(vecs(s, dir).select("vec_id", "v", "nrm"), "vec_id")
     val q = withVec.select(col("vec_id").as("d1"), col("band"), col("sig"),
       col("v").as("qv"), col("nrm").as("qn"))
@@ -1660,11 +1624,7 @@ object Llm {
       col("v").as("nv"), col("nrm").as("nn"))
     // cosine is symmetric: score each raw match ONCE under d1 < d2 (half
     // the dot products), then mirror the SKINNY scored row to both
-    // directions in the same stage before the per-query fold. The
-    // parallelism of this scoring join comes from the pinKeys pin inside
-    // lshBuckets' dropHotKeys (see there for why a Par.pin HERE would be
-    // optimized out as redundant with the anti-join's coalescible
-    // exchange and the stage would still collapse to one task).
+    // directions in the same stage before the per-query fold.
     val scored = q.join(nn, Seq("band", "sig"))
       .filter(col("d1") < col("d2"))
       .withColumn("cos", cosCol)
@@ -1716,15 +1676,8 @@ object Llm {
     val negham = expr((0 until LshSketchWords)
       .map(w => s"bit_count(a.k$w ^ b.k$w)")
       .mkString("CAST(-(", " + ", ") AS DOUBLE)"))
-    // pin the (band, sig) exchange: the join stage runs the 17-word
-    // bit_count hamming over every raw match — CPU-heavy, byte-light, the
-    // AQE-coalescing trap (profiled 4 stages / 10 tasks / 5.1 s here).
-    // pinWide ×8: the bucket-key universe is only 8 bands × 2^rb values
-    // (64 at sf0.1), so a cores-width hash partitioning collides several
-    // heavy buckets onto one task (profiled maxTask 8.9 s vs 1.6 s mean);
-    // at 8× width every bucket lands alone and the stage levels out
-    val raw = Par.pinWide(probes, 8, col("band"), col("sig")).as("a")
-      .join(Par.pinWide(build, 8, col("band"), col("sig")).as("b"),
+    val raw = probes.as("a")
+      .join(build.as("b"),
         col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
           col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("d1"), col("b.vec_id").as("d2"),

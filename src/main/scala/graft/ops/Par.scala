@@ -2,71 +2,32 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 
-/** Parallelism repair for CPU-amplifying stages (optimization guide §2.5:
-  * "size CPU-bound stages by cores, not by input bytes" — the
-  * shinglesRawFrom discipline, centralized).
-  *
-  * Two local-vs-scale facts motivate it, both measured this round:
-  *  - every driver fixture is ONE single-row-group parquet file, so every
-  *    scan is one task regardless of maxPartitionBytes — md5/sketch/dot
-  *    map work inherits parallelism 1 of 32 cores;
-  *  - AQE's byte-based partition coalescing collapses the exchanges
-  *    feeding compute-heavy joins (sign-sketch hamming, cell cosines,
-  *    ICWS scoring) to 1-2 tasks, because their inputs are small in BYTES
-  *    while the join/aggregate stage they feed is large in CPU. Profiled
-  *    examples at sf0.1: the LSH-probed hamming join ran 4 stages on 10
-  *    tasks total (5.1 s of a 6.3 s query), the ICWS scoring stage ran 2
-  *    tasks (4.4 s of 6.2 s).
-  *
-  * `pin` replaces a planner exchange the join needed anyway with a
-  * user-specified one (REPARTITION_BY_NUM is exempt from AQE coalescing),
-  * so it costs no extra shuffle at any scale. `byCores` guards the
-  * scan-rooted case: it repartitions only when the frame's static
-  * partitioning is below core count — a real cluster's wide scan is left
-  * untouched, so no shuffle is added at scale.
+/** Map-side parallelism for scan-rooted frames. Every fixture table is
+  * ONE single-row-group parquet file, so every scan is one task whatever
+  * maxPartitionBytes says, and CPU-heavy map work over it (md5 digests,
+  * sketch and dot products) runs on one core up to the first exchange.
+  * Stages AFTER an exchange need nothing here: [[graft.EngineSession]]'s
+  * AQE partition-size floor keeps byte-light exchanges at core width.
   */
 private[graft] object Par {
 
-  /** Partition count for pinned exchanges: every core, and never below
-    * the session's configured shuffle width.
+  /** Hash repartition to core width (never below the session's shuffle
+    * width), only when the frame is narrower than the core count — a
+    * production-scale scan is already wide and is left alone. The
+    * explicit count (REPARTITION_BY_NUM) is exempt from AQE coalescing.
+    *
+    * Contract: `df` must be SCAN-ROOTED (no exchange below it). The width
+    * check reads `df.rdd`, which is free over a file scan but, on a frame
+    * holding an exchange, runs the upstream query stages as jobs at
+    * query-build time.
     */
-  def parts(df: DataFrame): Int = {
-    val s = df.sparkSession
-    val conf = scala.util.Try(
-      s.conf.get("spark.sql.shuffle.partitions").toInt).getOrElse(0)
-    math.max(s.sparkContext.defaultParallelism, conf)
+  def byCores(df: DataFrame, cols: Column*): DataFrame = {
+    val cores = df.sparkSession.sparkContext.defaultParallelism
+    if (df.rdd.getNumPartitions >= cores) df
+    else {
+      val shuffle = scala.util.Try(
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt).getOrElse(0)
+      df.repartition(math.max(cores, shuffle), cols: _*)
+    }
   }
-
-  /** Cores-sized hash repartition with an EXPLICIT partition count — the
-    * one shuffle shape AQE never coalesces. Use on the inputs of a join
-    * or aggregation whose per-row work (not byte volume) is the cost.
-    */
-  def pin(df: DataFrame, cols: Column*): DataFrame =
-    df.repartition(parts(df), cols: _*)
-
-  /** [[pin]] at `factor`× the core width — for joins whose key universe
-    * is SMALL relative to the core count (guide §2.5: a hash partitioning
-    * needs many more distinct key values than partitions, or balls-in-
-    * bins collisions leave some tasks with several heavy keys and others
-    * idle). The LSH scoring joins key by (band, sig): 8 bands × 2^rb
-    * signatures ≈ 64 buckets at sf0.1, hashed into 32 partitions — the
-    * profiled hamming stage ran maxTask 8.9 s against a 1.6 s mean from
-    * exactly that collision. factor× partitions give every bucket its
-    * own task; the bucket count grows with the corpus (rb tracks
-    * log2(n)), so the finer width stays key-dominated at every scale.
-    * Both join sides must pin through the SAME width so the join stays
-    * co-partitioned with no extra exchange.
-    */
-  def pinWide(df: DataFrame, factor: Int, cols: Column*): DataFrame =
-    df.repartition(parts(df) * factor, cols: _*)
-
-  /** [[pin]] only when the frame's current partitioning is narrower than
-    * the core count — for scan-rooted frames (a local single-file fixture
-    * scan is 1 partition; a production-scale scan is already wide and is
-    * left alone, costing nothing).
-    */
-  def byCores(df: DataFrame, cols: Column*): DataFrame =
-    if (df.rdd.getNumPartitions >=
-        df.sparkSession.sparkContext.defaultParallelism) df
-    else pin(df, cols: _*)
 }

@@ -248,14 +248,7 @@ object Windows {
         .groupBy("supp", "day").agg(sum("delta").as("delta"))
       val wRun = Window.partitionBy("supp").orderBy("day")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      // Par.pin replaces the supp exchange the window needs anyway (the
-      // running-sum, peak and final agg all reuse it): the ENSURE form is
-      // AQE-coalescible and the post-agg delta frame is byte-light, so
-      // the sweep's whole window chain ran 6 tasks with one 0.7 s
-      // straggler at sf0.1; pinned it runs at core width. The boundary
-      // pre-aggregation above keeps its own (supp, day) exchange — that
-      // one is the map-side-combine shuffle that bounds bytes at scale.
-      Par.pin(deltas, col("supp")).withColumn("conc", sum("delta").over(wRun))
+      deltas.withColumn("conc", sum("delta").over(wRun))
         .withColumn("peak", max("conc").over(Window.partitionBy("supp")))
         .filter(col("conc") === col("peak"))
         .groupBy("supp")

@@ -39,11 +39,11 @@ object Pipeline {
   /** File-source replay of `events.parquet` as the stream (no Kinesis
     * connector offline; each arriving file = one micro-batch). The file
     * source needs a directory, and the fixture is a single parquet file,
-    * so stage a hard link into a temp dir.
+    * so copy it into a temp dir. The session gets the engine confs first
+    * ([[graft.EngineSession.tune]]), as a batch read through `Tables` would.
     */
   def fileReplay(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    graft.EngineSession.tune(spark)
     val src = java.nio.file.Paths.get(s"$sfDir/events.parquet")
     val dir = java.nio.file.Files.createTempDirectory("events-replay")
     java.nio.file.Files.copy(src, dir.resolve("events.parquet"))
@@ -295,9 +295,11 @@ object Pipeline {
 
   /** Full reference pipeline as a streaming writer: route → per-partition
     * batch → deliver-with-retry → delivered/DLQ parquet dirs per route
-    * (§0.1 steps 4–6). `failEvery` injects a deterministic per-record
-    * failure on first attempt for records with event_id % failEvery == 0
-    * (succeeds on retry), emulating partial PutRecordBatch failures.
+    * (§0.1 steps 4–6). `failEvery` = k > 0 injects deterministic partial
+    * PutRecordBatch failures (see [[FirehoseSink]]): records with
+    * event_id % (10k) == 0 fail every attempt and go to the DLQ; the other
+    * event_id % k == 0 records fail only their first attempt and are
+    * delivered on retry.
     */
   def firehose(events: DataFrame, outDir: String, failEvery: Long = 0L): DataStreamWriter[Row] =
     route(events).writeStream

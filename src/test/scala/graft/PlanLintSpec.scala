@@ -291,6 +291,23 @@ class PlanLintSpec extends SparkSpec {
     }
   }
 
+  test("a byte-light exchange keeps core width under EngineSession.tune") {
+    // AQE coalesces toward max(shuffleBytes / cores, minPartitionSize); at
+    // Spark's 1 MiB default this ~100 KB shuffle collapses to ONE
+    // post-shuffle task however heavy the stage it feeds
+    val minSize = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    def postShuffleTasks(s: org.apache.spark.sql.SparkSession): Int = {
+      val df = s.range(0, 400000, 1, 4).groupBy(col("id") % 1000).count()
+      df.collect()
+      df.queryExecution.executedPlan.execute().getNumPartitions
+    }
+    val s = spark.newSession()
+    s.conf.unset(minSize)
+    assert(postShuffleTasks(s) == 1)
+    EngineSession.tune(s)
+    assert(postShuffleTasks(s) > 1)
+  }
+
   test("ANN candidate generation is a bucket equi-join, never a pair scan") {
     // the scale claim of the ANN family: candidates come from an
     // equi-join on (band, sig) / cell — a CartesianProduct over the

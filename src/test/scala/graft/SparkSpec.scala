@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all specs; mirrors the driver's Verify config
-  * (UTC, small shuffle partition count).
+/** Shared local session for all specs: the harness mains' engine session
+  * ([[EngineSession.builder]]) at 4 cores, plus a throwaway warehouse dir.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
@@ -14,13 +14,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new functions.GraftExtensions)
+    val s = EngineSession.builder("4")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .getOrCreate()
