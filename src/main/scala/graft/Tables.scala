@@ -71,6 +71,37 @@ object Tables {
       spark.read.parquet(s"$sfDir/$name.parquet"))
   }
 
+  /** The fixture scan of `name`, spread over the cores by a hash
+    * repartition on `key` when it is narrower than them.
+    *
+    * Every fixture is ONE single-row-group parquet file, and a row group
+    * is the unit of a parquet split, so the scan is one task whatever
+    * maxPartitionBytes says: CPU-heavy map work over it (explodes, md5
+    * digests, sketch and dot products) would run on one core up to the
+    * first exchange. The repartition count is explicit,
+    * `max(cores, spark.sql.shuffle.partitions)`: a REPARTITION_BY_NUM
+    * exchange is exempt from AQE coalescing. Downstream windows and
+    * aggregations on `key` reuse its hash distribution. A scan that is
+    * already at least core-wide (a production table of many files or
+    * row groups) is returned as is.
+    *
+    * Memoized beside the scan, so the width check (planning the scan's
+    * RDD, free for a file scan) runs once per session and fixture
+    * fingerprint.
+    */
+  def spread(spark: SparkSession, sfDir: String, name: String, key: String): DataFrame = {
+    val scan = apply(spark, sfDir, name) // also initializes the session map
+    val perSession =
+      metaCache(org.apache.spark.sql.graftnative.SessionUid.of(spark))
+    perSession.getOrElseUpdate(
+      (sfDir, s"$name+spread:$key", ops.AnnIndex.fingerprint(sfDir, s"$name.parquet")), {
+        val cores = spark.sparkContext.defaultParallelism
+        if (scan.rdd.getNumPartitions >= cores) scan
+        else scan.repartition(
+          math.max(cores, spark.conf.get("spark.sql.shuffle.partitions").toInt), col(key))
+      })
+  }
+
   /** Epoch-microseconds bridge for an `events.ts` column of ANY of the
     * physical types the fixtures have shipped with. Canonical value:
     * DuckDB `epoch_us(ts)` equals this exactly at µs precision.

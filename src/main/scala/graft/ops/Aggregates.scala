@@ -470,11 +470,10 @@ object Aggregates {
   private val qAggCountmin = Q(
     "q_agg_countmin",
     (s, dir) => {
-      // byCores: the 1-task fixture scan otherwise serializes 600k md5
-      // digests onto one core (profiled 1.7 s on 3 tasks); a wide
-      // production scan skips the repartition entirely (see Par)
-      val li = Par.byCores(
-        Tables(s, dir, "lineitem").select(col("l_partkey").as("k")), col("k"))
+      // spread: 600k md5 digests; the l_partkey distribution carries
+      // through the alias to the exact count's groupBy("k")
+      val li = Tables.spread(s, dir, "lineitem", "l_partkey")
+        .select(col("l_partkey").as("k"))
       val sketch = cmUpdates(li)
         .groupBy("r", "cell")
         .agg(count(lit(1)).as("c"))

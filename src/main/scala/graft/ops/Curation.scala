@@ -92,7 +92,7 @@ object Curation {
 
   private val qDecontaminate = Q(
     "q_decontaminate",
-    (s, dir) => decontaminateFrom(Tables(s, dir, "documents")),
+    (s, dir) => decontaminateFrom(Tables.spread(s, dir, "documents", "doc_id")),
     Some(s"""WITH ${Llm.shinglesSql},
             shc AS (SELECT doc_id, s FROM (
                       SELECT doc_id, s, COUNT(*) OVER (PARTITION BY s) AS df FROM sh)
@@ -1248,8 +1248,7 @@ object Curation {
   private val qSampleRho = Q(
     "q_sample_rho",
     (s, dir) => {
-      val tk = Tables(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+      val tk = Tables.spread(s, dir, "documents", "doc_id")
         .select(col("doc_id"), col("source"),
           explode(split(col("text"), " ")).as("w"))
         .filter(length(col("w")) >= 1)
@@ -1491,8 +1490,6 @@ object Curation {
     (s, dir) => {
       val docs = Tables(s, dir, "documents")
       val t = docs
-        // single-file scan — fan out before the explode (vocab_prune idiom)
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
         .select(col("source"), explode(split(col("text"), " ")).as("w"))
         .filter(length(col("w")) >= 1)
       val v = t.groupBy("w").agg(count(lit(1)).as("c"))
@@ -1684,7 +1681,6 @@ object Curation {
     "q_mix_kl",
     (s, dir) => {
       val ex = Tables(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
         .select(col("source"), explode(split(col("text"), " ")).as("w"))
       val sw = ex.groupBy("source", "w").agg(count(lit(1)).as("c_sw"))
         .localCheckpoint(true) // feeds n_s, the term join, and the census

@@ -1260,10 +1260,8 @@ object Etl {
   private val qEtlZorder = Q(
     "q_etl_zorder",
     (s, dir) => {
-      // byCores: parallelizes the bit-interleave map, which otherwise runs
-      // on the 1-task fixture scan (2.1 vs 2.8 s at sf0.1 on 4 cores);
-      // no-op on a wide scan
-      val o = Par.byCores(Tables(s, dir, "orders"), col("o_orderkey"))
+      // spread: parallelizes the bit-interleave map
+      val o = Tables.spread(s, dir, "orders", "o_orderkey")
       val prm = o.agg(
         min("o_custkey").as("minc"), max("o_custkey").as("maxc"),
         min(to_date(col("o_orderdate"))).as("mind"),

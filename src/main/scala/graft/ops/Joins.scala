@@ -600,12 +600,10 @@ object Joins {
         val p = s"pmod(element_at(sl, ${h + 1}), $BloomBits)"
         s"(coalesce(element_at(bm, $p div 64), 0L) & shiftleft(1L, CAST(pmod($p, 64) AS INT))) <> 0L"
       }.mkString(" AND ")
-      // Par.byCores: the per-fact-row md5 digest + 3-probe bit test is
-      // the key's dominant CPU and otherwise inherits the near-single-
-      // task fixture scan (profiled 1.14 s wall with maxTask 1.13 s of
-      // a 1.6 s key at sf0.1); no-op on a wide production scan
-      Par.byCores(Tables(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_quantity")), col("l_orderkey"))
+      // spread: the per-fact-row md5 digest + 3-probe bit test is the
+      // key's dominant CPU
+      Tables.spread(s, dir, "lineitem", "l_orderkey")
+        .select(col("l_orderkey"), col("l_quantity"))
         .withColumn("sl", expr("graft_md5w32(concat('bf_', CAST(l_orderkey AS STRING)))"))
         .crossJoin(broadcast(bm))
         .filter(expr(hit)) // the prune: drops non-matching fact rows pre-shuffle

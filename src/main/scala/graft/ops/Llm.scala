@@ -172,19 +172,11 @@ object Llm {
     * compares the two queries' pair sets). Hashing BEFORE any aggregation
     * means every downstream shuffle — distinct, self-join, counts — moves
     * 8 fixed bytes per shingle instead of a ~25-byte string, and join
-    * comparisons are long equality.
+    * comparisons are long equality. The shingle explode is the family's
+    * dominant CPU: callers pass a [[Tables.spread]] documents scan.
     */
   private[graft] def shinglesRawFrom(docs: DataFrame): DataFrame =
     docs
-      // The documents table is one skinny parquet file at every local SF,
-      // so the scan is a single partition; without this repartition ALL
-      // shingle/trigram CPU work (the dominant cost) runs on one core.
-      // The partition count is EXPLICIT: a column-only repartition is an
-      // AQE coalesce target, and 0.6 MB of input coalesces right back to
-      // one partition — AQE sizes by bytes, but exploding shingles is
-      // CPU-bound per byte. Same rule at 100 TB: size CPU-amplifying
-      // stages by cores, not by input bytes.
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
       .withColumn("t", split(col("text"), " "))
       .filter(size(col("t")) >= 3)
       .select(col("doc_id"), explode(expr(
@@ -193,7 +185,7 @@ object Llm {
       .select(col("doc_id"), xxhash64(col("sh_str")).as("sh"))
 
   private def shinglesRaw(s: SparkSession, dir: String): DataFrame =
-    shinglesRawFrom(Tables(s, dir, "documents"))
+    shinglesRawFrom(Tables.spread(s, dir, "documents", "doc_id"))
 
   private def shingles(s: SparkSession, dir: String): DataFrame =
     shinglesRaw(s, dir).distinct()
@@ -364,7 +356,11 @@ object Llm {
     * same order.
     */
   private[ops] def vecs(s: SparkSession, dir: String): DataFrame =
-    Tables(s, dir, "embeddings")
+    vecsOf(Tables(s, dir, "embeddings"))
+
+  /** [[vecs]] over a given embeddings scan (e.g. a [[Tables.spread]] one). */
+  private def vecsOf(embeddings: DataFrame): DataFrame =
+    embeddings
       .select(col("vec_id"), col("label").cast("long").as("label"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
       .withColumn("nrm", sqrt(graft.functions.graft_dot(col("v"), col("v"))))
@@ -683,7 +679,7 @@ object Llm {
   private val qDedupWeighted = Q(
     "q_dedup_weighted",
     (s, dir) =>
-      weightedPairsFrom(Tables(s, dir, "documents"))
+      weightedPairsFrom(Tables.spread(s, dir, "documents", "doc_id"))
         .filter(col("wjac_bp") >= 1000)
         .select("d1", "d2", "inter_w", "w1", "w2", "wjac_bp")
         .orderBy("d1", "d2"),
@@ -793,7 +789,8 @@ object Llm {
     (s, dir) => {
       // computed inline per run (see weightedPairsOf's doc); the one
       // checkpoint is shared by the sketch AND both verify sides
-      val shw = idfShingleFrame(Tables(s, dir, "documents")).localCheckpoint(true)
+      val shw = idfShingleFrame(Tables.spread(s, dir, "documents", "doc_id"))
+        .localCheckpoint(true)
       val wDoc = shw.groupBy("doc_id").agg(sum("w").as("wdoc"))
       wcwsCandidatesFrom(shw)
         .join(shw.select(col("doc_id").as("d1"), col("sh"), col("w")), Seq("d1"))
@@ -839,7 +836,11 @@ object Llm {
           s"pmod(${md5Hex32Spark("concat('dde_', CAST(doc_id AS STRING))")}, $DedupEvalMod) = 0"))
         .select((-col("doc_id") - 1).as("doc_id"),
           expr("concat_ws(' ', filter(split(text, ' '), (x, i) -> (i + 1) % 7 != 0))").as("text"))
-      val corpus = docs.unionByName(planted)
+      // only the original docs are spread: the planted 1/DedupEvalMod
+      // share shingles on its own scan task, and n_planted stays a count
+      // over the plain scan
+      val corpus = Tables.spread(s, dir, "documents", "doc_id")
+        .select(col("doc_id"), col("text")).unionByName(planted)
       val pairs = jaccardPairsFrom(shinglesRawFrom(corpus).distinct())
         .filter(col("jac") >= 0.1)
         .select("d1", "d2")
@@ -992,10 +993,7 @@ object Llm {
         .as("simhash"))
 
   private def simhashSigs(s: SparkSession, dir: String): DataFrame = {
-    val tok = Tables(s, dir, "documents")
-      // explicit count — see shingles(): AQE would coalesce a
-      // column-only repartition of 0.6 MB back to one partition
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+    val tok = Tables.spread(s, dir, "documents", "doc_id")
       .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
       .withColumn("h", md5(col("tok").cast("binary")))
     simhash64Over(tok.select("doc_id", "h"), Seq("doc_id"))
@@ -1096,7 +1094,6 @@ object Llm {
     (s, dir) => {
       val d = dropHotKeys(
         Tables(s, dir, "documents")
-          .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
           .select(col("doc_id"), expr(
             "substring(trim(regexp_replace(regexp_replace(lower(substring(text, 1, 96)), " +
               "'[^a-z0-9 ]', ' '), ' +', ' ')), 1, 64)").as("norm"))
@@ -1468,8 +1465,8 @@ object Llm {
     * so the per-match hamming is a codegen'd bit_count chain.
     */
   private def lshSketch(s: SparkSession, dir: String): DataFrame =
-    // byCores: 1020 plane dots per vector — the suite's heaviest map
-    Par.byCores(vecs(s, dir), col("vec_id"))
+    // spread: 1020 plane dots per vector — the suite's heaviest map
+    vecsOf(Tables.spread(s, dir, "embeddings", "vec_id"))
       .crossJoin(broadcast(lshSketchPlanes(s, dir)))
       .select(col("vec_id"),
         expr(s"graft_sketch(v, kpl, $LshSketchBits)").as("ks"))
@@ -3295,12 +3292,9 @@ object Llm {
   private val qSimPq = Q(
     "q_sim_pq",
     (s, dir) => {
-      // byCores (consumer-gated): the per-vector cell assignment + PQ
-      // residual encode below is the key's dominant CPU and otherwise
-      // runs on the 1-task fixture scan into the checkpoint (profiled
-      // 0.64 s + 0.31 s single-task stages of a 1.9 s key at sf0.1);
-      // no-op on a wide production scan
-      val e = Par.byCores(vecs(s, dir), col("vec_id"))
+      // spread: the per-vector cell assignment + PQ residual encode
+      // below is the key's dominant CPU
+      val e = vecsOf(Tables.spread(s, dir, "embeddings", "vec_id"))
       val probed = e.crossJoin(broadcast(ivfCentArr(s, dir)))
         .filter(expr("size(cents) > 0"))
         .withColumn("pc", expr(cellsSpark(s"$IvfProbes")))
@@ -3550,8 +3544,6 @@ object Llm {
     "q_text_tokens",
     (s, dir) => {
       Tables(s, dir, "documents")
-        // single-file scan — fan out before the explode (see shingles())
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
         .select(explode(split(col("text"), " ")).as("term"))
         .groupBy("term").agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("term"))
@@ -3581,7 +3573,6 @@ object Llm {
     "q_text_vocab_prune",
     (s, dir) => {
       val vocab = Tables(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
         .select(explode(split(col("text"), " ")).as("term"))
         .groupBy("term").agg(count(lit(1)).as("n"))
         .localCheckpoint(true) // two consumers: totals census + top-K frame
@@ -3639,7 +3630,6 @@ object Llm {
     "q_text_commonness",
     (s, dir) => {
       val tok = Tables(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
         .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
         .localCheckpoint(true) // three consumers: unigram LM, total, scoring
       val tot = tok.agg(count(lit(1)).as("n"))
@@ -3687,7 +3677,6 @@ object Llm {
     "q_text_entropy",
     (s, dir) => {
       val c = Tables(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
         .select(col("source"), explode(split(col("text"), " ")).as("w"))
         .filter(length(col("w")) >= 1)
         .groupBy("source", "w").agg(count(lit(1)).as("c"))
@@ -3781,7 +3770,6 @@ object Llm {
         .groupBy("k")
         .agg(count(lit(1)).as("n_docs"), sum("ntok").as("n_tok"))
       val firstOcc = Tables(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
         .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
         .groupBy("term").agg(min("doc_id").as("fd"))
       val vstats = firstOcc.crossJoin(broadcast(rng))
@@ -3816,7 +3804,6 @@ object Llm {
     "q_text_zipf",
     (s, dir) => {
       val v = Tables(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
         .select(explode(split(col("text"), " ")).as("w"))
         .filter(length(col("w")) >= 1)
         .groupBy("w").agg(count(lit(1)).as("c"))
@@ -3881,8 +3868,7 @@ object Llm {
   private val qTextHeavyHitters = Q(
     "q_text_heavy_hitters",
     (s, dir) => {
-      val tok = Tables(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+      val tok = Tables.spread(s, dir, "documents", "doc_id")
         .select(explode(split(col("text"), " ")).as("term"))
         .localCheckpoint(true) // three consumers: sketch, total, verify join
       val mg = udaf(new graft.udf.MisraGries(HeavyK), org.apache.spark.sql.Encoders.STRING)
@@ -4657,10 +4643,8 @@ object Llm {
       // Per-lang top-5 terms by tf-idf: tf = term count within the lang,
       // idf = ln(N_docs / docs containing the term). Two aggregations +
       // one term equi-join — no per-doc pair space.
-      val ex = Tables(s, dir, "documents")
-        // single-file scan — fan out before the explode (see shingles());
-        // both consumers (tf and df) share the exchange
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+      // both consumers (tf and df) share the spread scan's exchange
+      val ex = Tables.spread(s, dir, "documents", "doc_id")
         .select(col("doc_id"), col("lang"), explode(split(col("text"), " ")).as("term"))
       val nDocs = Tables(s, dir, "documents").agg(count(lit(1)).as("n_docs"))
       val df = ex.groupBy("term").agg(countDistinct(col("doc_id")).as("df"))
@@ -4741,10 +4725,8 @@ object Llm {
 
   /** The un-persisted spelling of the BM25 arm (plan-auditable). */
   private[graft] def bm25RankedInline(s: SparkSession, dir: String): DataFrame = {
-    val ex = Tables(s, dir, "documents")
-      // single-file scan — fan out before the explode (see shingles());
-      // all three stat consumers share the exchange
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+    // all three stat consumers share the spread scan's exchange
+    val ex = Tables.spread(s, dir, "documents", "doc_id")
       .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
       .filter(length(col("tok")) >= 1)
     val tf = ex.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
@@ -4881,8 +4863,7 @@ object Llm {
   private val qTextCollocations = Q(
     "q_text_collocations",
     (s, dir) => {
-      val toks = Tables(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+      val toks = Tables.spread(s, dir, "documents", "doc_id")
         .select(col("doc_id"), split(col("text"), " ").as("t"))
         .localCheckpoint(true) // two consumers: unigram + bigram explodes
       val uni = toks.select(explode(col("t")).as("tok"))
@@ -4942,8 +4923,7 @@ object Llm {
   private val qTextKeywords = Q(
     "q_text_keywords",
     (s, dir) => {
-      val ex = Tables(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+      val ex = Tables.spread(s, dir, "documents", "doc_id")
         .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
       val nDocs = Tables(s, dir, "documents").agg(count(lit(1)).as("n_docs"))
       val dfq = ex.groupBy("term").agg(countDistinct(col("doc_id")).as("df"))
@@ -5041,14 +5021,10 @@ object Llm {
         """CASE WHEN length(text) >= 3
            THEN array_distinct(transform(sequence(1, length(text) - 2), i -> substr(text, i, 3)))
            ELSE CAST(array() AS ARRAY<STRING>) END"""
-      // repartition ONCE before both consumers: the single-file scan is one
-      // partition, and trigram generation (substr × length(text) per doc +
-      // array_distinct) is the query's dominant CPU cost — serial without
-      // this. The count is explicit so AQE does not coalesce the tiny
-      // byte volume back to one partition; hash(doc_id) is what the
-      // scoring window needs downstream.
-      val docs = Tables(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+      // spread ONCE before both consumers: trigram generation (substr ×
+      // length(text) per doc + array_distinct) is the query's dominant
+      // CPU cost, and hash(doc_id) is what the scoring window needs
+      val docs = Tables.spread(s, dir, "documents", "doc_id")
       val tri = docs.select(col("doc_id"), col("lang"),
         explode(expr(triExpr)).as("g"))
       val wProf = Window.partitionBy("p_lang").orderBy(col("f").desc, col("g"))
@@ -5467,11 +5443,8 @@ object Llm {
   private val qDedupNgramSpan = Q(
     "q_dedup_ngram_span",
     (s, dir) => {
-      // byCores: the span explode + concat_ws is the key's dominant CPU
-      // and otherwise runs on the 1-task fixture scan (profiled 0.69 s
-      // single-task of a 1.09 s query); no-op on a wide production scan
-      val g = Par.byCores(Tables(s, dir, "documents")
-          .select(col("doc_id"), col("text")), col("doc_id"))
+      // spread: the span explode + concat_ws is the key's dominant CPU
+      val g = Tables.spread(s, dir, "documents", "doc_id")
         .select(col("doc_id"), split(col("text"), " ").as("toks"))
         .filter(size(col("toks")) >= 8)
         .select(col("doc_id"), explode(expr(
@@ -6023,7 +5996,6 @@ object Llm {
     */
   private def pcaCells(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "embeddings")
-      .repartition(s.sparkContext.defaultParallelism, col("vec_id"))
       .select(col("vec_id"), posexplode(expr(
         "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT))"))
         .as(Seq("dim", "xq")))
@@ -6173,8 +6145,7 @@ object Llm {
   private val qTextLmBackoff = Q(
     "q_text_lm_backoff",
     (s, dir) => {
-      val docs = Tables(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+      val docs = Tables.spread(s, dir, "documents", "doc_id")
         .select(col("doc_id"), col("source"), split(col("text"), " ").as("toks"))
       val bg = docs.select(col("source"), explode(expr(
           "transform(slice(toks, 1, size(toks) - 1), (t, i) -> concat(t, ' ', toks[i + 1]))"))
@@ -6260,8 +6231,7 @@ object Llm {
   private val qTextLmKn = Q(
     "q_text_lm_kn",
     (s, dir) => {
-      val docs = Tables(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+      val docs = Tables.spread(s, dir, "documents", "doc_id")
         .select(col("doc_id"), col("source"), split(col("text"), " ").as("toks"))
       val bg = docs.select(col("source"), explode(expr(
           "transform(slice(toks, 1, size(toks) - 1), (t, i) -> concat(t, ' ', toks[i + 1]))"))
@@ -6367,7 +6337,6 @@ object Llm {
   private def commonnessScored(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables(s, dir, "documents")
     val t = docs
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) >= 1)
     val v = t.groupBy("w").agg(count(lit(1)).as("c"))

@@ -35,7 +35,11 @@ object Multimodal {
     * real media type.
     */
   def assets(s: SparkSession, dir: String): DataFrame =
-    Tables(s, dir, "documents")
+    assetsOf(Tables(s, dir, "documents"))
+
+  /** [[assets]] over a given documents scan (e.g. a [[Tables.spread]] one). */
+  private def assetsOf(documents: DataFrame): DataFrame =
+    documents
       .select(
         col("doc_id"),
         col("text").cast("binary").as("payload"),
@@ -185,10 +189,8 @@ object Multimodal {
   private val qMultimodalPhash = Q(
     "q_multimodal_phash",
     (s, dir) => {
-      // Par.byCores: the hex + frame explode + per-frame md5 + simhash
-      // fold otherwise inherit the 1-task fixture scan (profiled 0.8 s
-      // of a 1.6 s key on one task at sf0.1); no-op on a wide scan
-      val fr = frameSample(Par.byCores(assets(s, dir), col("doc_id")),
+      // spread: the hex + frame explode + per-frame md5 + simhash fold
+      val fr = frameSample(assetsOf(Tables.spread(s, dir, "documents", "doc_id")),
           stride = 4, maxFrames = 5)
         .select(col("doc_id"), col("format"), col("frame"))
         .withColumn("h", md5(col("frame").cast("binary")))

@@ -196,10 +196,7 @@ object Scalars {
       // JSON → MAP<STRING,STRING>; emit exploded key/value pairs (flat
       // columns — DuckDB has no MAP physical type in its parquet writer).
       val m = from_json(col("props"), MapType(StringType, StringType))
-      Tables.events(s, dir)
-        // single-file scan: parallelize the JSON parse + explode (the
-        // events file is one parquet row group — see Llm.shingles())
-        .repartition(s.sparkContext.defaultParallelism, col("event_id"))
+      Tables.spread(s, dir, "events", "event_id")
         .select(col("event_id"), size(m).cast("long").as("n_keys"),
           explode(m).as(Seq("key", "value")))
         .orderBy("event_id", "key")

@@ -308,6 +308,38 @@ class PlanLintSpec extends SparkSpec {
     assert(postShuffleTasks(s) > 1)
   }
 
+  test("Tables.spread widens a one-file fixture scan and leaves a wide scan alone") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    def exchanges(df: org.apache.spark.sql.DataFrame): Seq[ShuffleExchangeExec] =
+      (df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }).collect { case e: ShuffleExchangeExec => e }
+    val cores = spark.sparkContext.defaultParallelism
+    val dir = sf.replace("sf0.001", "sf0.01")
+
+    val narrow = Tables.spread(spark, dir, "documents", "doc_id")
+    val ex = exchanges(narrow)
+    assert(ex.size == 1 && ex.head.shuffleOrigin == REPARTITION_BY_NUM &&
+      ex.head.child.collectFirst { case f: FileSourceScanExec => f }.nonEmpty,
+      s"expected one REPARTITION_BY_NUM exchange over the file scan:\n${narrow.queryExecution.executedPlan}")
+    narrow.collect()
+    assert(narrow.queryExecution.executedPlan.execute().getNumPartitions >= cores)
+
+    val wideDir = java.nio.file.Files.createTempDirectory("graft-wide").toString
+    try {
+      Tables(spark, dir, "documents").repartition(cores)
+        .write.parquet(s"$wideDir/documents.parquet")
+      assert(Tables(spark, wideDir, "documents").rdd.getNumPartitions >= cores)
+      val wide = Tables.spread(spark, wideDir, "documents", "doc_id")
+      assert(exchanges(wide).isEmpty,
+        s"a core-wide scan must not be repartitioned:\n${wide.queryExecution.executedPlan}")
+      assert(wide.count() == narrow.count())
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(wideDir))
+  }
+
   test("ANN candidate generation is a bucket equi-join, never a pair scan") {
     // the scale claim of the ANN family: candidates come from an
     // equi-join on (band, sig) / cell — a CartesianProduct over the

@@ -1,0 +1,39 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source lint: fixture scans are widened in ONE place. `Tables.spread`
+  * owns the decision (a one-row-group fixture scans as one task); a
+  * core-count repartition written into an operator file, or the deleted
+  * `graft.ops.Par` helper coming back, would be a second mechanism for
+  * the same job.
+  */
+class SourceLintSpec extends AnyFunSuite {
+
+  private val mainDir = new java.io.File("src/main/scala/graft")
+
+  private def sources(dir: java.io.File): Seq[java.io.File] =
+    Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
+      if (f.isDirectory) sources(f) else Seq(f).filter(_.getName.endsWith(".scala"))
+    }
+
+  private def matches(files: Seq[java.io.File], bad: String => Boolean): Seq[String] =
+    files.flatMap { f =>
+      scala.util.Using.resource(scala.io.Source.fromFile(f, "UTF-8")) { src =>
+        src.getLines().zipWithIndex.collect {
+          case (line, i) if bad(line) => s"${f.getPath}:${i + 1}: ${line.trim}"
+        }.toList
+      }
+    }
+
+  test("operators widen fixture scans only through Tables.spread") {
+    val ops = sources(new java.io.File(mainDir, "ops"))
+    assert(ops.nonEmpty, s"no sources under ${mainDir.getAbsolutePath}/ops")
+    val cores = matches(ops, _.contains("defaultParallelism"))
+    assert(cores.isEmpty, "core-count repartition outside Tables.spread:\n" + cores.mkString("\n"))
+    val par = "\\bPar\\s*\\.|ops\\.Par\\b".r
+    val parRefs = matches(sources(mainDir), par.findFirstIn(_).nonEmpty)
+    assert(parRefs.isEmpty, "graft.ops.Par referenced:\n" + parRefs.mkString("\n"))
+    assert(!new java.io.File(mainDir, "ops/Par.scala").exists())
+  }
+}
