@@ -44,13 +44,45 @@ object EngineSession {
     *    `cores` MiB collapses to ONE task however heavy the stage it feeds
     *    (ICWS scoring, hamming joins, partitioned index writes). The floor
     *    keeps such exchanges at core width; shuffles of `cores` MiB and up
-    *    coalesce exactly as before.
+    *    coalesce exactly as before;
+    *  - artifact isolation off. Spark caches each generated class by the
+    *    pair (context class loader, source). With isolation on (the
+    *    default), a session's jobs carry `JobArtifactState(sessionUUID)`
+    *    and the executor gives every session UUID its own class loader.
+    *    Every streaming query runs on a cloned session with a new UUID,
+    *    so each restart or `AvailableNow` drain recompiled and re-JITted
+    *    every task-side class of the same plan. The engine adds no Spark
+    *    artifacts (jars, files, archives), so the per-session loader
+    *    isolates nothing. Clones copy the conf, so setting it in [[tune]]
+    *    covers every stream a caller's session starts afterwards;
+    *  - no codegen stage id in generated class names. AQE numbers the
+    *    whole-stage ids in the order query stages are planned, which
+    *    follows the order concurrent stages finish. A repeated
+    *    q_etl_batch_assign recompiled 4 of its 48 classes at random, and
+    *    in each the id was the only difference from a cached source.
+    *    Without the id, the same pipeline also shares one class across
+    *    queries. Plans and `explain` still show the id.
     */
   private val sqlConfs: Map[String, String] = Map(
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> ohaFallback,
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1b")
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1b",
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    "spark.sql.codegen.useIdInClassName" -> "false")
+
+  /** Entries in Spark's generated-class cache (`spark.sql.codegen.cache.
+    * maxEntries`, default 100). It is a static conf, read once when the
+    * code generator is first used, so only [[builder]] sets it. An entry
+    * is one (class loader, source) pair, and a local-mode stage takes one
+    * on the driver and one on the task side. One full `graft.Bench` pass
+    * over all 271 keys at sf0.1, with its warm-up, compiled 2,217
+    * distinct classes (2,820 with stage ids in class names). At the
+    * default, even the 7-key `perfbench` list needs more than 100 entries
+    * and evicted its own classes before reusing them. 3,000 is the full
+    * pass's count plus a third.
+    */
+  private val CodegenCacheEntries = 3000
 
   /** Local-mode session builder for the harness mains and the tests. */
   def builder(cpus: String = localCpus): SparkSession.Builder =
@@ -59,6 +91,7 @@ object EngineSession {
       .withExtensions(new functions.GraftExtensions)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
       .config(sqlConfs)
 
   /** Engine-semantics runtime confs for a session the harness did NOT
@@ -70,7 +103,7 @@ object EngineSession {
     sqlConfs.foreach { case (k, v) => spark.conf.set(k, v) }
     // a session built without GraftExtensions still needs the SQL names
     // (graft_dot / graft_cells / graft_sketch / ... appear inside expr()
-    // strings on many query paths)
+    // strings on many query paths); names it already has stay as they are
     functions.register(spark)
   }
 

@@ -24,7 +24,7 @@ package object functions {
   def graft_topk(score: Column, nId: Column, k: Int, distinct: Boolean): Column =
     GraftNative.topkCand(score, nId, k, distinct)
 
-  /** Register the SQL names on a live session (for `spark.sql` use;
+  /** Register the SQL names a live session lacks (for `spark.sql` use;
     * the Column DSL above needs no registration).
     */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
@@ -34,7 +34,8 @@ package object functions {
 package functions {
 
   /** Registers the engine's SQL functions; install with
-    * `SparkSession.builder.withExtensions(new GraftExtensions)` or
+    * `withExtensions(new GraftExtensions)` on a session builder (as
+    * `EngineSession.builder` does) or
     * `spark.sql.extensions=graft.functions.GraftExtensions`. The Column
     * facade above works without registration (the expression is injected
     * into the plan directly).

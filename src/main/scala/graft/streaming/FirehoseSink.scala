@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 /** foreachBatch delivery stage — the PutRecordBatch emulation (SURVEY §0.1
   * steps 5–6, §7.3.8). Each micro-batch is routed, then batched and
   * "delivered" per executor partition via [[Batcher.deliver]]; the outcome
-  * (delivered vs dead-lettered after retries) is appended to
-  * `outDir` parquet partitioned by status/route — the per-route delivery
-  * streams. No driver-side collect: batching state lives inside
+  * (delivered vs dead-lettered after retries) is written to
+  * `outDir/batch_id=N` parquet partitioned by status/route — the per-route
+  * delivery streams. No driver-side collect: batching state lives inside
   * mapPartitions, so this scales with partition count, not stream size.
   *
   * Failure injection (deterministic, for tests): with failEvery = k > 0,
@@ -68,17 +68,18 @@ object FirehoseSink {
         }
       }
       .toDF("event_id", "route", "status")
-    // Idempotent delivery under foreachBatch retries: output is partitioned
-    // by batch_id and dynamically overwritten, so re-processing a failed
-    // micro-batch replaces exactly its own partition instead of appending
-    // duplicates — effectively-once sink semantics on top of Structured
-    // Streaming's at-least-once foreachBatch contract. The overwrite mode is
-    // a per-write option (not a session conf mutation) so concurrent writes
-    // on the same SparkSession never observe dynamic mode.
-    tagged.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id", "status", "route")
-      .parquet(outDir)
+    // Idempotent delivery under foreachBatch retries: each micro-batch is
+    // written to its own `batch_id=N` directory by a plain overwrite of that
+    // path, so re-processing a failed micro-batch replaces exactly its own
+    // output instead of appending duplicates — effectively-once sink
+    // semantics on top of Structured Streaming's at-least-once foreachBatch
+    // contract (the sink replays an epoch in place). Reading `outDir` back
+    // discovers `batch_id` as a partition column. The batch id stays out of
+    // the plan: a literal column would be inlined into this stage's
+    // generated code, and every micro-batch would compile a new copy of the
+    // sink's largest class.
+    tagged.write.mode("overwrite")
+      .partitionBy("status", "route")
+      .parquet(s"$outDir/batch_id=$batchId")
   }
 }

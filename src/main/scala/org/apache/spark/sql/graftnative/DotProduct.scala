@@ -9,6 +9,7 @@
 package org.apache.spark.sql.graftnative
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -215,22 +216,25 @@ object GraftNative {
     SignSketch(children(0), children(1), children(2))
   }
 
-  /** Register the SQL names on an already-running session (extensions
-    * only apply at session construction).
+  /** The SQL names `GraftExtensions` injects, with their builders. */
+  val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "graft_dot" -> dotBuilder,
+    "graft_md5h32" -> md5h32Builder,
+    "graft_md5w32" -> md5w32Builder,
+    "graft_pq_recon" -> pqReconBuilder,
+    "graft_cells" -> cellsBuilder,
+    "graft_sketch" -> sketchBuilder)
+
+  /** Register the SQL names a running session lacks (extensions only apply
+    * at session construction). A name the session already resolves is
+    * left as it is, so a session built with `GraftExtensions` is untouched.
     */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", dotBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_md5h32", md5h32Builder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_md5w32", md5w32Builder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pq_recon", pqReconBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cells", cellsBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sketch", sketchBuilder, "built-in")
+    val registry = spark.sessionState.functionRegistry
+    sqlFunctions.foreach { case (name, builder) =>
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
+    }
   }
 }
 

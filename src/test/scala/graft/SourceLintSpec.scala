@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * owns the decision (a one-row-group fixture scans as one task); a
   * core-count repartition written into an operator file, or the deleted
   * `graft.ops.Par` helper coming back, would be a second mechanism for
-  * the same job.
+  * the same job. Sessions are built in ONE place too: static confs such
+  * as the generated-class cache size only take effect at session build.
   */
 class SourceLintSpec extends AnyFunSuite {
 
@@ -35,5 +36,14 @@ class SourceLintSpec extends AnyFunSuite {
     val parRefs = matches(sources(mainDir), par.findFirstIn(_).nonEmpty)
     assert(parRefs.isEmpty, "graft.ops.Par referenced:\n" + parRefs.mkString("\n"))
     assert(!new java.io.File(mainDir, "ops/Par.scala").exists())
+  }
+
+  test("only EngineSession builds a SparkSession") {
+    val builder = "SparkSession\\s*\\.\\s*builder\\b".r
+    val engine = new java.io.File(mainDir, "EngineSession.scala").getPath + ":"
+    val (own, others) = matches(sources(new java.io.File("src/main/scala")),
+      builder.findFirstIn(_).nonEmpty).partition(_.startsWith(engine))
+    assert(own.nonEmpty, s"no SparkSession.builder found in $engine")
+    assert(others.isEmpty, "SparkSession.builder outside EngineSession:\n" + others.mkString("\n"))
   }
 }
