@@ -107,12 +107,13 @@ object EngineSession {
     functions.register(spark)
   }
 
-  /** Per-query storage release, outside any timed span: drops cached
-    * frames and every persisted RDD (each `localCheckpoint(true)` block
-    * otherwise stays pinned until its DataFrame is GC'd and the
-    * ContextCleaner notices — across hundreds of executions that
-    * accumulation turned a run into storage pressure and
-    * localCheckpoint/unpersist warning spew).
+  /** Frees what one query left in storage; the harness mains call it
+    * after each query, outside any timed span. It clears the cache and
+    * unpersists every persisted RDD, which includes the blocks of each
+    * `localCheckpoint`. Without it those blocks stay until their
+    * DataFrame is garbage-collected and the ContextCleaner drops them.
+    * Over hundreds of queries that filled the block store and flooded
+    * the log with checkpoint and unpersist warnings.
     */
   def release(spark: SparkSession): Unit = {
     spark.catalog.clearCache()

@@ -1,9 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.graftnative.{DotProduct, GraftNative, Md5Hex32, PqRecon}
+import org.apache.spark.sql.graftnative.GraftNative
 
 /** Column-DSL facade over the engine's native expressions, plus SQL
   * registration (SURVEY §2.12 extension-point ladder: native Expression
@@ -42,36 +40,7 @@ package functions {
     */
   class GraftExtensions extends (SparkSessionExtensions => Unit) {
     override def apply(ext: SparkSessionExtensions): Unit = {
-      ext.injectFunction((
-        new FunctionIdentifier("graft_dot"),
-        new ExpressionInfo(classOf[DotProduct].getCanonicalName, null, "graft_dot"),
-        GraftNative.dotBuilder))
-      ext.injectFunction((
-        new FunctionIdentifier("graft_md5h32"),
-        new ExpressionInfo(classOf[Md5Hex32].getCanonicalName, null, "graft_md5h32"),
-        GraftNative.md5h32Builder))
-      ext.injectFunction((
-        new FunctionIdentifier("graft_md5w32"),
-        new ExpressionInfo(
-          classOf[org.apache.spark.sql.graftnative.Md5Words32].getCanonicalName,
-          null, "graft_md5w32"),
-        GraftNative.md5w32Builder))
-      ext.injectFunction((
-        new FunctionIdentifier("graft_pq_recon"),
-        new ExpressionInfo(classOf[PqRecon].getCanonicalName, null, "graft_pq_recon"),
-        GraftNative.pqReconBuilder))
-      ext.injectFunction((
-        new FunctionIdentifier("graft_cells"),
-        new ExpressionInfo(
-          classOf[org.apache.spark.sql.graftnative.CellsTopN].getCanonicalName,
-          null, "graft_cells"),
-        GraftNative.cellsBuilder))
-      ext.injectFunction((
-        new FunctionIdentifier("graft_sketch"),
-        new ExpressionInfo(
-          classOf[org.apache.spark.sql.graftnative.SignSketch].getCanonicalName,
-          null, "graft_sketch"),
-        GraftNative.sketchBuilder))
+      GraftNative.sqlFunctions.foreach(f => ext.injectFunction((f.id, f.info, f.builder)))
       // whole-plan rewrite (SURVEY §4): bounded explode — see the rule's doc
       ext.injectOptimizerRule(_ => graft.plans.BoundedPosExplode)
     }

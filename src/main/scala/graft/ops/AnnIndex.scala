@@ -551,7 +551,9 @@ object AnnIndex {
 
   private[graft] def writeRagIndex(s: SparkSession, dir: String): (String, org.apache.spark.sql.types.StructType) = {
     val path = indexPath(dir) + "_rag"
+    // feeds two actions: cents' checkpoint, the write
     val cv = Llm.chunkVec(s, dir).localCheckpoint(true)
+    // feeds two actions: the route checkpoint, the write
     val cents = occCentsFlat(cv, "ragc_").localCheckpoint(true)
     val df = withCellPart(Llm.routedAssign(cv, cents, "ragr_"))
     java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(path + ".marker"))

@@ -71,11 +71,13 @@ object ConnectedComponents {
     */
   private[graft] def labels(edges: DataFrame, maxRounds: Int = 30): (DataFrame, Int) = {
     var e = edges.select(col("a"), col("b"))
+      // counted here, then read by round 1
       .filter(col("a") =!= col("b")).distinct().localCheckpoint(true)
     var eCount = e.count()
     var rounds = 0
     var done = eCount == 0
     while (!done && rounds < maxRounds) {
+      // iteration: e is reassigned per round
       val next = smallStar(largeStar(e)).localCheckpoint(true)
       // exact set-equality convergence: star sets are the fixpoints of
       // both rounds, so "unchanged" means every component is a star

@@ -193,7 +193,7 @@ object Graph {
         .groupBy(col("src").as("id")).agg(sum("a").as("h"))
       val a2 = edges.join(h1.withColumnRenamed("id", "src"), "src")
         .groupBy(col("dst").as("id")).agg(sum("h").as("a"))
-        .localCheckpoint(true)
+        .localCheckpoint(true) // A/B sf0.1: 1.29 s with, 1.60 s without
       val h2 = edges.join(a2.withColumnRenamed("id", "dst"), "dst")
         .groupBy(col("src").as("id")).agg(sum("a").as("h"))
       a2.join(h2, "id")
@@ -437,7 +437,6 @@ object Graph {
         col("a.ok") === col("b.ok") && col("a.p") < col("b.p"))
       .groupBy(col("a.p").as("pa"), col("b.p").as("pb"))
       .agg(count(lit(1)).as("w"))
-      .localCheckpoint(true)
     // per-node strongest TriKnn edges, either direction
     val half = w.select(col("pa").as("node"), col("pb").as("peer"), col("w"))
       .unionByName(w.select(col("pb").as("node"), col("pa").as("peer"), col("w")))
@@ -497,7 +496,6 @@ object Graph {
         when(aLtB, col("a")).otherwise(col("b")).as("src"),
         when(aLtB, col("b")).otherwise(col("a")).as("dst"),
         when(aLtB, col("db")).otherwise(col("da")).as("ddst"))
-      .localCheckpoint(true)
     // wedges at the ≺-min corner, closed by the oriented (y,z) edge;
     // the two out-neighbors are ordered by the same (deg, id) pair
     val wedgeLt = col("e1.ddst") < col("e2.ddst") ||
@@ -641,11 +639,11 @@ object Graph {
       .distinct()
     val adj = edges.select(col("a").as("n"), col("b").as("nbr"))
       .unionByName(edges.select(col("b").as("n"), col("a").as("nbr")))
-      .localCheckpoint(true)
+      .localCheckpoint(true) // read by every superstep's job
     val seedHash = Llm.md5Hex32Spark("concat('lps_', CAST(n AS STRING))")
     var lab = nodes.select(col("n"),
         expr(s"CASE WHEN pmod($seedHash, $LpSeedMod) = 0 THEN n END").as("lab"))
-      .localCheckpoint(true)
+      .localCheckpoint(true) // iteration: lab is reassigned per superstep
     // The BFS-style union + single-min fold was tried here (r14) and
     // reverted: first-arrival-wins needs a priority STRUCT min (the
     // existing label must beat a smaller neighbor label), and the
@@ -659,7 +657,7 @@ object Graph {
         .groupBy("n").agg(min("nl").as("nm"))
       lab = lab.join(nbrMin, Seq("n"), "left")
         .select(col("n"), coalesce(col("lab"), col("nm")).as("lab"))
-        .localCheckpoint(true)
+        .localCheckpoint(true) // iteration: lab is reassigned per superstep
     }
     lab
   }
@@ -739,7 +737,6 @@ object Graph {
           when(aLtB, col("a")).otherwise(col("b")).as("src"),
           when(aLtB, col("b")).otherwise(col("a")).as("dst"),
           when(aLtB, col("db")).otherwise(col("da")).as("ddst"))
-        .localCheckpoint(true)
       val wedgeLt = col("e1.ddst") < col("e2.ddst") ||
         (col("e1.ddst") === col("e2.ddst") && col("e1.dst") < col("e2.dst"))
       val tri = ori.as("e1").join(ori.as("e2"),
@@ -832,7 +829,7 @@ object Graph {
         alive = alive
           .join(keep.select(col("n").as("a")), Seq("a"), "left_semi")
           .join(keep.select(col("n").as("b")), Seq("b"), "left_semi")
-          .localCheckpoint(true)
+          .localCheckpoint(true) // iteration: alive is reassigned per peel round
       }
       alive.select(col("a").as("n"))
         .unionByName(alive.select(col("b").as("n")))
@@ -934,11 +931,11 @@ object Graph {
         .distinct()
       val adj = edges.select(col("a").as("n"), col("b").as("nbr"))
         .unionByName(edges.select(col("b").as("n"), col("a").as("nbr")))
-        .localCheckpoint(true)
+        .localCheckpoint(true) // read by every superstep's job
       val seedHash = Llm.md5Hex32Spark("concat('bfs_', CAST(n AS STRING))")
       var dist = nodes.select(col("n"),
           expr(s"CASE WHEN pmod($seedHash, $BfsSeedMod) = 0 THEN 0L END").as("d"))
-        .localCheckpoint(true)
+        .localCheckpoint(true) // iteration: dist is reassigned per superstep
       // Each superstep folds the relaxation in ONE aggregation: the
       // neighbor contributions (nd + 1) are unioned with the current
       // distance rows and min-reduced per node — min(d, min_nbr(nd)+1)
@@ -955,7 +952,7 @@ object Graph {
           .select(col("n"), (col("nd") + 1L).as("d"))
         dist = dist.unionByName(contrib)
           .groupBy("n").agg(min("d").as("d"))
-          .localCheckpoint(true)
+          .localCheckpoint(true) // iteration: dist is reassigned per superstep
       }
       dist.groupBy(coalesce(col("d"), lit(-1L)).as("dist"))
         .agg(count(lit(1)).as("n_nodes"), sum("n").as("id_sum"))
@@ -1013,10 +1010,9 @@ object Graph {
   private val qGraphModularity = Q(
     "q_graph_modularity",
     (s, dir) => {
-      val edges = sparseEdges(s, dir).localCheckpoint(true)
+      val edges = sparseEdges(s, dir)
       val lab = lpLabels(s, dir)
         .select(col("n"), coalesce(col("lab"), col("n")).as("c"))
-        .localCheckpoint(true)
       val deg = edges.select(col("a").as("n"))
         .unionByName(edges.select(col("b").as("n")))
         .groupBy("n").agg(count(lit(1)).as("deg"))

@@ -786,11 +786,9 @@ object Windows {
       val daily = Tables.events(s, dir)
         .groupBy(expr("ts_us DIV 86400000000").as("day"))
         .agg(count(lit(1)).as("cnt"))
-        .localCheckpoint(true) // feeds totals + both join sides
       val tot = daily.agg(count(lit(1)).as("n"), sum("cnt").as("ss"))
       val dev = daily.crossJoin(broadcast(tot))
         .select(col("day"), expr("cnt - ss DIV n").as("d"))
-        .localCheckpoint(true)
       val lags = dev.sparkSession.range(0, AcfLags.length)
         .select(expr(s"element_at(array(${AcfLags.mkString(",")}), CAST(id AS INT) + 1)")
           .cast("long").as("lag"))
@@ -914,7 +912,6 @@ object Windows {
       val daily = Tables.events(s, dir)
         .groupBy(expr("ts_us DIV 86400000000").as("day"))
         .agg(count(lit(1)).as("v"))
-        .localCheckpoint(true) // feeds vmax + both pair sides
       val mx = daily.agg(max("v").as("vmax"), count(lit(1)).as("n_days"))
       val pairs = daily.select(col("day").as("da"), col("v").as("va"))
         .crossJoin(daily.select(col("day").as("db"), col("v").as("vb")))

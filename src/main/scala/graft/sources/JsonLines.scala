@@ -48,7 +48,7 @@ object JsonLines {
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", CorruptCol)
       .json(path)
-      .localCheckpoint(true)
+      .localCheckpoint(true) // the good/corrupt split reads one parse
     val good = raw.filter(col(CorruptCol).isNull).select(schema.fieldNames.map(col): _*)
     val dlq = raw.filter(col(CorruptCol).isNotNull).select(col(CorruptCol).as("raw_line"))
     (good, dlq)

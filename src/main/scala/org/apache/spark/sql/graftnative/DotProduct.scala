@@ -10,7 +10,7 @@ package org.apache.spark.sql.graftnative
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -216,14 +216,25 @@ object GraftNative {
     SignSketch(children(0), children(1), children(2))
   }
 
-  /** The SQL names `GraftExtensions` injects, with their builders. */
-  val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "graft_dot" -> dotBuilder,
-    "graft_md5h32" -> md5h32Builder,
-    "graft_md5w32" -> md5w32Builder,
-    "graft_pq_recon" -> pqReconBuilder,
-    "graft_cells" -> cellsBuilder,
-    "graft_sketch" -> sketchBuilder)
+  /** One SQL function: its name, the expression class it builds (what
+    * `DESCRIBE FUNCTION` reports) and its builder.
+    */
+  final case class SqlFunction(name: String, cls: Class[_ <: Expression],
+      builder: Seq[Expression] => Expression) {
+    def id: FunctionIdentifier = FunctionIdentifier(name)
+    def info: ExpressionInfo = new ExpressionInfo(cls.getCanonicalName, null, name)
+  }
+
+  /** The engine's SQL functions: `GraftExtensions` injects them and
+    * [[register]] adds them to a running session.
+    */
+  val sqlFunctions: Seq[SqlFunction] = Seq(
+    SqlFunction("graft_dot", classOf[DotProduct], dotBuilder),
+    SqlFunction("graft_md5h32", classOf[Md5Hex32], md5h32Builder),
+    SqlFunction("graft_md5w32", classOf[Md5Words32], md5w32Builder),
+    SqlFunction("graft_pq_recon", classOf[PqRecon], pqReconBuilder),
+    SqlFunction("graft_cells", classOf[CellsTopN], cellsBuilder),
+    SqlFunction("graft_sketch", classOf[SignSketch], sketchBuilder))
 
   /** Register the SQL names a running session lacks (extensions only apply
     * at session construction). A name the session already resolves is
@@ -231,9 +242,8 @@ object GraftNative {
     */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    sqlFunctions.foreach { case (name, builder) =>
-      if (!registry.functionExists(FunctionIdentifier(name)))
-        registry.createOrReplaceTempFunction(name, builder, "built-in")
+    sqlFunctions.foreach { f =>
+      if (!registry.functionExists(f.id)) registry.registerFunction(f.id, f.info, f.builder)
     }
   }
 }

@@ -103,8 +103,8 @@ class PlanLintSpec extends SparkSpec {
       "q_vec_cluster_purity",
       // two 1-row metric frames assembled by a scalar cross join
       "q_dedup_eval",
-      // 1-row broadcast (tot_a, tot_b) fanned onto the checkpointed
-      // vocab-sized count frame — the q_text_heavy_hitters shape
+      // 1-row broadcast (tot_a, tot_b) fanned onto the vocab-sized
+      // count frame — the q_text_heavy_hitters shape
       "q_text_drift",
       // 1-row broadcast total fanned onto the ≤ 64-row bucket census
       "q_agg_activity_dist",
@@ -742,5 +742,19 @@ class PlanLintSpec extends SparkSpec {
     val files = df.inputFiles.toSeq
     assert(files.exists(_.contains("graft_shpairs_")),
       s"overlap must scan the persisted pair frame:\n${files.mkString("\n")}")
+  }
+
+  test("a frame shared within one action is read through exchange reuse, not a checkpoint") {
+    // each of these keys feeds one aggregate (or scan) to two consumers
+    // of the same action; AQE plans the repeated subtree once and reads
+    // it again through ReusedExchange. A localCheckpoint there would show
+    // as an ExistingRDD scan and add a blocking job and a lineage cut.
+    Seq("q_agg_activity_dist", "q_text_vocab_prune", "q_etl_batch_assign").foreach { name =>
+      val df = SparkEntry.queries(name)(spark, sf)
+      df.collect()
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("ReusedExchange"), s"$name must reuse the shared exchange:\n$plan")
+      assert(!plan.contains("ExistingRDD"), s"$name must not read a checkpoint:\n$plan")
+    }
   }
 }

@@ -8,6 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `graft.ops.Par` helper coming back, would be a second mechanism for
   * the same job. Sessions are built in ONE place too: static confs such
   * as the generated-class cache size only take effect at session build.
+  * Every eager checkpoint says why it is there: a cut is a blocking job
+  * and a lineage a lost executor cannot replay, so one that no longer
+  * has a reason should go.
   */
 class SourceLintSpec extends AnyFunSuite {
 
@@ -45,5 +48,17 @@ class SourceLintSpec extends AnyFunSuite {
       builder.findFirstIn(_).nonEmpty).partition(_.startsWith(engine))
     assert(own.nonEmpty, s"no SparkSession.builder found in $engine")
     assert(others.isEmpty, "SparkSession.builder outside EngineSession:\n" + others.mkString("\n"))
+  }
+
+  test("every localCheckpoint carries a // reason on its line or the two above") {
+    val unexplained = sources(new java.io.File("src/main/scala")).flatMap { f =>
+      val lines = scala.util.Using.resource(scala.io.Source.fromFile(f, "UTF-8"))(_.getLines().toVector)
+      lines.indices.collect {
+        case i if lines(i).contains(".localCheckpoint(") &&
+            !lines.slice(math.max(0, i - 2), i + 1).exists(_.contains("//")) =>
+          s"${f.getPath}:${i + 1}: ${lines(i).trim}"
+      }
+    }
+    assert(unexplained.isEmpty, "localCheckpoint without a reason:\n" + unexplained.mkString("\n"))
   }
 }
