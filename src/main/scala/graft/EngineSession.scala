@@ -84,6 +84,18 @@ object EngineSession {
     */
   private val CodegenCacheEntries = 3000
 
+  /** The `file:` scheme's implementations, for `FileSystem` and for
+    * `FileContext` (the streaming checkpoint logs): Hadoop's checksummed
+    * local file system with an in-process `chmod` ([[LocalFiles]]). Only
+    * [[builder]] can set them. Hadoop caches one `FileSystem` per scheme
+    * and user for the whole JVM, so the first session to touch `file:`
+    * decides, and [[tune]] cannot swap the file system under a session
+    * a caller built.
+    */
+  private val localFileConfs: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[LocalFiles].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[LocalFilesFs].getName)
+
   /** Local-mode session builder for the harness mains and the tests. */
   def builder(cpus: String = localCpus): SparkSession.Builder =
     SparkSession.builder()
@@ -92,12 +104,14 @@ object EngineSession {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+      .config(localFileConfs)
       .config(sqlConfs)
 
   /** Engine-semantics runtime confs for a session the harness did NOT
     * build. Called from the [[Tables]] first-touch path so any session
     * that reads the fixtures — including a caller's own — runs the
     * query functions under the same semantics the suite was measured with.
+    * It leaves the session's file system as it is (see [[localFileConfs]]).
     */
   def tune(spark: SparkSession): Unit = {
     sqlConfs.foreach { case (k, v) => spark.conf.set(k, v) }

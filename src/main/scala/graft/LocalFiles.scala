@@ -1,0 +1,58 @@
+package graft
+
+import java.net.URI
+import java.nio.file.Files
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.local.LocalConfigKeys
+import org.apache.hadoop.fs.permission.FsPermission
+
+/** The engine's `file:` scheme: Hadoop's checksummed local file system
+  * with one change, [[RawLocalFiles.setPermission]] is a `chmod(2)` call
+  * instead of a `chmod` child process.
+  *
+  * Spark's jars ship no native Hadoop library, so Hadoop's
+  * `RawLocalFileSystem` sets a mode by running `/usr/bin/chmod`, and it
+  * sets one on every directory it makes and every file it creates (the
+  * umask-applied default, 755 and 644). A micro-batch of the Firehose
+  * sink writes about 20 files and directories per task plus its
+  * checkpoint logs, about 100 child processes of roughly 10 ms each;
+  * one NIO `chmod` takes about 15 µs. Everything else, the `.crc`
+  * sibling files included, is Hadoop's own code, so the layout and the
+  * modes on disk are the same.
+  *
+  * [[EngineSession.builder]] installs [[LocalFiles]] for `FileSystem`
+  * and [[LocalFilesFs]] for `FileContext` (which Structured Streaming's
+  * checkpoint logs use).
+  */
+final class LocalFiles extends LocalFileSystem(new RawLocalFiles)
+
+/** `FileContext` twin of [[LocalFiles]]: Hadoop's `LocalFs`, a
+  * `ChecksumFs` over the raw file system, built on [[RawLocalFiles]].
+  * Hadoop instantiates it through this (URI, Configuration) constructor.
+  */
+final class LocalFilesFs(uri: URI, conf: Configuration) extends ChecksumFs(new RawLocalFilesFs(conf))
+
+/** Hadoop's `RawLocalFileSystem` with its mode change done in-process. */
+final class RawLocalFiles extends RawLocalFileSystem {
+
+  /** Sets exactly `permission`'s mode bits, the sticky bit included, as
+    * `chmod` would: `unix:mode` takes the whole `st_mode` permission
+    * word, where `PosixFilePermission` has no sticky bit.
+    */
+  override def setPermission(p: Path, permission: FsPermission): Unit =
+    Files.setAttribute(pathToFile(p).toPath, "unix:mode", Int.box(permission.toShort.toInt))
+}
+
+/** Hadoop's `RawLocalFs` (whose constructor is package-private) over
+  * [[RawLocalFiles]]: no default port, and no check of path names, which
+  * the OS validates (`AbstractFileSystem` would reject a `:` in a name).
+  */
+final class RawLocalFilesFs(conf: Configuration)
+    extends DelegateToFileSystem(FsConstants.LOCAL_FS_URI, new RawLocalFiles, conf,
+      FsConstants.LOCAL_FS_URI.getScheme, false) {
+  override def getUriDefaultPort: Int = -1
+  override def getServerDefaults(f: Path): FsServerDefaults = LocalConfigKeys.getServerDefaults
+  override def isValidName(src: String): Boolean = true
+}

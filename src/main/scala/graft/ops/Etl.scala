@@ -30,27 +30,29 @@ object Etl {
 
   val DefaultStream = "default"
 
-  /** Apply a routing table: broadcast left-join on event_type with
+  /** Apply a routing table: a map lookup on event_type, with the
     * fallback for unmapped (or null) types. The table is a handful of
-    * rows at any scale — the join is a map-side hash lookup, exactly
-    * what the old hard-coded CASE compiled to, but data-driven. Works
-    * identically under Structured Streaming (stream-static broadcast
-    * join, planned per micro-batch).
+    * entries at any scale, so the lookup is a stateless projection: one
+    * `element_at` on a map literal, the data-driven form of the old
+    * hard-coded CASE, with no join and no broadcast job. The map is a
+    * referenced literal in the generated code, so a different table
+    * reuses the same compiled class. A stream applies it per row, with
+    * nothing planned again per micro-batch. The output keeps the column
+    * order of the former USING join: event_type, the other columns,
+    * then route.
     */
   def withRoute(df: DataFrame,
       rules: Seq[(String, String)] = DefaultRoutes,
       fallback: String = DefaultStream): DataFrame = {
-    // a duplicate key in the rules table would JOIN-DUPLICATE every
-    // matching event (the old CASE had first-match-wins); fail fast
-    // instead of silently inflating downstream counts
+    // a duplicate key in the rules table would make the route depend on
+    // which entry the map kept (the old CASE had first-match-wins); fail
+    // fast instead of silently routing by table order
     require(rules.map(_._1).distinct.size == rules.size,
       s"routing table has duplicate event_type keys: ${rules.map(_._1).diff(rules.map(_._1).distinct).distinct.mkString(", ")}")
-    val s = df.sparkSession
-    import s.implicits._
-    val tbl = rules.toDF("event_type", "_route_to")
-    df.join(broadcast(tbl), Seq("event_type"), "left")
-      .withColumn("route", coalesce(col("_route_to"), lit(fallback)))
-      .drop("_route_to")
+    val others = df.columns.filterNot(_ == "event_type").map(c => col(s"`${c.replace("`", "``")}`"))
+    df.select(col("event_type") +: others: _*)
+      .withColumn("route",
+        coalesce(element_at(typedLit(rules.toMap), col("event_type")), lit(fallback)))
   }
 
   /** Oracle twin of the DEFAULT routing instance. */
@@ -160,13 +162,10 @@ object Etl {
     * renumber at the end windows over the 500×-reduced batch table.
     */
   private[graft] def batchAssign(routed: DataFrame): DataFrame = {
-    // Execution count: withShardOffsets checkpoints the ok side once for
-    // its two consumers (offsets agg + numbering join); the big/DLQ
-    // branch deliberately re-reads the source instead of sharing a
-    // second checkpoint here — its oversize predicate pushes into the
-    // pruned parquet scan, and stacking a routed-frame checkpoint under
-    // withShardOffsets' own was double materialization of nearly the
-    // same narrow rows (review r4b).
+    // Execution count: the events scan is read once per branch, by the
+    // two consumers of the ok side (offsets agg + numbering join, see
+    // withShardOffsets) and by the big/DLQ branch, whose oversize
+    // predicate pushes into its pruned parquet scan (PlanLintSpec).
     val ok = routed.filter(col("nbytes") <= MaxRecordBytes)
     val big = routed.filter(col("nbytes") > MaxRecordBytes)
     val wLoc = Window.partitionBy("route", "shardk").orderBy("ts_us", "event_id")

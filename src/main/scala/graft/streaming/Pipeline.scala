@@ -58,7 +58,7 @@ object Pipeline {
   /** §0.1 step 4 — config-driven routing, identical to the batch query
     * `q_etl_route` under the default table; pass a different `rules` /
     * `fallback` to re-route without recompiling (the routing table is a
-    * stream-static broadcast join, planned per micro-batch).
+    * map literal looked up per row, see [[Etl.withRoute]]).
     */
   def route(df: DataFrame,
       rules: Seq[(String, String)] = Etl.DefaultRoutes,
@@ -77,11 +77,20 @@ object Pipeline {
     * parse the envelope, explode its Records, base64-decode each record's
     * `kinesis.data` into the payload string. Columnar end to end
     * (from_json → explode → unbase64), no UDFs.
+    *
+    * The explode is `posexplode_outer` keeping the rows with a position,
+    * which gives exactly `explode`'s rows: an empty, null or unparsable
+    * envelope has no position (no row), a `null` element has one (a row
+    * of nulls). For plain `explode` the optimizer infers a
+    * `size(…) > 0 AND isnotnull(…)` filter on the parsed envelope and
+    * pushes it below the generator, where it parses the envelope twice
+    * more; the outer generator gets no inferred filter.
     */
   def ingestEnvelopes(envelopes: DataFrame, jsonCol: String): DataFrame =
     envelopes
-      .withColumn("_env", from_json(col(jsonCol), envelopeSchema))
-      .select(explode(col("_env.Records")).as("r"))
+      .select(posexplode_outer(from_json(col(jsonCol), envelopeSchema).getField("Records"))
+        .as(Seq("pos", "r")))
+      .where(col("pos").isNotNull)
       .select(
         col("r.eventID").as("record_id"),
         col("r.kinesis.partitionKey").as("partition_key"),

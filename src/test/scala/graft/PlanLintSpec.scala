@@ -749,12 +749,65 @@ class PlanLintSpec extends SparkSpec {
     // of the same action; AQE plans the repeated subtree once and reads
     // it again through ReusedExchange. A localCheckpoint there would show
     // as an ExistingRDD scan and add a blocking job and a lineage cut.
-    Seq("q_agg_activity_dist", "q_text_vocab_prune", "q_etl_batch_assign").foreach { name =>
+    Seq("q_agg_activity_dist", "q_text_vocab_prune").foreach { name =>
       val df = SparkEntry.queries(name)(spark, sf)
       df.collect()
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("ReusedExchange"), s"$name must reuse the shared exchange:\n$plan")
       assert(!plan.contains("ExistingRDD"), s"$name must not read a checkpoint:\n$plan")
     }
+    // q_etl_batch_assign's shared frame is the events scan plus the
+    // routing projection, with no exchange in it: its only reused exchange
+    // was the routing table's broadcast, which routing as a map lookup
+    // removed. Each of its three branches (numbering, shard offsets,
+    // oversize) re-reads the scan, and none reads a checkpoint.
+    val df = SparkEntry.queries("q_etl_batch_assign")(spark, sf)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    assert(!plan.toString.contains("ExistingRDD"), s"q_etl_batch_assign must not read a checkpoint:\n$plan")
+    // counted in the initial plan: at run time AQE drops a branch whose
+    // input is empty (no oversized record at a small scale factor)
+    val initial = plan.asInstanceOf[org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec].inputPlan
+    val scans = initial.collect { case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
+    assert(scans.size == 3, s"q_etl_batch_assign must read the scan once per branch:\n$initial")
+  }
+
+  test("the hop's batch twins plan no routing broadcast and parse each envelope once") {
+    // routing is a map lookup in the projection: no broadcast job
+    Seq("q_etl_route", "q_etl_dlq").foreach { name =>
+      val plan = SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
+      assert(!plan.contains("BroadcastExchange"), s"$name plans a broadcast:\n$plan")
+    }
+    // The outer generator gets no inferred size/isnotnull filter that
+    // would evaluate the envelope's from_json twice more below it. The
+    // hop's shape (a text scan of envelopes, the payload parsed and only
+    // some fields kept) is where `explode` got that filter.
+    def envelopeParses(df: org.apache.spark.sql.DataFrame): Int =
+      PlanLintSpec.aqe.flatMap(df.queryExecution.executedPlan)(_.expressions.flatMap(_.collect {
+        case j: org.apache.spark.sql.catalyst.expressions.JsonToStructs
+          if j.schema == graft.streaming.Pipeline.envelopeSchema => j
+      })).size
+    val envelope = SparkEntry.queries("q_etl_envelope")(spark, sf)
+    assert(envelopeParses(envelope) == 1, envelope.queryExecution.executedPlan)
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("plan-envelopes").resolve("t").toString
+    Seq("""{"Records":[{"eventID":"e1","kinesis":{"partitionKey":"7",""" +
+        """"sequenceNumber":"1","data":"eyJldmVudF9pZCI6MSwiZXZlbnRfdHlwZSI6ImNsaWNrIn0="}}]}""")
+      .toDF("value").write.text(dir)
+    val payload = org.apache.spark.sql.types.StructType.fromDDL(
+      "event_id BIGINT, event_type STRING, props STRING")
+    val hop = graft.streaming.Pipeline.route(
+        graft.streaming.Pipeline.ingestEnvelopes(spark.read.text(dir), "value")
+          .select(org.apache.spark.sql.functions.from_json(col("payload"), payload).as("e"))
+          .select("e.*"))
+      .select(col("event_id"), col("route"))
+    assert(envelopeParses(hop) == 1, hop.queryExecution.executedPlan)
+    assert(hop.collect().map(r => (r.getLong(0), r.getString(1))).toSeq == Seq(1L -> "analytics"))
   }
 }
+
+object PlanLintSpec {
+  /** Walks a physical plan through its adaptive wrapper and query stages. */
+  val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+}
+

@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * core-count repartition written into an operator file, or the deleted
   * `graft.ops.Par` helper coming back, would be a second mechanism for
   * the same job. Sessions are built in ONE place too: static confs such
-  * as the generated-class cache size only take effect at session build.
+  * as the generated-class cache size only take effect at session build,
+  * and so does the file system (Hadoop caches one per scheme per JVM).
   * Every eager checkpoint says why it is there: a cut is a blocking job
   * and a lineage a lost executor cannot replay, so one that no longer
   * has a reason should go.
@@ -48,6 +49,15 @@ class SourceLintSpec extends AnyFunSuite {
       builder.findFirstIn(_).nonEmpty).partition(_.startsWith(engine))
     assert(own.nonEmpty, s"no SparkSession.builder found in $engine")
     assert(others.isEmpty, "SparkSession.builder outside EngineSession:\n" + others.mkString("\n"))
+  }
+
+  test("only EngineSession sets Hadoop confs or file-system implementations") {
+    val hadoop = "spark\\.hadoop\\.|\\bfs\\.[\\w.]*\\.impl\\b".r
+    val engine = new java.io.File(mainDir, "EngineSession.scala").getPath + ":"
+    val (own, others) = matches(sources(new java.io.File("src/main/scala")),
+      hadoop.findFirstIn(_).nonEmpty).partition(_.startsWith(engine))
+    assert(own.nonEmpty, s"no file-system implementation set in $engine")
+    assert(others.isEmpty, "Hadoop conf outside EngineSession:\n" + others.mkString("\n"))
   }
 
   test("every localCheckpoint carries a // reason on its line or the two above") {

@@ -15,22 +15,40 @@ class EtlScaleSpec extends SparkSpec {
 
   test("withRoute: swapping the routing table re-routes without recompiling") {
     import spark.implicits._
+    // behind an exchange, so the routing projection runs in generated code
+    // (a projection over a local relation is folded on the driver)
     val events = Seq("click", "view", "error", "refund")
       .zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("event_id", "event_type")
+      .repartition(2)
+    def routes(rules: Seq[(String, String)], fallback: String) =
+      Etl.withRoute(events, rules, fallback).select("event_type", "route")
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    def compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     // default table: click/view → analytics, error → errors, unmapped → default
-    val def_ = Etl.withRoute(events).select("event_type", "route")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val def_ = routes(Etl.DefaultRoutes, Etl.DefaultStream)
     assert(def_ == Map("click" -> "analytics", "view" -> "analytics",
       "error" -> "errors", "refund" -> "default"))
-    // swapped table: clicks isolated, refunds mapped, new fallback
-    val custom = Etl.withRoute(events,
-        rules = Seq("click" -> "clickstream", "refund" -> "finance"),
-        fallback = "other")
-      .select("event_type", "route")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    // swapped table: clicks isolated, refunds mapped, new fallback. The
+    // table and the fallback are referenced literals in the generated
+    // code, so the warm class serves the new table as it is.
+    val c0 = compiles
+    val custom = routes(Seq("click" -> "clickstream", "refund" -> "finance"), "other")
     assert(custom == Map("click" -> "clickstream", "refund" -> "finance",
       "view" -> "other", "error" -> "other"))
+    assert(compiles - c0 == 0, s"the swapped table compiled ${compiles - c0} classes")
+  }
+
+  test("withRoute keeps the USING-join column order and rejects duplicate keys") {
+    import spark.implicits._
+    val df = Seq((1L, "click", 2.0)).toDF("event_id", "event_type", "value")
+    assert(Etl.withRoute(df).columns.toSeq == Seq("event_type", "event_id", "value", "route"))
+    val e = intercept[IllegalArgumentException](
+      Etl.withRoute(df, rules = Seq("click" -> "a", "view" -> "b", "click" -> "c")))
+    assert(e.getMessage.contains("duplicate event_type keys: click"))
+    // a null event type takes the fallback, as an unmatched left join did
+    val nullType = Seq((1L, null: String)).toDF("event_id", "event_type")
+    assert(Etl.withRoute(nullType).select("route").as[String].collect().toSeq == Seq("default"))
   }
 
   test("Pipeline.route applies a custom routing table on a stream") {

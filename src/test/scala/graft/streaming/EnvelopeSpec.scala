@@ -54,4 +54,36 @@ class EnvelopeSpec extends SparkSpec {
     assert(routed.filter(col("route").isNull).isEmpty)
     assert(routed.count() == 50)
   }
+
+  test("envelope edge cases give explode's rows: none for an empty, null or bad envelope") {
+    import spark.implicits._
+    def rec(id: String, kinesis: String) = s"""{"eventID":"$id","kinesis":$kinesis}"""
+    def kin(pk: String, seq: String, data: String) =
+      s"""{"partitionKey":"$pk","sequenceNumber":"$seq","data":"$data"}"""
+    val lines = Seq(
+      """{"Records":[]}""",
+      """{"Records":null}""",
+      "{}",
+      "not json",
+      null,
+      """{"Records":[null]}""",
+      s"""{"Records":[${rec("e1", "null")}]}""",
+      // no base64 character at all: decodes to an empty payload
+      s"""{"Records":[${rec("e2", kin("p", "7", "%%%"))}]}""",
+      s"""{"Records":[${rec("e3", kin("p", "8", "aGVsbG8="))},${rec("e4", kin("q", "9", "d29ybGQ="))}]}""")
+    def rows(ls: Seq[String]) =
+      Pipeline.ingestEnvelopes(ls.toDF("line").repartition(3), "line")
+        .collect().map(r => (0 until 4).map(i => Option(r.getString(i)))).toSet
+    assert(rows(lines) == Set(
+      Seq(None, None, None, None),
+      Seq(Some("e1"), None, None, None),
+      Seq(Some("e2"), Some("p"), Some("7"), Some("")),
+      Seq(Some("e3"), Some("p"), Some("8"), Some("hello")),
+      Seq(Some("e4"), Some("q"), Some("9"), Some("world"))))
+    assert(Pipeline.ingestEnvelopes(lines.toDF("line"), "line").count() == 5)
+    // a payload that is not base64 (9 alphabet characters leave a lone
+    // last unit) fails the query, as it did under explode
+    val bad = s"""{"Records":[${rec("e5", kin("p", "1", "not base64"))}]}"""
+    intercept[org.apache.spark.SparkException](rows(Seq(bad)))
+  }
 }

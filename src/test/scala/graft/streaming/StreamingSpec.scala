@@ -685,8 +685,8 @@ class StreamingSpec extends SparkSpec {
     // Simulate a crash after the sink wrote the newest batch but before its
     // commit was recorded: drop the newest commit-log entry. On restart the
     // offsets log still names that batch, so Structured Streaming re-executes
-    // it with the same batchId — the at-least-once replay the sink's dynamic
-    // partition overwrite must absorb.
+    // it with the same batchId — the at-least-once replay the sink's plain
+    // overwrite of that batch's own `batch_id=N` directory must absorb.
     val newestCommit = JFiles.list(Paths.get(ckpt, "commits")).iterator().asScala
       .filter(_.getFileName.toString.forall(_.isDigit))
       .maxBy(_.getFileName.toString.toLong)
