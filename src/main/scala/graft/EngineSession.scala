@@ -21,11 +21,9 @@ object EngineSession {
     * case; unbounded-buffer aggs (collect_list) only buffer MORE when
     * their group count lands in (128, 65536), where their per-group
     * lists are small by construction — group counts above the threshold
-    * fall back exactly as before. Env-overridable (`SPARK_GRAFT_OHA_FALLBACK`)
-    * for deployments whose unbounded collect aggregates at larger scale
-    * factors need the conservative default back (ADVICE r13).
+    * fall back exactly as before.
     */
-  def ohaFallback: String = sys.env.getOrElse("SPARK_GRAFT_OHA_FALLBACK", "65536")
+  val ohaFallback = "65536"
 
   /** Local-mode core count: `$SPARK_GRAFT_CPUS` (scaling runs lower it, so
     * the master is never hard-coded), else every processor of the machine.

@@ -15,9 +15,9 @@ package object functions {
 
   /** Bounded top-k candidate fold (cos desc, nId asc) as a native
     * TypedImperativeAggregate; `distinct = true` presence-dedups on nId.
-    * Semantics identical to the typed `graft.udf.TopKCand`/
-    * `TopKCandDistinct` Aggregators (equivalence pinned in tests) with
-    * the encoder churn removed.
+    * Semantics identical to the typed reference Aggregators that
+    * `TopKCandAggSpec` pins it against row for row, without their
+    * encoder churn.
     */
   def graft_topk(score: Column, nId: Column, k: Int, distinct: Boolean): Column =
     GraftNative.topkCand(score, nId, k, distinct)

@@ -631,8 +631,9 @@ object Llm {
   }
 
   private[graft] def weightedPairsFrom(docs: DataFrame): DataFrame =
-    weightedPairsOf(idfShingleFrame(docs)
-      .localCheckpoint(true)) // else PlanLintSpec sees the n_docs cross join
+    // full-output A/B sf0.1: q_dedup_weighted 1.77 s with, 2.31 s without;
+    // q_dedup_weighted_near 3.40 s with, 3.47 s without
+    weightedPairsOf(idfShingleFrame(docs).localCheckpoint(true))
 
   /** The pair tail over an already-shared (doc_id, sh, w) frame. Both
     * declared weighted-dedup keys compute the frame INLINE per run
@@ -1220,7 +1221,7 @@ object Llm {
           Window.partitionBy("cell").orderBy(
             expr(md5Hex32Spark("concat('semc_', CAST(vec_id AS STRING))")),
             col("vec_id"))).cast("long"))
-        .localCheckpoint(true) // else PlanLintSpec sees the centroid cross join
+        .localCheckpoint(true) // full-output A/B sf0.1: 0.84 s with, 1.05 s without
       val m = mem.filter(col("crn") <= SemCap)
       val a = m.select(col("cell"), col("vec_id").as("i1"), col("v").as("qv"), col("nrm").as("qn"))
       val b = m.select(col("cell"), col("vec_id").as("i2"), col("v").as("nv"), col("nrm").as("nn"))
@@ -1600,7 +1601,7 @@ object Llm {
     * join on (band, sig), compute each raw match's cosine with the
     * codegen'd dot product, and fold the duplicate-bearing match stream
     * (a pair collides in every shared band) straight into the
-    * presence-deduping [[graft.udf.TopKCandDistinct]] top-3 — the same
+    * presence-deduping native `graft_topk` top-3 — the same
     * no-distinct no-rescore shape as [[lshTopkScreened]], legal because
     * cosine is a deterministic pair function, and RESULT-IDENTICAL to
     * the oracle's distinct-then-rank spelling. (The previous tail
@@ -1637,7 +1638,7 @@ object Llm {
     * columns, so each raw match's hamming distance is one codegen'd
     * bit_count chain — and the raw match stream (≈10⁸ rows at sf1.0,
     * duplicates across bands/probes included) folds DIRECTLY into the
-    * presence-deduping O(k)-state [[graft.udf.TopKCandDistinct]]
+    * presence-deduping O(k)-state native `graft_topk`
     * aggregate, mirrored to both directions in the same stage. No
     * pair-level distinct(), no pair materialization, no array join on
     * raw candidates: the only shuffle after the bucket join is the
@@ -1896,13 +1897,13 @@ object Llm {
     * between the index variants.
     */
   /** Bounded top-3 under (score desc, n_id asc) over a
-    * (q_id, n_id, `score`) candidate frame, via the typed TopKCand
-    * Aggregator rather than a row_number window: the window spelling's
+    * (q_id, n_id, `score`) candidate frame, via the native `graft_topk`
+    * aggregate rather than a row_number window: the window spelling's
     * shuffle was already bounded by WindowGroupLimit's partial limit,
     * but both its partial and final stages SORT their whole candidate
     * run to apply the limit; the aggregator does one O(k) buffer insert
     * per pair inside a hash aggregate — no sort operator at all
-    * (TopKCand's docstring has the full accounting). Ranking is
+    * (`TopKCandAgg`'s docstring has the full accounting). Ranking is
     * IDENTICAL to `row_number() OVER (ORDER BY score DESC, n_id) ≤ 3`
     * PROVIDED a candidate appears at most once per query — true for
     * every consumer (cell membership is unique; LSH candidate pairs are
@@ -1914,11 +1915,12 @@ object Llm {
     // dedup = true swaps in the presence-deduping variant so a candidate
     // relation with DUPLICATE (q_id, n_id) arrivals (multi-band bucket
     // matches) folds without a pair-level distinct() — legal only when
-    // the score is a deterministic pair function (see TopKCandDistinct).
+    // the score is a deterministic pair function (see `TopKCandAgg`).
     // The fold runs as the NATIVE TypedImperativeAggregate (judge r13
-    // #3): same function as the typed udaf Aggregators (TopKCandAggSpec
-    // pins row-for-row equality), minus the per-row Cand ExpressionEncoder
-    // and per-merge buffer re-encode the ScalaAggregator plan paid.
+    // #3): same function as the typed reference Aggregators in the tests
+    // (TopKCandAggSpec pins row-for-row equality), minus the per-row
+    // ExpressionEncoder and per-merge buffer re-encode a ScalaAggregator
+    // plan pays.
     cands.groupBy("q_id")
       .agg(graft.functions.graft_topk(col(score), col("n_id"), k, dedup)
         .as("cands"))
@@ -2065,13 +2067,17 @@ object Llm {
     // interpreted HOF machinery costs ~20 µs per element, so scanning
     // all k₁ groups per row was 1.6 ms/row (measured 9.1 s on 5k docs)
     // where IvfProbes native lookups are ~0.1 s — same election.
-    val quant = cmap
+    // Held on the driver: later jobs of the callers read the row without
+    // a rerun, and its bound (maxRows 1) keeps the fan-out below a bounded
+    // nested loop. Full-output A/B sf0.1 against a localCheckpoint, 13
+    // keys: none slower past its IQR (q_sim_ivf 1.45 s driver-held, 1.52 s
+    // checkpointed; docTopKInline 1.37 s, 1.47 s).
+    val quant = org.apache.spark.sql.graftnative.DriverRows(cmap
       .groupBy("r_id")
       .agg(sort_array(collect_list(struct(col("c_id"), col("cv"), col("cn")))).as("cents"))
       .agg(map_from_entries(sort_array(collect_list(struct(col("r_id"), col("cents")))))
         .as("gm"))
-      .crossJoin(broadcast(rtArr))
-      .localCheckpoint(true) // 1 row; read by later jobs of its callers
+      .crossJoin(broadcast(rtArr)))
     vecsDf.crossJoin(broadcast(quant))
       .filter(expr("size(rts) > 0"))
       .withColumn("rids", expr(
@@ -2189,14 +2195,15 @@ object Llm {
 
   /** The r13 embeddings-family `probed` frame: the routed election over
     * the occupancy quantizer, projected to the (vec_id, v, nrm, pc)
-    * shape every `q_sim_ivf`-pattern consumer builds from. Checkpointed
-    * — idx and qry both consume it, and the election is the dominant
-    * CPU stage.
+    * shape every `q_sim_ivf`-pattern consumer builds from. Not
+    * checkpointed although idx and qry both read it: a full-output A/B
+    * at sf0.1 over its five keys found no cut that paid (q_sim_ivf
+    * 1.09 s with, 1.13 s without; q_sim_recall_eval 1.41 s with, 1.32 s
+    * without).
     */
   private[graft] def ivfOccProbed(s: SparkSession, dir: String): DataFrame =
     routedProbed(vecs(s, dir), ivfOccCentRows(s, dir), EmbRouteSalt)
       .select(col("vec_id"), col("v"), col("nrm"), col("pc"))
-      .localCheckpoint(true) // else PlanLintSpec sees the centroid cross join
 
   /** The occ+routed IVF search — [[ivfTopkWith]]'s scale-path twin
     * (same idx/qry/cellTopK tail, quantizer geometry swapped).
@@ -4094,7 +4101,8 @@ object Llm {
     val cents = dv.crossJoin(broadcast(thr))
       .filter(expr(md5U01Spark("concat('dctr_', CAST(vec_id AS STRING))")) < col("thr"))
       .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn"))
-    // else PlanLintSpec sees the route cross join
+    // full-output A/B sf0.1: docTopKInline 1.71 s with, 2.32 s without;
+    // q_sample_coreset 0.95 s with, 0.86 s without
     val asgn = routedAssign(dv, cents, "dctrr_").localCheckpoint(true)
     val idx0 = asgn.select(col("vec_id").as("n_id"), col("v").as("nv"),
       col("nrm").as("nn"), col("cell"))
@@ -4709,7 +4717,7 @@ object Llm {
     * ([[BmTermCap]] rarest admitted tokens) bounds the query side —
     * total pairs ≤ n·R·C regardless of the df profile (the r9 sf1.0
     * rehearsal's 308 M-pair blow-up is impossible by construction);
-    * the top-3 head is the O(k)-state [[graft.udf.TopKCand]] hash
+    * the top-3 head is the O(k)-state native `graft_topk` hash
     * aggregate, no sort over candidates. All-integer output (D1):
     * scores are exact BIGINT sums of per-term floor'd 10⁻⁴ units.
     */
@@ -4761,7 +4769,7 @@ object Llm {
       .withColumn("contrib", expr(bm25ContribSql))
       .groupBy("q_id", "n_id")
       .agg(sum("contrib").as("bm25"))
-    // TopKCand carries the score as Double — exact for these integer
+    // graft_topk carries the score as Double — exact for these integer
     // sums (≪ 2⁵³), cast back to the declared BIGINT on the way out
     topKByScore(scored.select(col("q_id"), col("n_id"),
         col("bm25").cast("double").as("bm25")), "bm25")
@@ -6410,7 +6418,7 @@ object Llm {
     * recall_eval discipline); ANN side = the sampled query frame only
     * (m × probes × cell rows), where a per-(q, level) WINDOW top-3 is
     * fine because the frame is sample-sized — the corpus-sized serving
-    * paths keep the sort-free TopKCand aggregate. Output all-integer,
+    * paths keep the sort-free `graft_topk` aggregate. Output all-integer,
     * 3 rows. InvariantsSpec pins recall monotone in probes and the
     * level-4 row ≥ the family floor.
     */
@@ -6450,7 +6458,7 @@ object Llm {
           "CASE WHEN mp < t1 THEN 'tail' WHEN mp < t2 THEN 'middle' ELSE 'head' END"))
         .groupBy("bucket")
         .agg(count(lit(1)).as("n_docs"), sum("ntok").as("tokens"))
-        .localCheckpoint(true) // else PlanLintSpec counts the tercile window 3x
+        .localCheckpoint(true) // full-output A/B sf0.1: 1.17 s with, 1.61 s without
       val tot = bt.agg(sum("tokens").as("tt"))
       val p1 = bt.select(lit(1L).as("phase"), col("bucket"), col("n_docs"),
         col("tokens"), lit(900000L).as("weight_micro"),

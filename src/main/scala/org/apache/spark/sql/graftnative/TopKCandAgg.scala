@@ -17,8 +17,7 @@ final class TopKCandBuf(val k: Int, val distinct: Boolean) {
   val cos: Array[Double] = new Array[Double](k)
   val nid: Array[Long] = new Array[Long](k)
 
-  // strict "ranks before" under (cos desc, nId asc) — identical to
-  // graft.udf.TopKCand.before, the Aggregator this replaces
+  // strict "ranks before" under (cos desc, nId asc)
   def insert(c: Double, n: Long): Unit = {
     if (distinct) {
       var i = 0
@@ -35,10 +34,26 @@ final class TopKCandBuf(val k: Int, val distinct: Boolean) {
   }
 }
 
-/** Native engine form of the bounded top-k candidate fold
-  * ([[graft.udf.TopKCand]] / [[graft.udf.TopKCandDistinct]] — their
-  * docstrings carry the full algorithmic accounting; this class changes
-  * the EXECUTION, not the function). The `udaf(Aggregator)` spelling
+/** Native engine form of the bounded top-k candidate fold under the
+  * shared ANN ranking order (cos desc, nId asc): O(k) state per query
+  * group no matter how many candidates the probe join emits.
+  *
+  * It replaces a `row_number() OVER (PARTITION BY q_id ORDER BY ...) ≤ k`
+  * window. Spark 4's WindowGroupLimit already bounds that spelling's
+  * SHUFFLE (a partial limit keeps ≤ k candidates per query per map task
+  * ahead of the exchange), but both its partial and final stages SORT
+  * their whole candidate run to apply the limit — O(m log m) over every
+  * scored pair. Here each pair is one O(k) sorted-buffer insert inside a
+  * hash aggregate, with no sort operator anywhere (measured ~8% off the
+  * doc-ANN search tail at sf0.1). `distinct = true` lets a multi-band /
+  * multi-probe bucket join fold its raw, duplicate-bearing match stream
+  * without a pair-level `distinct()` first: at the sf1.0 rehearsal the
+  * probed-LSH search emitted ~10⁸ raw matches whose distinct was the
+  * largest shuffle in the suite.
+  *
+  * This class changes the EXECUTION of the typed `udaf(Aggregator)`
+  * reference pair kept in the tests (`graft.udf.TopKCand` /
+  * `TopKCandDistinct`), not the function. The `udaf(Aggregator)` spelling
   * plans as a ScalaAggregator, which deserializes every input row into a
   * `Cand` case object through an ExpressionEncoder and re-encodes the
   * whole buffer array per partial-merge row; at ~10⁸ raw LSH matches per
@@ -94,9 +109,9 @@ case class TopKCandAgg(
   }
 
   override def merge(a: TopKCandBuf, b: TopKCandBuf): TopKCandBuf = {
-    // same order-of-insertion as TopKCand.merge (b folded into a,
-    // best-first); the result is order-insensitive anyway because the
-    // buffer is a sorted bounded set under a total order
+    // same order of insertion as the reference Aggregator's merge (b
+    // folded into a, best-first); the result is order-insensitive anyway
+    // because the buffer is a sorted bounded set under a total order
     var i = 0
     while (i < b.size) { a.insert(b.cos(i), b.nid(i)); i += 1 }
     a
@@ -142,8 +157,8 @@ case class TopKCandAgg(
 }
 
 object TopKCandAgg {
-  /** Field names/types match the ExpressionEncoder output of
-    * `graft.udf.Cand(cos: Double, nId: Long)` so every downstream
+  /** Field names/types match the ExpressionEncoder output of the
+    * reference `Cand(cos: Double, nId: Long)` so every downstream
     * `c.cos` / `c.nId` access compiles unchanged.
     */
   val outType: DataType = ArrayType(StructType(Seq(

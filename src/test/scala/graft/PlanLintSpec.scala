@@ -5,204 +5,31 @@ import org.apache.spark.sql.functions.col
 /** Plan lint over the whole declared inventory: no query may compile to an
   * unexpected O(n²) physical join. Guards the scale posture (ARCHITECTURE)
   * against regressions — e.g. a refactor that silently turns an equi-join
-  * into a nested-loop join would fail here, not at 100 TB.
+  * into a nested-loop join would fail here, not at 100 TB. The rule is
+  * structural: a nested loop passes when Catalyst bounds one of its sides,
+  * whatever the query, and only the loops it cannot bound are named.
   */
 class PlanLintSpec extends SparkSpec {
 
-  // Intentional cartesians: region×nation is 125 rows at every SF by
-  // design; tfidf/langid-ngram cross-join a broadcast ≤5-row side;
-  // ann-lsh/ivf/dedup-embed cross-join a ONE-row broadcast (the LSH
-  // hyperplane array / IVF centroid array) — their pair joins proper are
-  // equi-joins, asserted separately below.
-  private val cartesianOk =
-    // q_sim_ivfpq/q_sim_pq are NOT here: their crossJoin(broadcast)s sit
-    // before the eager localCheckpoint, so the returned plan never shows
-    // them — keeping them un-exempted means a refactor that drops the
-    // checkpoint (exposing a real NLJ over the vectors) fails the lint.
-    Set("q_join_cross", "q_text_tfidf", "q_sim_ivf", "q_sim_mips",
-      "q_text_langid_ngram", "q_sim_ann_lsh", "q_sim_ann_lsh_probed",
-      "q_dedup_embed",
-      // 1-row broadcast block-count census (n div BlockOccupancy) fanned
-      // onto the vectors to derive the modulo block key — the r10
-      // occupancy-capped brute-force baseline; the pair join proper is
-      // an equi-join on blk, asserted separately below
-      "q_sim_topk", "q_sim_knn_label",
-      // 1-row broadcast total joined onto already-aggregated skinny rows
-      "q_text_heavy_hitters", "q_text_commonness",
-      // 1-row broadcast reference day (max ts) fanned onto the fact scan;
-      // the decay itself is map-only + one keyed agg
-      "q_agg_decay",
-      // 1-row broadcast global [min,max] span fanned onto the distinct
-      // type list to build the metadata-sized calendar spine
-      "q_etl_gapfill",
-      // 1-row broadcast corpus count feeding the map-only candidate hash
-      "q_sample_negatives",
-      // 1-row broadcast doc count fanned onto the F-row gradient frames
-      // for the integer learning-rate division; the per-doc joins are
-      // broadcast EQUI-joins on f / doc_id
-      "q_curate_lr_step",
-      // same training chain (same 1-row count broadcast) feeding the
-      // map-side keep decision and the ≤|sources| audit agg
-      "q_curate_lr_filter",
-      // 1-row broadcasts (token total, global mean, share totals) fanned
-      // onto the vocab probability frame and the ≤|sources| share frame
-      "q_mix_doremi",
-      // 1-row broadcast budget fanned onto the ≤ 8·|sources| epoch
-      // candidate frame (map-only posexplode, no per-doc join at all)
-      "q_mix_epochs",
-      // 1-row broadcast (max-dims scalar → plane frame) feeding the
-      // map-only JL projection; no per-pair join exists in the query
-      "q_vec_project",
-      // the exact-eval side is BY DESIGN a broadcast-m-queries × corpus
-      // scan (fixed m = 64 target keeps it linear in n); the ANN side's
-      // cell equi-join is asserted separately below
-      "q_sim_recall_eval",
-      // 1-row broadcast totals (n_tok / n_bg / n_docs) joined onto
-      // already-aggregated skinny score rows — the q_text_tfidf shape
-      "q_text_collocations", "q_text_keywords",
-      // the 8 KB bloom bitset is ONE broadcast row fanned onto the fact
-      // scan so the prune filter runs before any exchange; the confirm
-      // join proper is an equi-join, asserted separately below
-      "q_join_bloom_prune",
-      // 1-row broadcast totals census joined onto the ≤ 64-row top-K
-      // vocabulary frame (the q_text_heavy_hitters shape)
-      "q_text_vocab_prune",
-      // 1-row broadcast (tot_docs, tot_w) fanned onto the |sources|-row
-      // census to derive the tempered rates; the per-doc join proper is
-      // a broadcast EQUI-join on source
-      "q_mix_temperature",
-      // 1-row broadcast arrival-batch size (ceil(n/1024)) fanned onto
-      // the events scan to derive each row's arrival batch; the
-      // watermark attach proper is a broadcast EQUI-join on abatch
-      "q_stream_late_drop",
-      // same 1-row arrival-batch-size broadcast as q_stream_late_drop;
-      // the pair join proper is a bucket EQUI-join on (user_id, bk)
-      "q_stream_join",
-      // all-pairs frame over the ≤|days| daily census — a CALENDAR
-      // dimension, constant in corpus size (the q_win_autocorr class);
-      // plus the 1-row (vmax, n_days) broadcast for the slope shift
-      "q_win_theil_sen",
-      // 1-row calendar-bounds broadcast fanned onto the scan for the
-      // cut-day flags (the q_agg_decay class) + the two 1-row census
-      // frames assembled by a scalar cross join (the q_dedup_eval class)
-      "q_split_temporal",
-      // 1-row image-count broadcast onto the ≤7-row bucket census; the
-      // bucket fanout itself is a posexplode of a literal array (no join)
-      "q_multimodal_ar_bucket",
-      // 1-row calendar-bounds broadcast onto the scan for the pre/post
-      // split flags (the q_split_temporal class)
-      "q_agg_cuped",
-      // same 1-row bounds broadcast for the look assignment
-      "q_agg_sequential",
-      // 1-row broadcast (tot_t, tot_r) fanned onto the 1024-row hashed
-      // model; the corpus-sized scoring join is a broadcast EQUI-join
-      // on the feature id, asserted separately below
-      "q_sample_dsir",
-      // 1-row broadcast centroid ARRAY fanned onto the vectors for the
-      // map-only cell assignment — the q_sim_ivf class
-      "q_vec_cluster_purity",
-      // two 1-row metric frames assembled by a scalar cross join
-      "q_dedup_eval",
-      // 1-row broadcast (tot_a, tot_b) fanned onto the vocab-sized
-      // count frame — the q_text_heavy_hitters shape
-      "q_text_drift",
-      // 1-row broadcast total fanned onto the ≤ 64-row bucket census
-      "q_agg_activity_dist",
-      // 1-row broadcasts: token total onto the vocab frame, corpus count
-      // onto the score histogram, and the 1-row (t1, t2) tercile
-      // thresholds fanned onto the checkpointed per-doc score frame for
-      // the map-only bucket compare; the scoring join is a broadcast
-      // EQUI-join on w
-      "q_text_ppl_buckets",
-      // the q_sim_recall_eval class: broadcast-m-queries × corpus exact
-      // arm (fixed m keeps it linear) + 1-row threshold/centroid
-      // broadcasts; the ANN arm's cell join is an equi-join
-      "q_sim_recall_sweep",
-      // 1-row broadcast μ fanned onto the ≤ |days| calendar frame —
-      // the q_agg_activity_dist shape
-      "q_win_cusum",
-      // 1-row broadcast (omn, omx, smn, smx) key ranges fanned onto the
-      // scan for the map-only double binning
-      "q_etl_manifest",
-      // 1-row broadcast φ (total potential) fanned onto the skinny
-      // per-vector d² frame for the map-only hash draw
-      "q_vec_kmeanspp",
-      // two 1-row broadcasts (max |w|, Rayleigh numerator) fanned onto
-      // the 64-row dimension frame
-      "q_vec_pca_step",
-      // 1-row broadcast train-token total onto the scoring stream for
-      // the map-only backoff CASE; the census joins proper are
-      // EQUI-joins on bg/w1/w2
-      "q_text_lm_backoff",
-      // same shape: 1-row N1++(..) broadcast onto the scoring stream;
-      // the census joins proper are EQUI-joins on (w1, w2) / w1 / w2
-      "q_text_lm_kn",
-      // 1-row broadcast corpus-token total onto the token stream; the
-      // census joins proper are EQUI-joins on (source, w) / w / source
-      "q_sample_rho",
-      // 1-row broadcast (mn, mx) score range fanned onto the per-doc
-      // score frame for the map-only bin compare — the ppl_buckets shape
-      "q_curate_calibration",
-      // the shared lrTwoStep training chain's 1-row doc-count broadcast
-      // (the q_curate_lr_step class); the scoring joins are EQUI-joins
-      "q_sample_margin",
-      // the shared commonnessScored/terciles chain's 1-row broadcasts
-      // (token total, corpus count, (t1, t2) thresholds, token budget) —
-      // the q_text_ppl_buckets class
-      "q_mix_anneal",
-      // 1-row broadcast (n_tokens, n_vocab) corpus totals fanned onto
-      // the 1-row least-squares fit
-      "q_text_zipf",
-      // 1-row broadcast edge total fanned onto the <= 64x64 cell census
-      "q_graph_mixing",
-      // 1-row broadcasts: the k-type universe array fanned onto the scan
-      // for the map-only randomized-response flip, and (n, k) onto the
-      // <= k-row census for the debias arithmetic
-      "q_etl_ldp",
-      // 1-row broadcast row total fanned onto the 9-row digit census;
-      // the expectation join is an EQUI-join on digit
-      "q_agg_benford",
-      // 1-row broadcasts (token total, HHI scalar) fanned onto the
-      // <= |sources| mass census and the 1-row output
-      "q_mix_concentration",
-      // the recall_eval class: broadcast-m-queries x corpus shortlist
-      // scan (fixed m keeps it linear); the greedy steps run on the
-      // checkpointed <= m*8-row shortlist
-      "q_sim_mmr",
-      // 1-row broadcast corpus-end timestamp fanned onto the <= |users|
-      // lifetime frame for the censoring flag
-      "q_agg_survival",
-      // 1-row broadcast Neyman weight total fanned onto the
-      // <= |sources| stats frame; the allocation join back onto the
-      // ranked stream is a broadcast EQUI-join on source
-      "q_sample_neyman",
-      // 1-row broadcast edge total fanned onto the <= |communities|
-      // per-community frame for the exact Q numerator arithmetic
-      "q_graph_modularity",
-      // the q_vec_cluster_purity class: 1-row broadcast centroid array
-      // fanned onto the scan for the map-only top-2 cell election
-      "q_vec_silhouette",
-      // 1-row broadcast doc-id range fanned onto the per-doc and
-      // first-occurrence censuses for the 8 value-sliced checkpoints
-      "q_text_heaps",
-      // 1-row broadcast era totals fanned onto the <= |value grid|
-      // histogram for the cross-multiplied CDF gap
-      "q_agg_ks_test",
-      // 1-row broadcast N fanned onto the <= |sources|x|langs| cell
-      // frame for the exact deviation arithmetic
-      "q_agg_chisq",
-      // same census, same 1-row N broadcast (the V^2 normalization view)
-      "q_agg_cramers_v",
-      // 1-row broadcasts ((n, S) totals; the 3-row lag list) fanned
-      // onto the <= |days| daily deviation frame; the lag alignment
-      // itself is a calendar-keyed EQUI-join
-      "q_win_autocorr",
-      // 1-row broadcast (n, S) totals fanned onto the <= |days|
-      // prefix-sum frame for the gain arithmetic
-      "q_win_changepoint",
-      // 1-row broadcast corpus-token total fanned onto the vocab-sized
-      // (source, w) census; the term joins proper are EQUI-joins
-      "q_mix_kl")
+  // A join with no equi-join key runs as a nested loop: every row of one
+  // side meets every row of the other. It stays linear when Catalyst can
+  // bound one side (`maxRows` ≤ [[PlanLintSpec.BoundedSide]]): a global
+  // aggregate's 1-row total, a ≤ 64-row top-K frame. These keys also hold
+  // nested loops whose sides are bounded by the data's design, not by any
+  // operator Catalyst sees, each counted:
+  private val unboundedNestedLoopOk = Map(
+    // region × nation: 5 × 25 rows at every scale factor
+    "q_join_cross" -> 1,
+    // the per-language trigram profiles, one row per language (5), are
+    // broadcast onto the documents
+    "q_text_langid_ngram" -> 1,
+    // the exact arm broadcasts the m sampled queries (m ≈ 64 by the
+    // hash-sample threshold, whatever the corpus size) onto the corpus
+    "q_sim_recall_eval" -> 1,
+    "q_sim_recall_sweep" -> 1,
+    // the all-pairs frame over the ≤ |days| daily census, a calendar
+    // dimension constant in corpus size
+    "q_win_theil_sen" -> 1)
 
   // The SURVEY single-partition-window exemption, now lint instead of
   // prose (judge r8, observation 3): every Window WITHOUT partition keys
@@ -228,9 +55,6 @@ class PlanLintSpec extends SparkSpec {
       "q_text_vocab_prune" -> 1, "q_join_dpp" -> 1,
       "q_text_ppl_buckets" -> 1, "q_mix_epochs" -> 1,
       "q_win_cusum" -> 2,
-      // the shared tercile histogram window (the ppl_buckets bounded
-      // integer-score-grid class)
-      "q_mix_anneal" -> 1,
       // rank window over ONLY the post-TakeOrdered K = 64 vocab rows
       // (the q_text_vocab_prune class)
       "q_text_zipf" -> 1,
@@ -258,8 +82,6 @@ class PlanLintSpec extends SparkSpec {
       // arrival-max census (bounded by construction — the batch count
       // is a constant, not a corpus dimension)
       "q_stream_late_drop" -> 1,
-      // the same 1024-row watermark-trajectory running max
-      "q_stream_join" -> 1,
       // median rank + full-frame count over the ≤|days|² calendar pair
       // frame (two specs — Catalyst may or may not fuse them)
       "q_win_theil_sen" -> 2,
@@ -269,26 +91,56 @@ class PlanLintSpec extends SparkSpec {
   SparkEntry.declared.foreach { q =>
     test(s"${q.name}: no unexpected nested-loop/cartesian join") {
       val qe = q.fn(spark, sf).queryExecution
-      val plan = qe.executedPlan.toString
-      if (!cartesianOk(q.name)) {
-        assert(!plan.contains("CartesianProduct"),
-          s"${q.name} plans a CartesianProduct:\n$plan")
-        assert(!plan.contains("BroadcastNestedLoopJoin"),
-          s"${q.name} plans a BroadcastNestedLoopJoin:\n$plan")
-      }
-      // single-partition-window lint: count partition-less logical
-      // Window nodes (the optimized plan sees through AQE wrapping;
+      val loops = PlanLintSpec.nestedLoops(qe.optimizedPlan)
+      // every physical nested loop is one of the logical joins judged here
+      val physical = PlanLintSpec.physicalNestedLoops(qe.executedPlan)
+      assert(physical == loops.size,
+        s"${q.name}: $physical physical nested loop(s), ${loops.size} keyless logical join(s)\n${qe.executedPlan}")
+      val unbounded = loops.filterNot(PlanLintSpec.linear).size
+      val loopCap = unboundedNestedLoopOk.getOrElse(q.name, 0)
+      assert(unbounded <= loopCap,
+        s"${q.name}: $unbounded nested-loop join(s) with no side of at most " +
+          s"${PlanLintSpec.BoundedSide} rows, declared bound $loopCap\n${qe.optimizedPlan}")
+      assert(loopCap == 0 || unbounded > 0,
+        s"${q.name}: stale exemption, no unbounded nested-loop join left")
+      // single-partition-window lint: count distinct partition-less
+      // logical Window nodes (the optimized plan sees through AQE wrapping;
       // artifact-BUILD windows behind a persisted read are audited by
       // the artifact's own inline-spelling tests)
-      val unparted = qe.optimizedPlan.collect {
-        case w: org.apache.spark.sql.catalyst.plans.logical.Window
-          if w.partitionSpec.isEmpty => w
-      }.size
+      val unparted = PlanLintSpec.unpartitionedWindows(qe.optimizedPlan)
       val cap = unpartitionedWindowOk.getOrElse(q.name, 0)
       assert(unparted <= cap,
         s"${q.name}: $unparted partition-less window(s), declared bound $cap — " +
           s"a new unbounded single-task window site?\n${qe.optimizedPlan}")
+      assert(cap == 0 || unparted > 0,
+        s"${q.name}: stale exemption, no partition-less window left")
     }
+  }
+
+  test("the nested-loop rule flags a join of two unbounded sides, not a bounded fan-out") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{broadcast, count, lit, row_number}
+    def unbounded(df: org.apache.spark.sql.DataFrame): Int =
+      PlanLintSpec.nestedLoops(df.queryExecution.optimizedPlan).filterNot(PlanLintSpec.linear).size
+    val a = spark.range(1000).toDF("x")
+    val b = spark.range(1000).toDF("y")
+    assert(unbounded(a.crossJoin(b)) == 1)
+    assert(unbounded(a.join(b, col("x") < col("y"))) == 1)
+    val total = b.agg(count(lit(1)).as("n"))
+    val fanOut = a.crossJoin(broadcast(total))
+    assert(unbounded(fanOut) == 0)
+    assert(PlanLintSpec.nestedLoops(fanOut.queryExecution.optimizedPlan).size == 1 &&
+      PlanLintSpec.physicalNestedLoops(fanOut.queryExecution.executedPlan) == 1)
+    // one window read by two consumers of one action counts once
+    val w = a.withColumn("r", row_number().over(Window.orderBy("x")))
+    val twice = w.filter(col("x") < 10).unionByName(w.filter(col("x") > 990))
+    assert(PlanLintSpec.unpartitionedWindows(twice.queryExecution.optimizedPlan) == 1)
+  }
+
+  test("every lint exemption names a declared key") {
+    val names = SparkEntry.declared.map(_.name).toSet
+    val unknown = (unboundedNestedLoopOk.keySet ++ unpartitionedWindowOk.keySet) -- names
+    assert(unknown.isEmpty, s"exemptions for undeclared keys: $unknown")
   }
 
   test("a byte-light exchange keeps core width under EngineSession.tune") {
@@ -353,10 +205,9 @@ class PlanLintSpec extends SparkSpec {
         .findFirstIn(plan).isDefined,
         s"$name must equi-join on the (band, sig) bucket key:\n$plan")
     }
-    // the brute-force baseline arm is exempted from the blanket NLJ lint
-    // (its 1-row block-count census is a legitimate broadcast fanout),
-    // so pin its pair-bounding structure here instead: the vector pair
-    // join must be an equi-join on the modulo block key
+    // the brute-force baseline arm fans its 1-row block-count census out
+    // onto the vectors; its vector pair join must be an equi-join on the
+    // modulo block key
     Seq("q_sim_topk", "q_sim_knn_label").foreach { name =>
       val plan = SparkEntry.queries(name)(spark, sf)
         .queryExecution.executedPlan.toString
@@ -807,7 +658,38 @@ class PlanLintSpec extends SparkSpec {
 }
 
 object PlanLintSpec {
+  import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
+  import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Window}
+  import org.apache.spark.sql.execution.SparkPlan
+  import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+
   /** Walks a physical plan through its adaptive wrapper and query stages. */
   val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+
+  /** The largest side a nested-loop join may have and stay linear. */
+  val BoundedSide = 64L
+
+  /** The joins with no equi-join key, subqueries included: each one plans
+    * as a `BroadcastNestedLoopJoin` or a `CartesianProduct`.
+    */
+  def nestedLoops(plan: LogicalPlan): Seq[Join] = plan.collectWithSubqueries {
+    case j: Join if ExtractEquiJoinKeys.unapply(j).isEmpty => j
+  }
+
+  /** A nested loop is linear in its other side when Catalyst bounds one side. */
+  def linear(j: Join): Boolean =
+    Seq(j.left, j.right).exists(_.maxRows.exists(_ <= BoundedSide))
+
+  /** Physical nested-loop joins, through AQE stages and subqueries. */
+  def physicalNestedLoops(plan: SparkPlan): Int = aqe.collectWithSubqueries(plan) {
+    case j @ (_: BroadcastNestedLoopJoinExec | _: CartesianProductExec) => j
+  }.size
+
+  /** Distinct partition-less windows: a window that several consumers of
+    * one action read is one node of work, however often the plan repeats it.
+    */
+  def unpartitionedWindows(plan: LogicalPlan): Int = plan.collect {
+    case w: Window if w.partitionSpec.isEmpty => w.canonicalized
+  }.distinct.size
 }
 

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * and so does the file system (Hadoop caches one per scheme per JVM).
   * Every eager checkpoint says why it is there: a cut is a blocking job
   * and a lineage a lost executor cannot replay, so one that no longer
-  * has a reason should go.
+  * has a reason should go, and hiding a join from `PlanLintSpec` is not
+  * a reason.
   */
 class SourceLintSpec extends AnyFunSuite {
 
@@ -61,11 +62,16 @@ class SourceLintSpec extends AnyFunSuite {
   }
 
   test("every localCheckpoint carries a // reason on its line or the two above") {
+    // a reason that names the plan lint is no reason: the lint judges a
+    // nested loop by its bounded side, so hiding a join from it buys nothing
     val unexplained = sources(new java.io.File("src/main/scala")).flatMap { f =>
       val lines = scala.util.Using.resource(scala.io.Source.fromFile(f, "UTF-8"))(_.getLines().toVector)
       lines.indices.collect {
-        case i if lines(i).contains(".localCheckpoint(") &&
-            !lines.slice(math.max(0, i - 2), i + 1).exists(_.contains("//")) =>
+        case i if lines(i).contains(".localCheckpoint(") && {
+            val reasons = lines.slice(math.max(0, i - 2), i + 1).filter(_.contains("//"))
+              .map(l => l.substring(l.indexOf("//")))
+            reasons.isEmpty || reasons.exists(_.contains("PlanLintSpec"))
+          } =>
           s"${f.getPath}:${i + 1}: ${lines(i).trim}"
       }
     }
