@@ -1,9 +1,10 @@
 package graft.ops
 
-import graft.Q
+import graft.{Artifacts, Q}
 import graft.sources.Partitioned
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** SURVEY §2.11 addendum — the ANN index build → persist → serve
   * lifecycle. The inline `q_sim_*` queries rebuild their index per query;
@@ -55,103 +56,12 @@ object AnnIndex {
     */
   private val RagReplaySample = 32
 
-  /** Deterministic per-corpus location of the persisted index. Lives
-    * under java.io.tmpdir keyed by a digest of the source dir: the
-    * lifecycle is (re)derivable from the corpus alone, and concurrent
-    * SFs never collide.
-    *
-    * Concurrency contract: SINGLE WRITER per corpus. The lifecycle ops
-    * rewrite this shared path in place (static overwrite, then marker
-    * commit), so two concurrent processes serving the same corpus would
-    * race a writeStatic against the other's read-back — fine under this
-    * harness's sequential execution, but a production deployment must
-    * version generations (write to a unique path, flip a pointer
-    * atomically) or take a lock before rebuilding.
+  /** Per-corpus location of the persisted index ([[graft.Artifacts.path]],
+    * whose doc states the single-writer contract); the lifecycle's other
+    * artifacts sit beside it under suffixes (`_upd`, `_cmp`, `_rag`,
+    * `_tomb`, `_cents`).
     */
-  private[graft] def indexPath(dir: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val h = md.digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    s"${System.getProperty("java.io.tmpdir")}/graft_ann_index_$h"
-  }
-
-  /** Cheap content fingerprint of the corpus the artifact derives from:
-    * (name, byte length, mtime) of the embeddings parquet file(s). The
-    * reuse guard ([[ensureIndex]]) keys on this, NOT on mere path
-    * existence — a fixture regenerated in place (same dir, new bytes)
-    * invalidates the artifact exactly as it should, while repeated
-    * queries over an unchanged corpus skip the rebuild and pay only the
-    * read path their names claim to measure.
-    */
-  private[graft] def fingerprint(dir: String, table: String = "embeddings.parquet"): String = {
-    val f = new java.io.File(dir, table)
-    val parts = Option(f.listFiles()).map(_.toSeq).getOrElse(Seq(f))
-      .map(p => s"${p.getName}:${p.length}:${p.lastModified}").sorted
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.digest(parts.mkString("|").getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
-
-  /** Marker committed AFTER a successful build: corpus fingerprint +
-    * the written schema's DDL (read-backs must never depend on parquet
-    * inference — an empty-sample index directory has no files to infer
-    * from). Build-then-commit ordering means a crashed build leaves a
-    * stale or absent marker, never a marker pointing at a half-written
-    * artifact.
-    *
-    * The commit itself is write-temp-then-ATOMIC_MOVE: a reader
-    * concurrent with a commit sees either the old marker or the new
-    * one, never a torn half-written file (readAllLines of a partial
-    * marker could otherwise pass the fingerprint check with a
-    * truncated schema DDL). This makes the marker file itself safe
-    * under the single-WRITER contract ([[indexPath]]) even with
-    * concurrent READERS; two concurrent writers still need the
-    * versioned-generation scheme the docstring above prescribes.
-    */
-  private[graft] def commitMarker(path: String, fp: String,
-      schema: org.apache.spark.sql.types.StructType): Unit = {
-    val tmp = java.nio.file.Paths.get(path + ".marker.tmp")
-    java.nio.file.Files.write(tmp, s"$fp\n${schema.toDDL}".getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp, java.nio.file.Paths.get(path + ".marker"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  private[graft] def freshArtifact(path: String, fp: String): Option[org.apache.spark.sql.types.StructType] = {
-    val m = new java.io.File(path + ".marker")
-    if (!m.exists()) None
-    else {
-      val lines = java.nio.file.Files.readAllLines(m.toPath)
-      if (lines.size >= 2 && lines.get(0) == fp)
-        Some(org.apache.spark.sql.types.StructType.fromDDL(lines.get(1)))
-      else None
-    }
-  }
-
-  /** Per-session memo of IMMUTABLE digest-guarded artifact reads — the
-    * [[graft.Tables]] metadata-cache rationale applied to the per-corpus
-    * derived artifacts (shpairs, graph edges): `spark.read.parquet` pays
-    * ~65-90 ms of listing + footer work per call, and every consumer of a
-    * fingerprint-fresh artifact re-paid it per query per bench pass. Keyed
-    * on (path, fingerprint): a regenerated fixture changes the
-    * fingerprint, so a stale frame can never serve. ONLY for artifacts
-    * whose path is written once per fingerprint — the mutable index
-    * lifecycle paths (update/append/compact/delete generations,
-    * tombstones) must keep re-reading.
-    */
-  private val artifactReadCache =
-    new scala.collection.concurrent.TrieMap[
-      String,
-      scala.collection.concurrent.TrieMap[(String, String), DataFrame]]()
-
-  private[graft] def readImmutable(s: SparkSession, path: String, fp: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    // keyed on the session UUID string, not the session object — see the
-    // graft.Tables metaCache doc (the WeakHashMap-on-session spelling
-    // could never evict because the cached frames reference the session)
-    val m = artifactReadCache.getOrElseUpdate(
-      org.apache.spark.sql.graftnative.SessionUid.of(s),
-      scala.collection.concurrent.TrieMap.empty)
-    m.getOrElseUpdate((path, fp), s.read.schema(schema).parquet(path))
-  }
+  private[graft] def indexPath(dir: String): String = Artifacts.path(dir, "ann_index")
 
   /** Routed cell assignment shared by every lifecycle op: one row per
     * input vector — (vec_id, v, nrm, cell, probes) — via the
@@ -174,6 +84,10 @@ object AnnIndex {
     * against the new oracle.
     */
   private val IdxGeomVer = "occr1-"
+
+  /** Freshness fingerprint of every embeddings-lifecycle artifact. */
+  private def idxFp(dir: String): String =
+    IdxGeomVer + Artifacts.fingerprint(dir, "embeddings.parquet")
 
   /** Directory-bucketing of the cell id for the partitioned layouts:
     * under the occupancy rule the cell COUNT grows as n/S — no longer a
@@ -204,42 +118,39 @@ object AnnIndex {
     * so read-backs never depend on inference: an empty centroid sample
     * (P ≈ (1−1/√n)ⁿ, corpus-dependent) writes zero parquet files, and a
     * schema-less read of that directory throws where the oracle returns
-    * an empty result.
+    * an empty result. `q_ann_index_build` calls this unconditionally:
+    * building is the work its name claims to measure.
     */
-  private[graft] def writeIndex(s: SparkSession, dir: String): (String, org.apache.spark.sql.types.StructType) = {
+  private[graft] def writeIndex(s: SparkSession, dir: String): (String, StructType) = {
     val path = indexPath(dir)
+    (path, Artifacts.rebuild(path, idxFp(dir))(buildIndex(s, dir, path)))
+  }
+
+  /** Digest-guarded reuse: the persisted index if its marker matches the
+    * corpus fingerprint, rebuilt otherwise. This is what the SERVE-side
+    * ops call — a pure function of the corpus either way, but the
+    * steady-state cost becomes the search tail rather than a rebuild
+    * per query.
+    */
+  private[graft] def ensureIndex(s: SparkSession, dir: String): (String, StructType) = {
+    val path = indexPath(dir)
+    (path, Artifacts.ensure(path, idxFp(dir))(buildIndex(s, dir, path)))
+  }
+
+  private def buildIndex(s: SparkSession, dir: String, path: String): StructType = {
     // ONE centroid aggregation feeds both the assignment broadcast and
-    // the persisted quantizer (the writeUpdArtifact materialize-once
-    // rule; without the checkpoint the _cents write below re-runs the
-    // whole corpus sample)
+    // the persisted quantizer (the writeUpdBase materialize-once rule;
+    // without the checkpoint the _cents write below re-runs the whole
+    // corpus sample)
     val cents = Llm.ivfOccCentRows(s, dir).localCheckpoint(true)
     val df = withCellPart(assignCells(Llm.vecs(s, dir), cents, Llm.EmbRouteSalt))
-    // invalidate-before-truncate: a crash between here and the marker
-    // commit leaves NO marker, never one pointing at a half-written path
-    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(path + ".marker"))
     Partitioned.writeStatic(df, path, maxRecordsPerFile = 1 << 18, "cell_part")
     // the coarse quantizer is part of the index (Faiss persists it the
     // same way): without the centroid rows on storage, a NEW query
     // vector could not be probe-assigned without the corpus — the
     // online-serve path ([[serveBatch]]) reads it back instead
     cents.write.mode("overwrite").parquet(path + "_cents")
-    commitMarker(path, IdxGeomVer + fingerprint(dir), df.schema)
-    (path, df.schema)
-  }
-
-  /** Digest-guarded reuse: return the persisted index if its marker
-    * matches the corpus fingerprint, rebuild otherwise. This is what the
-    * SERVE-side ops call — a pure function of the corpus either way, but
-    * the steady-state cost becomes the search tail rather than a rebuild
-    * per query (`q_ann_index_build` keeps calling [[writeIndex]]
-    * unconditionally: building is the work its name claims to measure).
-    */
-  private[graft] def ensureIndex(s: SparkSession, dir: String): (String, org.apache.spark.sql.types.StructType) = {
-    val path = indexPath(dir)
-    freshArtifact(path, IdxGeomVer + fingerprint(dir)) match {
-      case Some(schema) => (path, schema)
-      case None => writeIndex(s, dir)
-    }
+    df.schema
   }
 
   /** Online serve: top-3 neighbors for a batch of NEW query vectors
@@ -265,7 +176,7 @@ object AnnIndex {
     * silently lose that one (valid) neighbor.
     */
   private[graft] def serveBatch(s: SparkSession, queries: DataFrame,
-      path: String, schema: org.apache.spark.sql.types.StructType,
+      path: String, schema: StructType,
       applyTombstones: Boolean = false): DataFrame = {
     val cents = s.read.parquet(path + "_cents")
     val qv = queries
@@ -360,19 +271,8 @@ object AnnIndex {
     */
   private val UpdRouteSalt = "annur_"
 
-  /** The update lifecycle's artifact: base generation written static,
-    * delta generation APPENDED — a two-generation cell-partitioned
-    * table. Shared by `q_ann_index_update` (inventory of the appended
-    * state) and `q_ann_index_compact` (the re-pack job over it).
-    *
-    * The base generation is written with a STATIC overwrite (whole-path
-    * truncate) each run so the declared queries stay pure functions of
-    * the corpus: with a dynamic overwrite, a cell that received only
-    * delta rows (possible when two centroids tie at 4dp-rounded cosine)
-    * would keep its stale delta files across runs and the append would
-    * double them — the determinism double-run gate would catch exactly
-    * that.
-    */
+  private def updPath(dir: String): String = indexPath(dir) + "_upd"
+
   /** Base-generation half of the update lifecycle: writes the ~90% base
     * split static (whole-path truncate — see [[writeUpdArtifact]] for
     * why) and persists the FROZEN coarse quantizer beside it, exactly as
@@ -380,10 +280,11 @@ object AnnIndex {
     * path, the written schema, and the held-out incoming batch
     * (vec_id, v, nrm) so callers drive the append themselves — the batch
     * op appends it whole, the streaming twin feeds it through
-    * [[appendBatch]] in micro-batches.
+    * [[appendBatch]] in micro-batches. The artifact stays invalidated
+    * (no marker) until a caller commits it.
     */
-  private[graft] def writeUpdBase(s: SparkSession, dir: String): (String, org.apache.spark.sql.types.StructType, DataFrame) = {
-    val path = indexPath(dir) + "_upd"
+  private[graft] def writeUpdBase(s: SparkSession, dir: String): (String, StructType, DataFrame) = {
+    val path = updPath(dir)
     // materialize-once: the write actions would otherwise each re-run
     // the corpus scan + split hash, and the centroid aggregation is
     // embedded in every assignment plan via the broadcast —
@@ -393,8 +294,7 @@ object AnnIndex {
     val cents = baseCentRows(sp).localCheckpoint(true)
     val base = withCellPart(assignCells(sp.filter(col("is_base")), cents, UpdRouteSalt)
       .withColumn("gen", lit("base")))
-    // invalidate-before-truncate, as in writeIndex
-    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(path + ".marker"))
+    Artifacts.invalidate(path)
     Partitioned.writeStatic(base, path, 1 << 18, "cell_part")
     cents.write.mode("overwrite").parquet(path + "_cents")
     (path, base.schema, sp.filter(!col("is_base")).select("vec_id", "v", "nrm"))
@@ -415,25 +315,26 @@ object AnnIndex {
     Partitioned.append(delta, path, 1 << 18, "cell_part")
   }
 
-  private def writeUpdArtifact(s: SparkSession, dir: String): (String, org.apache.spark.sql.types.StructType) = {
+  /** The update lifecycle's artifact: base generation written static,
+    * delta generation APPENDED — a two-generation cell-partitioned
+    * table, returned as its written schema. Shared by
+    * `q_ann_index_update` (inventory of the appended state, rebuilt
+    * every run) and `q_ann_index_compact` (the re-pack job over it,
+    * reusing a fresh one: the marker is committed only after the append
+    * landed).
+    *
+    * The base generation is written with a STATIC overwrite (whole-path
+    * truncate) each run so the declared queries stay pure functions of
+    * the corpus: with a dynamic overwrite, a cell that received only
+    * delta rows (possible when two centroids tie at 4dp-rounded cosine)
+    * would keep its stale delta files across runs and the append would
+    * double them — the determinism double-run gate would catch exactly
+    * that.
+    */
+  private def writeUpdArtifact(s: SparkSession, dir: String): StructType = {
     val (path, schema, incoming) = writeUpdBase(s, dir)
     appendBatch(s, incoming, path)
-    commitMarker(path, IdxGeomVer + fingerprint(dir), schema)
-    (path, schema)
-  }
-
-  /** Digest-guarded reuse of the two-generation update artifact — the
-    * compaction op's input. Reuse is safe here because
-    * [[writeUpdArtifact]]'s base write truncates the whole path before
-    * the single delta append (run-twice ≡ run-once), and the marker is
-    * committed only after the append landed.
-    */
-  private def ensureUpdArtifact(s: SparkSession, dir: String): (String, org.apache.spark.sql.types.StructType) = {
-    val path = indexPath(dir) + "_upd"
-    freshArtifact(path, IdxGeomVer + fingerprint(dir)) match {
-      case Some(schema) => (path, schema)
-      case None => writeUpdArtifact(s, dir)
-    }
+    schema
   }
 
   /** Incremental index maintenance — the batch-ingest half of the
@@ -450,7 +351,8 @@ object AnnIndex {
   private val qAnnIndexUpdate = Q(
     "q_ann_index_update",
     (s, dir) => {
-      val (path, schema) = writeUpdArtifact(s, dir)
+      val path = updPath(dir)
+      val schema = Artifacts.rebuild(path, idxFp(dir))(writeUpdArtifact(s, dir))
       s.read.schema(schema).parquet(path)
         .groupBy("cell")
         .agg(sum(when(col("gen") === "base", 1L).otherwise(0L)).as("n_base"),
@@ -493,7 +395,8 @@ object AnnIndex {
       // reuse the update artifact when fresh (digest-guarded): the work
       // this op's name claims — and what its bench number should cost —
       // is the re-pack, not a rebuild of its input
-      val (upd, schema) = ensureUpdArtifact(s, dir)
+      val upd = updPath(dir)
+      val schema = Artifacts.ensure(upd, idxFp(dir))(writeUpdArtifact(s, dir))
       val cpath = indexPath(dir) + "_cmp"
       val merged = s.read.schema(schema).parquet(upd)
         .withColumn("gen", lit("base")).repartition(col("cell_part"))
@@ -528,9 +431,17 @@ object AnnIndex {
   private def occCentsFlat(vecsDf: DataFrame, salt: String): DataFrame =
     Llm.occCentRows(vecsDf, salt)
 
-  /** Build + persist the CHUNK index: `q_text_chunk`'s tiling,
-    * featurized per chunk ([[Llm.chunkVec]]), cell-partitioned under its
-    * own OCCUPANCY-driven coarse quantizer (salt ragc_; thr =
+  /** Geometry version folded into the chunk-index fingerprint: the
+    * artifact is a pure function of (corpus, quantizer RULE), and the
+    * r12 occupancy+route change is exactly a rule change — without this
+    * tag a pre-change /tmp artifact would serve stale √n-cell results
+    * against the new oracle.
+    */
+  private val RagGeomVer = "occ2l64-"
+
+  /** The persisted CHUNK index, built when stale: `q_text_chunk`'s
+    * tiling, featurized per chunk ([[Llm.chunkVec]]), cell-partitioned
+    * under its own OCCUPANCY-driven coarse quantizer (salt ragc_; thr =
     * GREATEST(1/CellTarget, 1/√n)) with the ROUTED two-level assignment
     * ([[Llm.routedAssign]], route salt ragr_) — cell load pins at
     * ~CellTarget beyond the S² crossover so the per-query serve cost
@@ -541,34 +452,18 @@ object AnnIndex {
     * The freshness fingerprint keys on documents.parquet — the corpus
     * this artifact actually derives from.
     */
-  /** Geometry version folded into the chunk-index fingerprint: the
-    * artifact is a pure function of (corpus, quantizer RULE), and the
-    * r12 occupancy+route change is exactly a rule change — without this
-    * tag a pre-change /tmp artifact would serve stale √n-cell results
-    * against the new oracle.
-    */
-  private val RagGeomVer = "occ2l64-"
-
-  private[graft] def writeRagIndex(s: SparkSession, dir: String): (String, org.apache.spark.sql.types.StructType) = {
+  private def ensureRagIndex(s: SparkSession, dir: String): (String, StructType) = {
     val path = indexPath(dir) + "_rag"
-    // feeds two actions: cents' checkpoint, the write
-    val cv = Llm.chunkVec(s, dir).localCheckpoint(true)
-    // feeds two actions: the route checkpoint, the write
-    val cents = occCentsFlat(cv, "ragc_").localCheckpoint(true)
-    val df = withCellPart(Llm.routedAssign(cv, cents, "ragr_"))
-    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(path + ".marker"))
-    Partitioned.writeStatic(df, path, 1 << 18, "cell_part")
-    cents.write.mode("overwrite").parquet(path + "_cents")
-    commitMarker(path, RagGeomVer + fingerprint(dir, "documents.parquet"), df.schema)
-    (path, df.schema)
-  }
-
-  private def ensureRagIndex(s: SparkSession, dir: String): (String, org.apache.spark.sql.types.StructType) = {
-    val path = indexPath(dir) + "_rag"
-    freshArtifact(path, RagGeomVer + fingerprint(dir, "documents.parquet")) match {
-      case Some(schema) => (path, schema)
-      case None => writeRagIndex(s, dir)
-    }
+    (path, Artifacts.ensure(path, RagGeomVer + Artifacts.fingerprint(dir, "documents.parquet")) {
+      // feeds two actions: cents' checkpoint, the write
+      val cv = Llm.chunkVec(s, dir).localCheckpoint(true)
+      // feeds two actions: the route checkpoint, the write
+      val cents = occCentsFlat(cv, "ragc_").localCheckpoint(true)
+      val df = withCellPart(Llm.routedAssign(cv, cents, "ragr_"))
+      Partitioned.writeStatic(df, path, 1 << 18, "cell_part")
+      cents.write.mode("overwrite").parquet(path + "_cents")
+      df.schema
+    })
   }
 
   /** Chunk-level retrieval — the operator a RAG / near-dup pipeline

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{Artifacts, Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1077,9 +1077,9 @@ object Etl {
     * long-lived pipeline hits: an old producer wrote (doc_id, lang), a new
     * one added (source, n_chars). The corpus hash-splits into the two
     * generations, each written as REAL parquet with its own schema
-    * (static overwrite under a corpus-fingerprint tmp path — the same
-    * single-writer artifact convention as the ANN index), then read back
-    * through ONE `mergeSchema` scan whose unified schema fills the old
+    * (static overwrite under the per-corpus [[Artifacts.path]],
+    * single writer like every artifact), then read back through ONE
+    * `mergeSchema` scan whose unified schema fills the old
     * generation's missing columns with NULL. Output is the per-column
     * fill-rate audit (n_rows, n_filled) the oracle computes independently
     * from the base table — so what's pinned is the MERGED READ's NULL
@@ -1094,15 +1094,7 @@ object Etl {
     "q_etl_schema_evolve",
     (s, dir) => {
       val docs = Tables(s, dir, "documents")
-      val fp = {
-        val f = new java.io.File(dir, "documents.parquet")
-        val parts = Option(f.listFiles()).map(_.toSeq).getOrElse(Seq(f))
-          .map(p => s"${p.getName}:${p.length}:${p.lastModified}").sorted
-        java.security.MessageDigest.getInstance("MD5")
-          .digest(parts.mkString("|").getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString.take(12)
-      }
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_schema_evolve_$fp"
+      val base = Artifacts.path(dir, "schema_evolve")
       docs.filter(col("doc_id") % 2 === 0).select("doc_id", "lang")
         .write.mode("overwrite").parquet(s"$base/gen1")
       docs.filter(col("doc_id") % 2 === 1)
@@ -1276,9 +1268,7 @@ object Etl {
                    + shiftleft(shiftright(y16, i) & 1L, 2 * i + 1))"""))
         .withColumn("zb", expr("z div 67108864L")) // top 6 of 32 z bits
         .select(col("zb"), col("o_orderkey"), col("o_custkey"), col("day"))
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val h = md.digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_zorder_$h"
+      val path = Artifacts.path(dir, "zorder")
       // each zb lands wholly in one task: one file per zb directory
       graft.sources.Partitioned.writeStatic(
         z.repartition(col("zb")), path, 1 << 18, "zb")

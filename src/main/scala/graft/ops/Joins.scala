@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{Artifacts, Q, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -425,28 +425,14 @@ object Joins {
     */
   private val BucketN = 16
 
-  /** Content fingerprint of the two join inputs (file name/len/mtime — the
-    * AnnIndex reuse-guard convention): bucketed tables are keyed by it, so
-    * a regenerated fixture invalidates the layout while an unchanged one
-    * reuses it and the query measures the JOIN, not the one-time layout
-    * build. Single-writer-per-corpus, like every artifact here.
-    */
-  private def bucketFp(dir: String): String = {
-    val files = Seq("lineitem.parquet", "orders.parquet").flatMap { t =>
-      val f = new java.io.File(dir, t)
-      Option(f.listFiles()).map(_.toSeq).getOrElse(Seq(f))
-    }.map(p => s"${p.getName}:${p.length}:${p.lastModified}").sorted
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(files.mkString("|").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-  }
-
   /** The production answer to the workload's one genuinely large-large
     * join (lineitem ⋈ orders on orderkey), DECLARED as a query: both
     * sides are persisted bucketed+sorted on the join key
-    * (`sources.Bucketed`, external tables under tmpdir keyed by corpus
-    * fingerprint), after which the join itself plans as a SortMergeJoin
-    * directly over the bucketed scans — NO shuffle exchange on either
+    * (`sources.Bucketed`, external tables named and placed by the content
+    * fingerprint of both inputs, so a regenerated fixture gets a new
+    * layout and an unchanged one is reused: the query measures the JOIN,
+    * not the one-time layout build), after which the join itself plans
+    * as a SortMergeJoin directly over the bucketed scans — NO shuffle exchange on either
     * join key (PlanLintSpec pins exactly that). At 100 TB this is the
     * difference between re-shuffling terabytes per query and a
     * metadata-only co-location guarantee amortized across every query
@@ -459,10 +445,11 @@ object Joins {
   private val qJoinBucketColocated = Q(
     "q_join_bucket_colocated",
     (s, dir) => {
-      val fp = bucketFp(dir)
+      // freshness is the catalog's: Bucketed.join reads the tables by name
+      val fp = Artifacts.fingerprint(dir, "lineitem.parquet", "orders.parquet").take(12)
       val lt = s"graft_bkt_li_$fp"
       val ot = s"graft_bkt_ord_$fp"
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_bucketed_$fp"
+      val base = Artifacts.path(dir, s"bucketed_$fp")
       if (!s.catalog.tableExists(lt))
         graft.sources.Bucketed.write(
           Tables(s, dir, "lineitem").select("l_orderkey", "l_partkey", "l_quantity"),

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{Artifacts, Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -273,44 +273,25 @@ object Llm {
     * negligible, and the DuckDB oracle would catch it).
     */
   /** The df-capped shared-shingle pair frame (d1, d2, inter, n1, n2,
-    * jac) PERSISTED once per corpus and reused (the featurizeVec /
-    * sparseEdges / AnnIndex digest-guard pattern: documents.parquet
-    * content fingerprint + build-then-commit marker, single-writer
-    * contract per [[AnnIndex.indexPath]]'s docstring). The shingle
-    * explode + distinct + self-join is the dominant cost of every
+    * jac) PERSISTED once per corpus and reused ([[corpusArtifact]]). The
+    * shingle explode + distinct + self-join is the dominant cost of every
     * lexical-similarity consumer — `q_dedup_jaccard` / `_contain` /
     * `_cluster` and the RRF fusion's lexical arm all analyze the SAME
     * pair universe — and a production pipeline shingles the corpus once,
-    * then runs many analytics. Each consumer stays a pure function of
-    * the corpus: a regenerated fixture invalidates the fingerprint.
+    * then runs many analytics.
     */
   private def jaccardPairs(s: SparkSession, dir: String): DataFrame =
     corpusArtifact(s, dir, "shpairs")(jaccardPairsFrom(shingles(s, dir)))
 
-  /** The digest-guard persist-once pattern shared by every per-corpus
-    * derived artifact ([[jaccardPairs]], [[featurizeVecPersisted]],
-    * [[docTopKPersisted]]): content fingerprint of documents.parquet +
-    * build-then-commit marker (atomic rename — see
-    * [[AnnIndex.commitMarker]]), single-writer contract per
-    * [[AnnIndex.indexPath]]'s docstring. Each consumer stays a pure
-    * function of the corpus: a regenerated fixture invalidates the
-    * fingerprint and forces a rebuild.
+  /** A per-corpus derived artifact of documents.parquet ([[jaccardPairs]],
+    * [[featurizeVecPersisted]], [[docTopKPersisted]], the BM25 arm),
+    * built once and read back through [[graft.Artifacts]]. Each consumer
+    * stays a pure function of the corpus: a regenerated fixture changes
+    * the fingerprint and forces a rebuild.
     */
   private def corpusArtifact(s: SparkSession, dir: String, tag: String)(
-      build: => DataFrame): DataFrame = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val h = md.digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_$h"
-    val fp = AnnIndex.fingerprint(dir, "documents.parquet")
-    AnnIndex.freshArtifact(path, fp) match {
-      case Some(schema) => AnnIndex.readImmutable(s, path, fp, schema)
-      case None =>
-        val df = build
-        df.write.mode("overwrite").parquet(path)
-        AnnIndex.commitMarker(path, fp, df.schema)
-        AnnIndex.readImmutable(s, path, fp, df.schema)
-    }
-  }
+      build: => DataFrame): DataFrame =
+    Artifacts.persisted(s, dir, tag, "documents.parquet")(build)
 
   private[graft] def jaccardPairsFrom(sh0: DataFrame): DataFrame = {
     // Hot shingles are removed by dropHotKeys (materialize-once +
@@ -3983,10 +3964,8 @@ object Llm {
   private[graft] def featurizeVec(s: SparkSession, dir: String): DataFrame =
     denseVec(featSparse(s, dir), "doc_id")
 
-  /** [[featurizeVec]] PERSISTED once per corpus and reused (the
-    * sparseEdges / AnnIndex digest-guard pattern: content fingerprint of
-    * documents.parquet + build-then-commit marker, single-writer
-    * contract per [[AnnIndex.indexPath]]'s docstring). The featurizer
+  /** [[featurizeVec]] PERSISTED once per corpus and reused
+    * ([[corpusArtifact]]). The featurizer
     * aggregation — token explode, two hashes per token, d-dim pivot —
     * is the dominant CPU of every doc-vector consumer (`q_sim_doc_topk`,
     * the RRF fusion's vector arm), and a production deployment

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{Artifacts, Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -186,38 +186,23 @@ object Relational {
   /** Partition pruning DECLARED as a query — the scan-side half of the
     * table-layout story (`sources.Partitioned`; `q_join_bucket_colocated`
     * is the join-side half): the corpus is persisted Hive-partitioned by
-    * language (low-cardinality directory column, content-fingerprint tmp
-    * path — existence of the fingerprint-keyed path IS the freshness
-    * proof, since a regenerated corpus changes the path; single-writer
-    * per corpus like every artifact here), then ONE language is queried
-    * back. The planner prunes to that language's directory at compile
+    * language (low-cardinality directory column, a per-corpus
+    * [[Artifacts.persisted]] artifact), then ONE language is
+    * queried back. The planner prunes to that language's directory at compile
     * time — PlanLintSpec pins `prunesTo(1 of 5)` — so at 100 TB the
     * query reads ~1/|langs| of the table and lists one directory. The
     * audit row (count, id checksum, chars sum) is pinned by an oracle
     * computed independently from the base table: what the partitioned
     * round-trip must preserve, not just what the scan planned.
     */
-  /** The language-partitioned documents artifact (content-fingerprint
-    * tmp path, write-if-absent) — shared by `q_scan_partition_prune`
-    * (static pruning) and `q_join_dpp` (dynamic pruning) so both halves
-    * of the pruning story read the same layout.
+  /** The language-partitioned documents artifact — shared by
+    * `q_scan_partition_prune` (static pruning) and `q_join_dpp` (dynamic
+    * pruning) so both halves of the pruning story read the same layout.
     */
-  private[ops] def docsByLang(s: SparkSession, dir: String): DataFrame = {
-    val fp = {
-      val f = new java.io.File(dir, "documents.parquet")
-      val parts = Option(f.listFiles()).map(_.toSeq).getOrElse(Seq(f))
-        .map(p => s"${p.getName}:${p.length}:${p.lastModified}").sorted
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(parts.mkString("|").getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(12)
-    }
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_docs_bylang_$fp"
-    if (!new java.io.File(path, "_SUCCESS").exists())
-      graft.sources.Partitioned.writeStatic(
-        Tables(s, dir, "documents").select("doc_id", "n_chars", "lang"),
-        path, 1 << 20, "lang")
-    s.read.parquet(path)
-  }
+  private[ops] def docsByLang(s: SparkSession, dir: String): DataFrame =
+    Artifacts.persisted(s, dir, "docs_bylang", "documents.parquet")(
+      Tables(s, dir, "documents").select("doc_id", "n_chars", "lang"),
+      (df, path) => graft.sources.Partitioned.writeStatic(df, path, 1 << 20, "lang"))
 
   private val qScanPartitionPrune = Q(
     "q_scan_partition_prune",

@@ -1,11 +1,9 @@
 package org.apache.spark.sql.graftnative
-/** Session-identity bridge for the engine's per-session metadata caches
-  * (graft.Tables / graft.ops.AnnIndex). Those caches were keyed on the
-  * SparkSession itself in a WeakHashMap, but the cached DataFrames
-  * strongly reference their session, so the weak keying was ineffective
-  * (ADVICE r13). `sessionUUID` is `private[sql]`, which this package can
-  * legally read — a String key lets the cache hold frames without
-  * pinning the session object's reachability semantics to the cache.
+/** Session-identity bridge for the engine's per-session frame memo
+  * (graft.Artifacts). The memo is keyed on this String, not on the
+  * session: its cached DataFrames strongly reference their session, so
+  * a weak key on the session object could never be evicted.
+  * `sessionUUID` is `private[sql]`, which this package can legally read.
   */
 object SessionUid {
   def of(s: org.apache.spark.sql.SparkSession): String =

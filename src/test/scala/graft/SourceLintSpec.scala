@@ -12,7 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * Every eager checkpoint says why it is there: a cut is a blocking job
   * and a lineage a lost executor cannot replay, so one that no longer
   * has a reason should go, and hiding a join from `PlanLintSpec` is not
-  * a reason.
+  * a reason. Derived artifacts are stored in ONE place: `Artifacts` owns
+  * their tmpdir location, source fingerprint and commit marker, so an
+  * operator that spells one of them out again starts a second store.
   */
 class SourceLintSpec extends AnyFunSuite {
 
@@ -76,5 +78,14 @@ class SourceLintSpec extends AnyFunSuite {
       }
     }
     assert(unexplained.isEmpty, "localCheckpoint without a reason:\n" + unexplained.mkString("\n"))
+  }
+
+  test("only Artifacts names the tmpdir, digests a fingerprint or touches a marker") {
+    val store = "java\\.io\\.tmpdir|MessageDigest|\\.marker\\b|\\.lastModified\\b".r
+    val artifacts = new java.io.File(mainDir, "Artifacts.scala").getPath + ":"
+    val (own, others) = matches(sources(mainDir), store.findFirstIn(_).nonEmpty)
+      .partition(_.startsWith(artifacts))
+    assert(own.nonEmpty, s"no artifact store found in $artifacts")
+    assert(others.isEmpty, "artifact store spelled outside Artifacts:\n" + others.mkString("\n"))
   }
 }

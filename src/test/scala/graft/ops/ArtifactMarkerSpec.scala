@@ -2,6 +2,8 @@ package graft.ops
 
 import java.nio.file.{Files, Paths}
 
+import graft.Artifacts
+
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,7 +25,7 @@ class ArtifactMarkerSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("marker-race")
     val path = dir.resolve("idx").toString
     val commits = Map("fpA" -> schemaA, "fpB" -> schemaB)
-    AnnIndex.commitMarker(path, "fpA", schemaA)
+    Artifacts.commitMarker(path, "fpA", schemaA)
 
     // The atomic-move contract guarantees a SINGLE read observes a
     // complete committed (fp, schema) pair. Two sequential freshArtifact
@@ -45,15 +47,15 @@ class ArtifactMarkerSpec extends AnyFunSuite {
     reader.start()
     (1 to 500).foreach { i =>
       val fp = if (i % 2 == 0) "fpA" else "fpB"
-      AnnIndex.commitMarker(path, fp, commits(fp))
+      Artifacts.commitMarker(path, fp, commits(fp))
     }
     stop.set(true)
     reader.join(10000)
     assert(torn.get() == null, String.valueOf(torn.get()))
     // quiescent check: with no writer racing, the freshArtifact probe
     // must hit the last-committed fingerprint with its exact schema
-    assert(AnnIndex.freshArtifact(path, "fpA").contains(schemaA))
-    assert(AnnIndex.freshArtifact(path, "fpB").isEmpty)
+    assert(Artifacts.freshArtifact(path, "fpA").contains(schemaA))
+    assert(Artifacts.freshArtifact(path, "fpB").isEmpty)
   }
 
   test("a crashed writer's leftover tmp file never satisfies the guard") {
@@ -62,11 +64,11 @@ class ArtifactMarkerSpec extends AnyFunSuite {
     // simulate a crash mid-build: tmp written, move never happened
     Files.write(Paths.get(path + ".marker.tmp"),
       s"fpX\n${schemaA.toDDL}".getBytes("UTF-8"))
-    assert(AnnIndex.freshArtifact(path, "fpX").isEmpty,
+    assert(Artifacts.freshArtifact(path, "fpX").isEmpty,
       "uncommitted tmp marker must not register as a fresh artifact")
     // and a later clean commit wins regardless of the stale tmp
-    AnnIndex.commitMarker(path, "fpY", schemaB)
-    assert(AnnIndex.freshArtifact(path, "fpY").contains(schemaB))
-    assert(AnnIndex.freshArtifact(path, "fpX").isEmpty)
+    Artifacts.commitMarker(path, "fpY", schemaB)
+    assert(Artifacts.freshArtifact(path, "fpY").contains(schemaB))
+    assert(Artifacts.freshArtifact(path, "fpX").isEmpty)
   }
 }
