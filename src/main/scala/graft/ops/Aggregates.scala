@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Q, Tables}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -9,6 +10,32 @@ import org.apache.spark.sql.functions._
   * grouping flags cast to BIGINT in both (D6).
   */
 object Aggregates {
+
+  /** Width of one value-range shard of a histogram keyed by an integer
+    * value: 2²⁰ cents is 48 shards over the fixture's order totals
+    * (≤ $500k) and 11 over its line prices (≤ $105k), and 1 over
+    * quantities. The shard count is set by the value range, so it stays
+    * put as the corpus grows while the histogram's distinct values grow
+    * with it.
+    */
+  private val ValueShard = 1L << 20
+
+  /** `hist` with the running sum, in `v` order and inclusive of the row,
+    * of each count column: `cums` pairs a count column with the name of
+    * its running sum. It is the two-phase prefix sum
+    * ([[Windows.withShardOffsets]]) over the value-range shards
+    * `v DIV` [[ValueShard]]: one window per shard plus offsets over one
+    * row per shard, never a single-task window over every distinct value.
+    */
+  private def runningSums(hist: DataFrame, v: String, cums: (String, String)*): DataFrame = {
+    val w = Window.partitionBy("vshard").orderBy(v)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val offsets = cums.map { case (c, _) => s"off_$c" -> sum(c).as(s"_$c") }
+    cums.foldLeft(Windows.withShardOffsets(
+        hist.withColumn("vshard", expr(s"$v DIV $ValueShard")), Nil, "vshard", offsets: _*)) {
+      case (df, (c, cum)) => df.withColumn(cum, col(s"off_$c") + sum(c).over(w))
+    }
+  }
 
   private val qAggGlobal = Q(
     "q_agg_global",
@@ -268,7 +295,7 @@ object Aggregates {
     * (the corpus-sized work) + broadcast-joined nation name, then the
     * histogram agg and a per-nation cumulative window over the ≤
     * |distinct (nation, cents)| histogram frame — the `q_agg_winsorize`
-    * / `q_agg_spearman` bounded-grid discipline. Overflow (ADVICE-r10
+    * discipline. Overflow (ADVICE-r10
     * class): Σ cents·rank ≈ n²·x̄ per nation overflows BIGINT near 10⁶
     * customers/nation at this price scale, so both moment sums widen
     * BEFORE the multiply (DECIMAL(38,0) / HUGEINT — exact to n ≈ 10¹⁵)
@@ -1171,11 +1198,12 @@ object Aggregates {
     * doubles (exact big integers convert round-to-nearest identically
     * in both engines — the [[qAggCorr]] conversion rule), floor-bp.
     *
-    * Scale shape: two map-combinable value histograms + two bounded
-    * cumulative windows (≤ |value grid| each, the declared
-    * ppl_buckets class) + two value-keyed EQUI-joins back onto the
+    * Scale shape: two map-combinable value histograms, each ranked by
+    * a two-phase prefix sum over value-range shards ([[runningSums]]:
+    * the price histogram has as many rows as distinct prices, which
+    * grow with the corpus) + two value-keyed EQUI-joins back onto the
     * skinny (x, y) projection + ONE map-combinable moment agg; final
-    * frame ONE row, no broadcast at all.
+    * frame ONE row.
     */
   private val qAggSpearman = Q(
     "q_agg_spearman",
@@ -1184,13 +1212,9 @@ object Aggregates {
         expr("CAST(floor(l_quantity) AS BIGINT)").as("x"),
         expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("y"))
         .localCheckpoint(true) // A/B sf0.1: 2.10 s with, 2.37 s without
-      def ranks(c: String) = {
-        val w = Window.orderBy(c)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        li.groupBy(c).agg(count(lit(1)).as("t"))
-          .withColumn("cum", sum("t").over(w))
+      def ranks(c: String) =
+        runningSums(li.groupBy(c).agg(count(lit(1)).as("t")), c, "t" -> "cum")
           .select(col(c), expr("2L * (cum - t) + t + 1L").as(s"r$c"))
-      }
       li.join(ranks("x"), "x").join(ranks("y"), "y")
         .agg(count(lit(1)).as("n"),
           // one operand widened BEFORE the multiply: doubled midranks
@@ -1892,9 +1916,9 @@ object Aggregates {
     * tie-break, the `q_agg_mode` rule).
     *
     * Scale shape: map-only era flag + ONE map-combinable value
-    * histogram; one cumulative window on the ≤ |value grid| histogram
-    * (declared ppl_buckets class — both running CDFs share the frame);
-    * final frame ONE row.
+    * histogram, whose rows (distinct cents) grow with the corpus; both
+    * running CDFs are one two-phase prefix sum over value-range shards
+    * ([[runningSums]]); final frame ONE row.
     */
   private val qAggKsTest = Q(
     "q_agg_ks_test",
@@ -1904,12 +1928,8 @@ object Aggregates {
           expr("CAST(o_orderdate < TIMESTAMP '1998-01-01 00:00:00' AS BIGINT)").as("early"))
         .groupBy("cents")
         .agg(sum("early").as("ca"), sum(expr("1L - early")).as("cb"))
-      val w = Window.orderBy("cents")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val tot = hist.agg(sum("ca").as("ta"), sum("cb").as("tb"))
-      hist
-        .withColumn("cuma", sum("ca").over(w))
-        .withColumn("cumb", sum("cb").over(w))
+      runningSums(hist, "cents", "ca" -> "cuma", "cb" -> "cumb")
         .crossJoin(broadcast(tot))
         // the gap product ITSELF widened, not just its consumers: cumA·nB
         // reaches nA·nB even when the gap is tiny, so the BIGINT product
@@ -1980,10 +2000,10 @@ object Aggregates {
     * — exact at any N, no division, no float.
     *
     * Scale shape: map-only hash-assign + ONE map-combinable value
-    * histogram (the `q_agg_winsorize` discipline); the cumulative
-    * window runs on the ≤ |value grid| histogram (declared bounded
-    * partition-less window, the ppl_buckets class) and the final frame
-    * is ONE row.
+    * histogram (the `q_agg_winsorize` discipline), whose rows (distinct
+    * cents) grow with the corpus; the cumulative count is a two-phase
+    * prefix sum over value-range shards ([[runningSums]]) and the final
+    * frame is ONE row.
     */
   private val qAggMannwhitney = Q(
     "q_agg_mannwhitney",
@@ -1996,10 +2016,8 @@ object Aggregates {
         .agg(sum(expr("CAST(arm = 0 AS BIGINT)")).as("na"),
           sum(expr("CAST(arm = 1 AS BIGINT)")).as("nb"))
         .withColumn("t", col("na") + col("nb"))
-      val w = Window.orderBy("cents")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      hist
-        .withColumn("cumb", sum("t").over(w) - col("t"))
+      runningSums(hist, "cents", "t" -> "cum")
+        .withColumn("cumb", col("cum") - col("t"))
         .agg(sum("na").as("n_a"), sum("nb").as("n_b"),
           sum(expr("na * (2L * cumb + t + 1L)")).as("r2_a"),
           sum(expr("t * t * t - t")).as("sum_t3"))

@@ -203,14 +203,7 @@ object Curation {
       .select("lang", "budget")
     val wLoc = Window.partitionBy("lang", "shard").orderBy("u", "doc_id")
       .rowsBetween(Window.unboundedPreceding, -1)
-    // offsets frame = one row per (lang, shard); the per-lang window runs
-    // over those ~32 rows per language, not the data
-    val wOff = Window.partitionBy("lang").orderBy("shard")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = t.groupBy("lang", "shard").agg(sum("n_tok").as("_st"))
-      .withColumn("off", coalesce(sum("_st").over(wOff), lit(0L)))
-      .select("lang", "shard", "off")
-    t.join(broadcast(offsets), Seq("lang", "shard"))
+    Windows.withShardOffsets(t, Seq("lang"), "shard", "off" -> sum("n_tok").as("_st"))
       .withColumn("before", col("off") + coalesce(sum("n_tok").over(wLoc), lit(0L)))
       .join(broadcast(budgets), "lang")
       .filter(col("before") < col("budget"))
@@ -314,13 +307,8 @@ object Curation {
       .withColumn("shard", expr(s"u DIV $HashShardDiv"))
     val wLoc = Window.partitionBy("shard").orderBy("u", "doc_id", "chunk_id")
       .rowsBetween(Window.unboundedPreceding, -1)
-    // offsets frame = one row per shard; the unpartitioned window runs
-    // over those ~32 rows, not the data
-    val wOff = Window.orderBy("shard").rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = o.groupBy("shard").agg(sum("n_tok_chunk").as("_st"))
-      .withColumn("off", coalesce(sum("_st").over(wOff), lit(0L)))
-      .select("shard", "off")
-    o.join(broadcast(offsets), "shard")
+    // the offsets window runs over the ~32 shard rows, not the data
+    Windows.withShardOffsets(o, Nil, "shard", "off" -> sum("n_tok_chunk").as("_st"))
       .withColumn("offset", col("off") + coalesce(sum("n_tok_chunk").over(wLoc), lit(0L)))
       .withColumn("seq_id", expr(s"offset DIV $SeqLen"))
       .withColumn("strad", expr(

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{Artifacts, Q, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -95,27 +95,15 @@ object Etl {
     */
   private val ShardUs = 3600L * 1000000L
 
-  /** Phase 1+2 of two-phase numbering over (route, ts_us, event_id)-order:
-    * input must carry route/ts_us/event_id/nbytes; output adds `shardk`
-    * plus broadcastable per-shard prefix offsets `off_n` (rows before
-    * this shard) and `off_b` (bytes before this shard). The offsets table
-    * has one row per (route, hour) — tiny forever — and its own window
-    * runs over that tiny table, not the data.
+  /** `df` (route, ts_us, event_id, …) with its hour shard `shardk` and the
+    * per-(route, hour) prefix offsets `offsets` ([[Windows.withShardOffsets]]).
+    * The offsets aggregation and the main numbering join both read this
+    * frame; each re-reads the cheap scan+route subtree (no cut: an A/B at
+    * sf0.1 timed both the same and the plan two jobs shorter).
     */
-  private def withShardOffsets(df: DataFrame): DataFrame = {
-    // The offsets aggregation and the main numbering join both read this
-    // frame; each re-reads the cheap scan+route subtree (no cut: an A/B
-    // at sf0.1 timed both the same and the plan two jobs shorter).
-    val sharded = df.withColumn("shardk", expr(s"ts_us DIV $ShardUs"))
-    val wOff = Window.partitionBy("route").orderBy("shardk")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = sharded.groupBy("route", "shardk")
-      .agg(count(lit(1)).as("_sn"), sum("nbytes").as("_sb"))
-      .withColumn("off_n", coalesce(sum("_sn").over(wOff), lit(0L)))
-      .withColumn("off_b", coalesce(sum("_sb").over(wOff), lit(0L)))
-      .select("route", "shardk", "off_n", "off_b")
-    sharded.join(broadcast(offsets), Seq("route", "shardk"))
-  }
+  private def byHour(df: DataFrame, offsets: (String, Column)*): DataFrame =
+    Windows.withShardOffsets(df.withColumn("shardk", expr(s"ts_us DIV $ShardUs")),
+      Seq("route"), "shardk", offsets: _*)
 
   private val qEtlDecodeParse = Q(
     "q_etl_decode_parse",
@@ -158,13 +146,13 @@ object Etl {
     *  - batch_id densely numbers (rec_chunk, sub) per route.
     * Both caps hold by construction: ≤500 records (within one rec_chunk)
     * and ≤ SubBatchBytes + one ≤1000 KiB record = 4 MiB exactly.
-    * Numbering is two-phase sharded ([[withShardOffsets]]); the dense
+    * Numbering is two-phase sharded ([[byHour]]); the dense
     * renumber at the end windows over the 500×-reduced batch table.
     */
   private[graft] def batchAssign(routed: DataFrame): DataFrame = {
     // Execution count: the events scan is read once per branch, by the
     // two consumers of the ok side (offsets agg + numbering join, see
-    // withShardOffsets) and by the big/DLQ branch, whose oversize
+    // byHour) and by the big/DLQ branch, whose oversize
     // predicate pushes into its pruned parquet scan (PlanLintSpec).
     val ok = routed.filter(col("nbytes") <= MaxRecordBytes)
     val big = routed.filter(col("nbytes") > MaxRecordBytes)
@@ -172,7 +160,7 @@ object Etl {
     val wChunk = Window.partitionBy("route", "rec_chunk").orderBy("ts_us", "event_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wBatch = Window.partitionBy("route").orderBy("rec_chunk", "sub")
-    val normal = withShardOffsets(ok)
+    val normal = byHour(ok, "off_n" -> count(lit(1)).as("_sn"))
       .withColumn("rn", row_number().over(wLoc) + col("off_n"))
       .withColumn("rec_chunk", expr(s"(rn - 1) DIV $BatchSize"))
       .withColumn("cumb", sum("nbytes").over(wChunk))
@@ -733,17 +721,18 @@ object Etl {
       val target = 4096L // bytes per output file
       // two-phase running sum: per-(route, hour-shard) local cumsum +
       // broadcast per-shard byte offsets — byte-identical to the single
-      // per-route window it replaces (see withShardOffsets), but the
+      // per-route window it replaces (see byHour), but the
       // sort runs one task per shard, not per route.
       val w = Window.partitionBy("route", "shardk").orderBy("ts_us", "event_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      withShardOffsets(
+      byHour(
           withRoute(Tables.events(s, dir))
             // COALESCE: a NULL at a shard head would null the local
             // cumsum while the oracle's global window skips it — see
             // q_etl_batch_assign
             .withColumn("nbytes", coalesce(length(col("props")), lit(0)).cast("long"))
-            .select("route", "ts_us", "event_id", "nbytes"))
+            .select("route", "ts_us", "event_id", "nbytes"),
+          "off_b" -> sum("nbytes").as("_sb"))
         .withColumn("cum", sum(col("nbytes")).over(w) + col("off_b"))
         .withColumn("file_id", expr(s"CAST((cum - 1) DIV $target AS BIGINT)"))
         .groupBy("route", "file_id")

@@ -429,9 +429,10 @@ object Joins {
     * join (lineitem ⋈ orders on orderkey), DECLARED as a query: both
     * sides are persisted bucketed+sorted on the join key
     * (`sources.Bucketed`, external tables named and placed by the content
-    * fingerprint of both inputs, so a regenerated fixture gets a new
-    * layout and an unchanged one is reused: the query measures the JOIN,
-    * not the one-time layout build), after which the join itself plans
+    * fingerprint of both inputs and kept fresh by the artifact marker, so
+    * a regenerated fixture gets a new layout and an unchanged one is
+    * reused, in a new process too: the query measures the JOIN, not the
+    * one-time layout build), after which the join itself plans
     * as a SortMergeJoin directly over the bucketed scans — NO shuffle exchange on either
     * join key (PlanLintSpec pins exactly that). At 100 TB this is the
     * difference between re-shuffling terabytes per query and a
@@ -445,20 +446,24 @@ object Joins {
   private val qJoinBucketColocated = Q(
     "q_join_bucket_colocated",
     (s, dir) => {
-      // freshness is the catalog's: Bucketed.join reads the tables by name
-      val fp = Artifacts.fingerprint(dir, "lineitem.parquet", "orders.parquet").take(12)
-      val lt = s"graft_bkt_li_$fp"
-      val ot = s"graft_bkt_ord_$fp"
-      val base = Artifacts.path(dir, s"bucketed_$fp")
-      if (!s.catalog.tableExists(lt))
-        graft.sources.Bucketed.write(
-          Tables(s, dir, "lineitem").select("l_orderkey", "l_partkey", "l_quantity"),
-          lt, "l_orderkey", BucketN, Some(s"$base/li"))
-      if (!s.catalog.tableExists(ot))
-        graft.sources.Bucketed.write(
-          Tables(s, dir, "orders").select("o_orderkey", "o_custkey"),
-          ot, "o_orderkey", BucketN, Some(s"$base/ord"))
-      graft.sources.Bucketed.join(s, lt, ot, "l_orderkey", "o_orderkey")
+      val fp = Artifacts.fingerprint(dir, "lineitem.parquet", "orders.parquet")
+      val tag = fp.take(12)
+      // freshness is the marker's; Bucketed.join reads the tables by name,
+      // so a fresh layout is registered in this session's catalog
+      def layout(side: String, src: org.apache.spark.sql.DataFrame, key: String): String = {
+        val (table, path) = (s"graft_bkt_${side}_$tag", s"${Artifacts.path(dir, s"bucketed_$tag")}/$side")
+        val schema = Artifacts.ensure(path, fp) {
+          graft.sources.Bucketed.write(src, table, key, BucketN, Some(path))
+          src.schema
+        }
+        graft.sources.Bucketed.register(s, table, schema, key, BucketN, path)
+        table
+      }
+      graft.sources.Bucketed.join(s,
+          layout("li", Tables(s, dir, "lineitem").select("l_orderkey", "l_partkey", "l_quantity"),
+            "l_orderkey"),
+          layout("ord", Tables(s, dir, "orders").select("o_orderkey", "o_custkey"), "o_orderkey"),
+          "l_orderkey", "o_orderkey")
         .groupBy("o_custkey")
         .agg(count(lit(1)).as("n_items"),
           sum(expr("CAST(floor(l_quantity) AS BIGINT)")).as("qty_sum"),

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Q, Tables}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -8,6 +9,34 @@ import org.apache.spark.sql.functions._
   * canary). Window orderings always carry a unique tie-break key (D1).
   */
 object Windows {
+
+  /** Phase 2 of the engine's two-phase prefix sum. A running sum over a
+    * global order is one task's work when written as one window; split the
+    * order into shards whose order agrees with it (the shard is a
+    * monotone function of the leading sort key), and the running sum
+    * becomes a per-(`keys`, shard) window plus the sum of every earlier
+    * shard's total. This adds those offsets: it totals each (`keys`,
+    * `shard`) group with the `offsets` aggregates, turns each total into
+    * the exclusive prefix over the shards of its keys (0 for the first
+    * shard), and broadcast-joins the offsets back, one column per name.
+    * The offsets window runs over one row per (`keys`, shard), a table
+    * bounded by the shard count, never by the rows. The caller adds the
+    * per-shard window, inclusive or exclusive, partitioned by `keys` and
+    * `shard`.
+    */
+  private[graft] def withShardOffsets(df: DataFrame, keys: Seq[String], shard: String,
+      offsets: (String, Column)*): DataFrame = {
+    val byShard = keys :+ shard
+    val before = Window.partitionBy(keys.map(col): _*).orderBy(shard)
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val totals = df.groupBy(byShard.map(col): _*)
+      .agg(offsets.head._2, offsets.tail.map(_._2): _*)
+    val table = offsets.map(_._1).zip(totals.columns.drop(byShard.size))
+      .foldLeft(totals) { case (t, (off, total)) =>
+        t.withColumn(off, coalesce(sum(total).over(before), lit(0L)))
+      }
+    df.join(broadcast(table.select((byShard ++ offsets.map(_._1)).map(col): _*)), byShard)
+  }
 
   private val qWinRank = Q(
     "q_win_rank",

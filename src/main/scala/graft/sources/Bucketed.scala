@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Bucketed table layout — the production answer to the one genuinely
   * large-large join in the workload (lineitem ⋈ orders on orderkey,
@@ -25,6 +26,16 @@ object Bucketed {
       .format("parquet")
     path.fold(w.saveAsTable(table))(p => w.option("path", p).saveAsTable(table))
   }
+
+  /** Registers the layout [[write]] left at `path` as the external table
+    * `table` if the catalog lacks it, with the written `schema` (no
+    * inference) and the same bucket spec. A session catalog is in memory,
+    * so a new process finds the files but not the table.
+    */
+  def register(spark: SparkSession, table: String, schema: StructType, key: String,
+      buckets: Int, path: String): Unit =
+    spark.sql(s"CREATE TABLE IF NOT EXISTS $table (${schema.toDDL}) USING parquet " +
+      s"CLUSTERED BY ($key) SORTED BY ($key) INTO $buckets BUCKETS LOCATION '$path'")
 
   /** Equi-join two tables previously written with the same bucket spec on
     * their respective keys. The merge hint pins SortMergeJoin: a

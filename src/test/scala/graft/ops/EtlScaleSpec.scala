@@ -182,4 +182,34 @@ class EtlScaleSpec extends SparkSpec {
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(15), p)
     assert(res.passed, res.status.toString)
   }
+
+  test("withShardOffsets: the sharded running sum equals one global window") {
+    import org.apache.spark.sql.expressions.Window
+    import spark.implicits._
+    // shard = v DIV 4: the ties of v = 3 and v = 4 sit on either side of a
+    // shard boundary, no v falls in [8, 12) (an empty shard), and the null
+    // x count as zero, as the hop's COALESCE'd byte counts do
+    val rows = Seq[(String, Long, Long, Option[Long])](
+      ("a", 3, 1, Some(5L)), ("a", 3, 2, None), ("a", 4, 3, Some(7L)), ("a", 4, 4, Some(1L)),
+      ("a", 0, 5, Some(2L)), ("a", 13, 6, None), ("a", 12, 7, Some(9L)), ("a", 7, 8, Some(4L)),
+      ("b", 4, 9, Some(3L)), ("b", 3, 10, Some(6L)), ("b", 14, 11, Some(8L)), ("b", 3, 12, None))
+    val df = rows.toDF("g", "v", "id", "x0").repartition(3)
+      .withColumn("x", coalesce(col("x0"), lit(0L)))
+      .withColumn("shard", expr("v DIV 4"))
+    for (keys <- Seq(Seq("g"), Nil); upTo <- Seq(Window.currentRow, -1L)) {
+      def frame(by: Seq[String]) = Window.partitionBy(by.map(col): _*).orderBy("v", "id")
+        .rowsBetween(Window.unboundedPreceding, upTo)
+      val want = df.select(col("id"), coalesce(sum("x").over(frame(keys)), lit(0L)).as("cum"),
+        row_number().over(frame(keys).rowsBetween(Window.unboundedPreceding, Window.currentRow)).as("rn"))
+      val got = Windows.withShardOffsets(df, keys, "shard",
+          "off" -> sum("x").as("_t"), "off_n" -> count(lit(1)).as("_n"))
+        .select(col("id"),
+          (col("off") + coalesce(sum("x").over(frame(keys :+ "shard")), lit(0L))).as("cum"),
+          (col("off_n") + row_number().over(frame(keys :+ "shard")
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow))).as("rn"))
+      def rowsOf(f: org.apache.spark.sql.DataFrame) =
+        f.as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
+      assert(rowsOf(got) == rowsOf(want), s"keys $keys, frame end $upTo")
+    }
+  }
 }

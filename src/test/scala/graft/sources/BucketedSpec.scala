@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.{SparkSpec, Tables}
+import graft.{Artifacts, SparkEntry, SparkSpec, Tables}
 import org.apache.spark.sql.functions._
 
 class BucketedSpec extends SparkSpec {
@@ -25,5 +25,23 @@ class BucketedSpec extends SparkSpec {
       .agg(sum("l_quantity").as("q"))
     assert(Bucketed.isShuffleFree(agg),
       s"groupBy on bucket key must not shuffle:\n${agg.queryExecution.executedPlan}")
+  }
+
+  test("q_join_bucket_colocated re-registers a fresh layout the catalog forgot, without a rewrite") {
+    val fp = Artifacts.fingerprint(sf, "lineitem.parquet", "orders.parquet").take(12)
+    val sides = Seq("li", "ord")
+    def written = sides.map(t =>
+      new java.io.File(s"${Artifacts.path(sf, s"bucketed_$fp")}/$t/_SUCCESS").lastModified)
+    val q = SparkEntry.queries("q_join_bucket_colocated")
+    val before = q(spark, sf).collect().toSeq
+    val stamps = written
+    // external tables: dropping them leaves the files, as a new process finds them
+    sides.foreach(t => spark.sql(s"DROP TABLE graft_bkt_${t}_$fp"))
+    val again = q(spark, sf)
+    assert(again.collect().toSeq == before)
+    assert(written == stamps, "a fresh layout must not be rewritten")
+    val plan = again.queryExecution.executedPlan.toString
+    assert("""Exchange hashpartitioning\((l_orderkey|o_orderkey)""".r.findFirstIn(plan).isEmpty &&
+      plan.contains("SortMergeJoin"), s"re-registered tables must join shuffle-free:\n$plan")
   }
 }
