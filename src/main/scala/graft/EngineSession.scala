@@ -87,7 +87,9 @@ object EngineSession extends Logging {
 
   /** The `file:` scheme's implementations, for `FileSystem` and for
     * `FileContext` (the streaming checkpoint logs): Hadoop's checksummed
-    * local file system with an in-process `chmod` ([[LocalFiles]]). Only
+    * local file system with `chmod` and `readlink` answered in-process,
+    * not by child processes ([[LocalFiles]]; the `readlink`s alone were 8
+    * per checkpoint-log write, 56 per `hop_bulk` pass). Only
     * [[builder]] can set them. Hadoop caches one `FileSystem` per scheme
     * and user for the whole JVM, so the first session to touch `file:`
     * decides, and [[tune]] cannot swap the file system under a session

@@ -428,11 +428,12 @@ object Joins {
   /** The production answer to the workload's one genuinely large-large
     * join (lineitem ⋈ orders on orderkey), DECLARED as a query: both
     * sides are persisted bucketed+sorted on the join key
-    * (`sources.Bucketed`, external tables named and placed by the content
-    * fingerprint of both inputs and kept fresh by the artifact marker, so
-    * a regenerated fixture gets a new layout and an unchanged one is
-    * reused, in a new process too: the query measures the JOIN, not the
-    * one-time layout build), after which the join itself plans
+    * (`sources.Bucketed`, external tables named by the content
+    * fingerprint of both inputs, placed at one artifact path per corpus
+    * and kept fresh by its marker, so a regenerated fixture rewrites the
+    * layout in place and an unchanged one is reused, in a new process
+    * too: the query measures the JOIN, not the one-time layout build),
+    * after which the join itself plans
     * as a SortMergeJoin directly over the bucketed scans — NO shuffle exchange on either
     * join key (PlanLintSpec pins exactly that). At 100 TB this is the
     * difference between re-shuffling terabytes per query and a
@@ -451,7 +452,7 @@ object Joins {
       // freshness is the marker's; Bucketed.join reads the tables by name,
       // so a fresh layout is registered in this session's catalog
       def layout(side: String, src: org.apache.spark.sql.DataFrame, key: String): String = {
-        val (table, path) = (s"graft_bkt_${side}_$tag", s"${Artifacts.path(dir, s"bucketed_$tag")}/$side")
+        val (table, path) = (s"graft_bkt_${side}_$tag", s"${Artifacts.path(dir, "bucketed")}/$side")
         val schema = Artifacts.ensure(path, fp) {
           graft.sources.Bucketed.write(src, table, key, BucketN, Some(path))
           src.schema

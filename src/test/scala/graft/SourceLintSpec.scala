@@ -15,6 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * a reason. Derived artifacts are stored in ONE place: `Artifacts` owns
   * their tmpdir location, source fingerprint and commit marker, so an
   * operator that spells one of them out again starts a second store.
+  * Nothing starts a child process: each costs about 10 ms, and the hop's
+  * micro-batches once started dozens through Hadoop's shell fallbacks
+  * ([[LocalFiles]]).
   */
 class SourceLintSpec extends AnyFunSuite {
 
@@ -87,5 +90,12 @@ class SourceLintSpec extends AnyFunSuite {
       .partition(_.startsWith(artifacts))
     assert(own.nonEmpty, s"no artifact store found in $artifacts")
     assert(others.isEmpty, "artifact store spelled outside Artifacts:\n" + others.mkString("\n"))
+  }
+
+  test("no source starts a child process") {
+    val spawn = ("\\bsys\\.process\\b|\\bProcessBuilder\\b|Runtime\\.getRuntime(\\(\\))?\\.exec\\b|" +
+      "\\bShell\\.|FileUtil\\.readLink\\b").r
+    val found = matches(sources(new java.io.File("src/main/scala")), spawn.findFirstIn(_).nonEmpty)
+    assert(found.isEmpty, "child process started in src/main/scala:\n" + found.mkString("\n"))
   }
 }

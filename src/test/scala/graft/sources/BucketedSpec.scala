@@ -31,7 +31,7 @@ class BucketedSpec extends SparkSpec {
     val fp = Artifacts.fingerprint(sf, "lineitem.parquet", "orders.parquet").take(12)
     val sides = Seq("li", "ord")
     def written = sides.map(t =>
-      new java.io.File(s"${Artifacts.path(sf, s"bucketed_$fp")}/$t/_SUCCESS").lastModified)
+      new java.io.File(s"${Artifacts.path(sf, "bucketed")}/$t/_SUCCESS").lastModified)
     val q = SparkEntry.queries("q_join_bucket_colocated")
     val before = q(spark, sf).collect().toSeq
     val stamps = written
