@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{Q, Tables}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1657,6 +1657,49 @@ object Aggregates {
                      JOIN nd nb ON nb.event_type = un.tb
              ORDER BY pair"""))
 
+  /** The source × language contingency cells of `documents`, each with
+    * its observed count `o`, margins `r`/`c`, total `nn` and χ²
+    * contribution `contrib_micro` = ⌊d²·10⁶/(r·c·nn)⌋ with d = o·nn − r·c
+    * ([[qAggChisq]], [[qAggCramersV]]). [[contingencySql]] is its twin.
+    */
+  private def contingencyCells(s: SparkSession, dir: String): DataFrame = {
+    val cont = Tables(s, dir, "documents")
+      .groupBy("source", "lang").agg(count(lit(1)).as("o"))
+    val rm = cont.groupBy("source").agg(sum("o").as("r"))
+    val cm = cont.groupBy("lang").agg(sum("o").as("c"))
+    val nn = cont.agg(sum("o").as("nn"))
+    cont.join(rm, "source").join(cm, "lang")
+      .crossJoin(broadcast(nn))
+      // deviation widened BEFORE the multiply: o·N ≈ (n/cells)·n is
+      // n²-scale, wrapping BIGINT past n ≈ 2e11 docs in Spark where
+      // DuckDB errors (the ADVICE r10 parity class); d only feeds the
+      // bit-identical double contribution, so nothing downstream moves
+      .withColumn("d", expr("CAST(o AS DECIMAL(38, 0)) * nn - CAST(r AS DECIMAL(38, 0)) * c"))
+      .withColumn("contrib_micro", expr(
+        "CAST(floor(CAST(d AS DOUBLE) * CAST(d AS DOUBLE) * 1000000D " +
+          "/ (CAST(r AS DOUBLE) * CAST(c AS DOUBLE) * CAST(nn AS DOUBLE))) AS BIGINT)"))
+  }
+
+  /** Oracle twin of [[contingencyCells]]: CTEs `ct`/`rm`/`cm`/`nn`/`cell`
+    * and `sc` (source, lang, nn, contrib_micro).
+    */
+  private def contingencySql: String =
+    """ct AS (SELECT source, lang, CAST(COUNT(*) AS BIGINT) AS o
+                  FROM documents GROUP BY source, lang),
+            rm AS (SELECT source, CAST(SUM(o) AS BIGINT) AS r FROM ct GROUP BY source),
+            cm AS (SELECT lang, CAST(SUM(o) AS BIGINT) AS c FROM ct GROUP BY lang),
+            nn AS (SELECT CAST(SUM(o) AS BIGINT) AS nn FROM ct),
+            cell AS (SELECT ct.source, ct.lang,
+                      CAST(o AS HUGEINT) * nn.nn - CAST(r AS HUGEINT) * c AS d,
+                      r, c, nn.nn AS nn
+                     FROM ct JOIN rm USING (source) JOIN cm USING (lang)
+                     CROSS JOIN nn),
+            sc AS (SELECT source, lang, nn,
+                    CAST(FLOOR(CAST(d AS DOUBLE) * CAST(d AS DOUBLE) * 1000000
+                      / (CAST(r AS DOUBLE) * CAST(c AS DOUBLE)
+                         * CAST(nn AS DOUBLE))) AS BIGINT) AS contrib_micro
+                   FROM cell)"""
+
   /** CHI-SQUARE independence audit of the source × language contingency
     * table — the CATEGORICAL member of the drift/test trio
     * ([[qAggMannwhitney]] location, [[qAggKsTest]] shape, this one
@@ -1681,21 +1724,7 @@ object Aggregates {
   private val qAggChisq = Q(
     "q_agg_chisq",
     (s, dir) => {
-      val cont = Tables(s, dir, "documents")
-        .groupBy("source", "lang").agg(count(lit(1)).as("o"))
-      val rm = cont.groupBy("source").agg(sum("o").as("r"))
-      val cm = cont.groupBy("lang").agg(sum("o").as("c"))
-      val nn = cont.agg(sum("o").as("nn"))
-      cont.join(rm, "source").join(cm, "lang")
-        .crossJoin(broadcast(nn))
-        // deviation widened BEFORE the multiply: o·N ≈ (n/cells)·n is
-        // n²-scale, wrapping BIGINT past n ≈ 2e11 docs in Spark where
-        // DuckDB errors (the ADVICE r10 parity class); d only feeds the
-        // bit-identical double contribution, so nothing downstream moves
-        .withColumn("d", expr("CAST(o AS DECIMAL(38, 0)) * nn - CAST(r AS DECIMAL(38, 0)) * c"))
-        .withColumn("contrib_micro", expr(
-          "CAST(floor(CAST(d AS DOUBLE) * CAST(d AS DOUBLE) * 1000000D " +
-            "/ (CAST(r AS DOUBLE) * CAST(c AS DOUBLE) * CAST(nn AS DOUBLE))) AS BIGINT)"))
+      contingencyCells(s, dir)
         .agg(max("nn").as("n_docs"),
           count(lit(1)).as("n_cells"),
           countDistinct("source").as("n_sources"),
@@ -1709,21 +1738,7 @@ object Aggregates {
           col("pk.source").as("top_source"), col("pk.lang").as("top_lang"),
           col("pk.contrib_micro").as("top_contrib_micro"))
     },
-    Some("""WITH ct AS (SELECT source, lang, CAST(COUNT(*) AS BIGINT) AS o
-                  FROM documents GROUP BY source, lang),
-            rm AS (SELECT source, CAST(SUM(o) AS BIGINT) AS r FROM ct GROUP BY source),
-            cm AS (SELECT lang, CAST(SUM(o) AS BIGINT) AS c FROM ct GROUP BY lang),
-            nn AS (SELECT CAST(SUM(o) AS BIGINT) AS nn FROM ct),
-            cell AS (SELECT ct.source, ct.lang,
-                      CAST(o AS HUGEINT) * nn.nn - CAST(r AS HUGEINT) * c AS d,
-                      r, c, nn.nn AS nn
-                     FROM ct JOIN rm USING (source) JOIN cm USING (lang)
-                     CROSS JOIN nn),
-            sc AS (SELECT source, lang, nn,
-                    CAST(FLOOR(CAST(d AS DOUBLE) * CAST(d AS DOUBLE) * 1000000
-                      / (CAST(r AS DOUBLE) * CAST(c AS DOUBLE)
-                         * CAST(nn AS DOUBLE))) AS BIGINT) AS contrib_micro
-                   FROM cell)
+    Some(s"""WITH $contingencySql
             SELECT MAX(nn) AS n_docs,
              CAST(COUNT(*) AS BIGINT) AS n_cells,
              (CAST(COUNT(DISTINCT source) AS BIGINT) - 1)
@@ -1846,21 +1861,7 @@ object Aggregates {
   private val qAggCramersV = Q(
     "q_agg_cramers_v",
     (s, dir) => {
-      val cont = Tables(s, dir, "documents")
-        .groupBy("source", "lang").agg(count(lit(1)).as("o"))
-      val rm = cont.groupBy("source").agg(sum("o").as("r"))
-      val cm = cont.groupBy("lang").agg(sum("o").as("c"))
-      val nn = cont.agg(sum("o").as("nn"))
-      cont.join(rm, "source").join(cm, "lang")
-        .crossJoin(broadcast(nn))
-        // deviation widened BEFORE the multiply: o·N ≈ (n/cells)·n is
-        // n²-scale, wrapping BIGINT past n ≈ 2e11 docs in Spark where
-        // DuckDB errors (the ADVICE r10 parity class); d only feeds the
-        // bit-identical double contribution, so nothing downstream moves
-        .withColumn("d", expr("CAST(o AS DECIMAL(38, 0)) * nn - CAST(r AS DECIMAL(38, 0)) * c"))
-        .withColumn("contrib_micro", expr(
-          "CAST(floor(CAST(d AS DOUBLE) * CAST(d AS DOUBLE) * 1000000D " +
-            "/ (CAST(r AS DOUBLE) * CAST(c AS DOUBLE) * CAST(nn AS DOUBLE))) AS BIGINT)"))
+      contingencyCells(s, dir)
         .agg(max("nn").as("n_docs"),
           countDistinct("source").as("n_sources"),
           countDistinct("lang").as("n_langs"),
@@ -1874,18 +1875,7 @@ object Aggregates {
           expr("CAST(chi2_micro div (n_docs * k) >= 40000L AS BIGINT)")
             .as("strong_assoc"))
     },
-    Some("""WITH ct AS (SELECT source, lang, CAST(COUNT(*) AS BIGINT) AS o
-                  FROM documents GROUP BY source, lang),
-            rm AS (SELECT source, CAST(SUM(o) AS BIGINT) AS r FROM ct GROUP BY source),
-            cm AS (SELECT lang, CAST(SUM(o) AS BIGINT) AS c FROM ct GROUP BY lang),
-            nn AS (SELECT CAST(SUM(o) AS BIGINT) AS nn FROM ct),
-            sc AS (SELECT ct.source, ct.lang, nn.nn,
-                    CAST(FLOOR(CAST(CAST(o AS HUGEINT) * nn.nn - CAST(r AS HUGEINT) * c AS DOUBLE)
-                      * CAST(CAST(o AS HUGEINT) * nn.nn - CAST(r AS HUGEINT) * c AS DOUBLE) * 1000000
-                      / (CAST(r AS DOUBLE) * CAST(c AS DOUBLE)
-                         * CAST(nn.nn AS DOUBLE))) AS BIGINT) AS contrib_micro
-                   FROM ct JOIN rm USING (source) JOIN cm USING (lang)
-                   CROSS JOIN nn),
+    Some(s"""WITH $contingencySql,
             agg AS (SELECT MAX(nn) AS n_docs,
                      CAST(COUNT(DISTINCT source) AS BIGINT) AS n_sources,
                      CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs,
@@ -2064,28 +2054,44 @@ object Aggregates {
                         THEN 1 ELSE 0 END AS BIGINT) AS significant
              FROM u"""))
 
-  /** Two-sample A/B EXPERIMENT readout — the analytics table every
-    * product experiment ends at: per metric (event type), each arm's
-    * size, mean, and variance, the lift, and a z-test verdict. The
-    * assignment is the standard deterministic hash randomization
-    * (salted md5 of user_id, mod 2 — the `q_split_train` membership
-    * discipline: no rand(), re-runs agree, and assignment is by USER so
-    * a user's events never straddle arms — the unit-of-randomization
-    * rule of every experimentation platform, Kohavi et al. KDD'07).
-    *
-    * Declared D1 substitutions: values pre-quantized to integer
-    * milli-units (the one float op per row, before any sum); variance
-    * is the biased population form q/n − (s/n)² in truncating integer
-    * divisions; the verdict is a pooled two-sample z with |z| ≥ 2
-    * (~95%), spelled as ONE integer cross-comparison d² ≥ 4·(va/na +
-    * vb/nb) — no sqrt, no float, engine-exact. On this fixture value ⊥
-    * user parity, so verdicts are null-effect draws; the flag column is
-    * the operator's contract, not the fixture's story.
-    *
-    * Scale shape: one scan → map-only quantize + hash-assign → ONE
-    * map-combinable (type, arm) aggregate → 5×2 rows pivoted by
-    * conditional sums into 5. Nothing after the first agg scales.
+  /** Per event type, the `ab_` user-hash arms' sizes `n_a`/`n_b`, milli
+    * value sums `sa`/`sb` and second moments `qa`/`qb`: the census that
+    * [[qAggAbTest]] tests and [[qAggPower]] plans for.
+    * [[armMomentsSql]] (CTEs `e`, `g`) is its twin.
     */
+  private def armMoments(s: SparkSession, dir: String): DataFrame =
+    Tables.events(s, dir)
+      .withColumn("arm", expr(s"pmod(${Llm.md5Hex32Spark(
+        "concat('ab_', CAST(user_id AS STRING))")}, 2L)"))
+      .withColumn("vm", expr("CAST(floor(value * 1000) AS BIGINT)"))
+      .groupBy("event_type")
+      .agg(
+        sum(expr("CASE WHEN arm = 0 THEN 1L ELSE 0L END")).as("n_a"),
+        sum(expr("CASE WHEN arm = 1 THEN 1L ELSE 0L END")).as("n_b"),
+        sum(expr("CASE WHEN arm = 0 THEN vm ELSE 0L END")).as("sa"),
+        sum(expr("CASE WHEN arm = 1 THEN vm ELSE 0L END")).as("sb"),
+        // second moments widened BEFORE the multiply: Σvm² ≤ 1e6·n
+        // crosses 2⁶³ near n ≈ 9e12 events per type — Spark's BIGINT
+        // sum wraps silently there while DuckDB's SUM auto-widens to
+        // HUGEINT (the ADVICE r10 parity class); every downstream
+        // div collapses back to BIGINT-bounded values
+        sum(expr("CASE WHEN arm = 0 THEN CAST(vm AS DECIMAL(38, 0)) * vm ELSE 0 END")).as("qa"),
+        sum(expr("CASE WHEN arm = 1 THEN CAST(vm AS DECIMAL(38, 0)) * vm ELSE 0 END")).as("qb"))
+
+  private def armMomentsSql: String =
+    s"""e AS (SELECT event_type,
+                   (${Llm.md5Hex32Sql("'ab_' || CAST(user_id AS VARCHAR)")}) % 2 AS arm,
+                   CAST(FLOOR(value * 1000) AS BIGINT) AS vm
+                  FROM events),
+            g AS (SELECT event_type,
+                   CAST(SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
+                   CAST(SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
+                   CAST(SUM(CASE WHEN arm = 0 THEN vm ELSE 0 END) AS BIGINT) AS sa,
+                   CAST(SUM(CASE WHEN arm = 1 THEN vm ELSE 0 END) AS BIGINT) AS sb,
+                   SUM(CASE WHEN arm = 0 THEN CAST(vm AS HUGEINT) * vm ELSE 0 END) AS qa,
+                   SUM(CASE WHEN arm = 1 THEN CAST(vm AS HUGEINT) * vm ELSE 0 END) AS qb
+                  FROM e GROUP BY event_type)"""
+
   /** EXPERIMENT POWER / MDE readout — the "how long must this test
     * run" table every experimentation platform prints next to its
     * verdict (Cohen 1988; Kohavi et al., "Trustworthy Online
@@ -2108,23 +2114,7 @@ object Aggregates {
   private val qAggPower = Q(
     "q_agg_power",
     (s, dir) => {
-      Tables.events(s, dir)
-        .withColumn("arm", expr(s"pmod(${Llm.md5Hex32Spark(
-          "concat('ab_', CAST(user_id AS STRING))")}, 2L)"))
-        .withColumn("vm", expr("CAST(floor(value * 1000) AS BIGINT)"))
-        .groupBy("event_type")
-        .agg(
-          sum(expr("CASE WHEN arm = 0 THEN 1L ELSE 0L END")).as("n_a"),
-          sum(expr("CASE WHEN arm = 1 THEN 1L ELSE 0L END")).as("n_b"),
-          sum(expr("CASE WHEN arm = 0 THEN vm ELSE 0L END")).as("sa"),
-          sum(expr("CASE WHEN arm = 1 THEN vm ELSE 0L END")).as("sb"),
-          // second moments widened BEFORE the multiply: Σvm² ≤ 1e6·n
-          // crosses 2⁶³ near n ≈ 9e12 events per type — Spark's BIGINT
-          // sum wraps silently there while DuckDB's SUM auto-widens to
-          // HUGEINT (the ADVICE r10 parity class); every downstream
-          // div collapses back to BIGINT-bounded values
-          sum(expr("CASE WHEN arm = 0 THEN CAST(vm AS DECIMAL(38, 0)) * vm ELSE 0 END")).as("qa"),
-          sum(expr("CASE WHEN arm = 1 THEN CAST(vm AS DECIMAL(38, 0)) * vm ELSE 0 END")).as("qb"))
+      armMoments(s, dir)
         .withColumn("mean_a_milli", expr("sa div n_a"))
         .withColumn("var_a", expr("qa div n_a - (sa div n_a) * (sa div n_a)"))
         .withColumn("var_b", expr("qb div n_b - (sb div n_b) * (sb div n_b)"))
@@ -2147,18 +2137,7 @@ object Aggregates {
           "var_b", "mde_milli", "mde_bp", "n_need_5pct")
         .orderBy("event_type")
     },
-    Some(s"""WITH e AS (SELECT event_type,
-                   (${Llm.md5Hex32Sql("'ab_' || CAST(user_id AS VARCHAR)")}) % 2 AS arm,
-                   CAST(FLOOR(value * 1000) AS BIGINT) AS vm
-                  FROM events),
-            g AS (SELECT event_type,
-                   CAST(SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-                   CAST(SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-                   CAST(SUM(CASE WHEN arm = 0 THEN vm ELSE 0 END) AS BIGINT) AS sa,
-                   CAST(SUM(CASE WHEN arm = 1 THEN vm ELSE 0 END) AS BIGINT) AS sb,
-                   SUM(CASE WHEN arm = 0 THEN CAST(vm AS HUGEINT) * vm ELSE 0 END) AS qa,
-                   SUM(CASE WHEN arm = 1 THEN CAST(vm AS HUGEINT) * vm ELSE 0 END) AS qb
-                  FROM e GROUP BY event_type),
+    Some(s"""WITH $armMomentsSql,
             v AS (SELECT event_type, n_a, n_b,
                    CAST(sa // n_a AS BIGINT) AS mean_a_milli,
                    CAST(qa // n_a - (sa // n_a) * (sa // n_a) AS BIGINT) AS var_a,
@@ -2177,26 +2156,32 @@ object Aggregates {
                   ELSE 0 END AS BIGINT) AS n_need_5pct
             FROM m ORDER BY event_type"""))
 
+  /** Two-sample A/B EXPERIMENT readout — the analytics table every
+    * product experiment ends at: per metric (event type), each arm's
+    * size, mean, and variance, the lift, and a z-test verdict. The
+    * assignment is the standard deterministic hash randomization
+    * (salted md5 of user_id, mod 2 — the `q_split_train` membership
+    * discipline: no rand(), re-runs agree, and assignment is by USER so
+    * a user's events never straddle arms — the unit-of-randomization
+    * rule of every experimentation platform, Kohavi et al. KDD'07).
+    *
+    * Declared D1 substitutions: values pre-quantized to integer
+    * milli-units (the one float op per row, before any sum); variance
+    * is the biased population form q/n − (s/n)² in truncating integer
+    * divisions; the verdict is a pooled two-sample z with |z| ≥ 2
+    * (~95%), spelled as ONE integer cross-comparison d² ≥ 4·(va/na +
+    * vb/nb) — no sqrt, no float, engine-exact. On this fixture value ⊥
+    * user parity, so verdicts are null-effect draws; the flag column is
+    * the operator's contract, not the fixture's story.
+    *
+    * Scale shape: one scan → map-only quantize + hash-assign → ONE
+    * map-combinable (type, arm) aggregate → 5×2 rows pivoted by
+    * conditional sums into 5. Nothing after the first agg scales.
+    */
   private val qAggAbTest = Q(
     "q_agg_ab_test",
     (s, dir) => {
-      Tables.events(s, dir)
-        .withColumn("arm", expr(s"pmod(${Llm.md5Hex32Spark(
-          "concat('ab_', CAST(user_id AS STRING))")}, 2L)"))
-        .withColumn("vm", expr("CAST(floor(value * 1000) AS BIGINT)"))
-        .groupBy("event_type")
-        .agg(
-          sum(expr("CASE WHEN arm = 0 THEN 1L ELSE 0L END")).as("n_a"),
-          sum(expr("CASE WHEN arm = 1 THEN 1L ELSE 0L END")).as("n_b"),
-          sum(expr("CASE WHEN arm = 0 THEN vm ELSE 0L END")).as("sa"),
-          sum(expr("CASE WHEN arm = 1 THEN vm ELSE 0L END")).as("sb"),
-          // second moments widened BEFORE the multiply: Σvm² ≤ 1e6·n
-          // crosses 2⁶³ near n ≈ 9e12 events per type — Spark's BIGINT
-          // sum wraps silently there while DuckDB's SUM auto-widens to
-          // HUGEINT (the ADVICE r10 parity class); every downstream
-          // div collapses back to BIGINT-bounded values
-          sum(expr("CASE WHEN arm = 0 THEN CAST(vm AS DECIMAL(38, 0)) * vm ELSE 0 END")).as("qa"),
-          sum(expr("CASE WHEN arm = 1 THEN CAST(vm AS DECIMAL(38, 0)) * vm ELSE 0 END")).as("qb"))
+      armMoments(s, dir)
         .select(col("event_type"), col("n_a"), col("n_b"),
           expr("sa div n_a").as("mean_a_milli"),
           expr("sb div n_b").as("mean_b_milli"),
@@ -2209,18 +2194,7 @@ object Aggregates {
                   AS BIGINT)""").as("significant"))
         .orderBy("event_type")
     },
-    Some(s"""WITH e AS (SELECT event_type,
-                   (${Llm.md5Hex32Sql("'ab_' || CAST(user_id AS VARCHAR)")}) % 2 AS arm,
-                   CAST(FLOOR(value * 1000) AS BIGINT) AS vm
-                  FROM events),
-            g AS (SELECT event_type,
-                   CAST(SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-                   CAST(SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-                   CAST(SUM(CASE WHEN arm = 0 THEN vm ELSE 0 END) AS BIGINT) AS sa,
-                   CAST(SUM(CASE WHEN arm = 1 THEN vm ELSE 0 END) AS BIGINT) AS sb,
-                   SUM(CASE WHEN arm = 0 THEN CAST(vm AS HUGEINT) * vm ELSE 0 END) AS qa,
-                   SUM(CASE WHEN arm = 1 THEN CAST(vm AS HUGEINT) * vm ELSE 0 END) AS qb
-                  FROM e GROUP BY event_type)
+    Some(s"""WITH $armMomentsSql
             SELECT event_type, n_a, n_b,
              CAST(sa // n_a AS BIGINT) AS mean_a_milli,
              CAST(sb // n_b AS BIGINT) AS mean_b_milli,

@@ -238,10 +238,7 @@ object AnnIndex {
     Some(s"""WITH ${Llm.vecsSql},
              ${Llm.ivfOccCentSql},
              ${Llm.routedAsgSql(Llm.EmbRouteSalt)},
-             idx AS (SELECT vec_id AS n_id, v AS nv, nrm AS nn, c_id AS cell
-                     FROM asg WHERE arn = 1),
-             qry AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn, c_id AS cell
-                     FROM asg WHERE arn <= ${Llm.IvfProbes}),
+             ${Llm.ivfIdxQrySql},
              ${Llm.cellTopKSql}"""))
 
   /** Corpus vectors split into a ~90% already-indexed base and a ~10%
@@ -270,6 +267,22 @@ object AnnIndex {
     * different centroid population).
     */
   private val UpdRouteSalt = "annur_"
+
+  /** Oracle twin of the update artifact's election: the base/incoming
+    * split `sp` ([[updSplit]]), the base-only centroid sample `cent`
+    * ([[baseCentRows]]) and the routed election `asg` under
+    * [[UpdRouteSalt]].
+    */
+  private def updAsgSql: String =
+    s"""${Llm.vecsSql},
+             sp AS (SELECT vec_id, v, nrm,
+                      (${Llm.md5Hex32Sql("'annu_' || CAST(vec_id AS VARCHAR)")}) % 10 <> 0 AS is_base
+                    FROM n),
+             prm AS (SELECT ${Llm.occThrSql} AS thr FROM sp WHERE is_base),
+             cent AS MATERIALIZED (SELECT vec_id AS c_id, v AS cv, nrm AS cn
+                      FROM sp CROSS JOIN prm
+                      WHERE is_base AND ${Llm.md5U01Sql("'annuc_' || CAST(vec_id AS VARCHAR)")} < thr),
+             ${Llm.routedAsgSql(UpdRouteSalt)}"""
 
   private def updPath(dir: String): String = indexPath(dir) + "_upd"
 
@@ -360,15 +373,7 @@ object AnnIndex {
           sum("vec_id").as("id_sum"))
         .orderBy("cell")
     },
-    Some(s"""WITH ${Llm.vecsSql},
-             sp AS (SELECT vec_id, v, nrm,
-                      (${Llm.md5Hex32Sql("'annu_' || CAST(vec_id AS VARCHAR)")}) % 10 <> 0 AS is_base
-                    FROM n),
-             prm AS (SELECT ${Llm.occThrSql} AS thr FROM sp WHERE is_base),
-             cent AS MATERIALIZED (SELECT vec_id AS c_id, v AS cv, nrm AS cn
-                      FROM sp CROSS JOIN prm
-                      WHERE is_base AND ${Llm.md5U01Sql("'annuc_' || CAST(vec_id AS VARCHAR)")} < thr),
-             ${Llm.routedAsgSql(UpdRouteSalt)}
+    Some(s"""WITH $updAsgSql
              SELECT asg.c_id AS cell,
                     CAST(SUM(CASE WHEN sp.is_base THEN 1 ELSE 0 END) AS BIGINT) AS n_base,
                     CAST(SUM(CASE WHEN NOT sp.is_base THEN 1 ELSE 0 END) AS BIGINT) AS n_delta,
@@ -408,15 +413,7 @@ object AnnIndex {
           sum("vec_id").as("id_sum"))
         .orderBy("cell")
     },
-    Some(s"""WITH ${Llm.vecsSql},
-             sp AS (SELECT vec_id, v, nrm,
-                      (${Llm.md5Hex32Sql("'annu_' || CAST(vec_id AS VARCHAR)")}) % 10 <> 0 AS is_base
-                    FROM n),
-             prm AS (SELECT ${Llm.occThrSql} AS thr FROM sp WHERE is_base),
-             cent AS MATERIALIZED (SELECT vec_id AS c_id, v AS cv, nrm AS cn
-                      FROM sp CROSS JOIN prm
-                      WHERE is_base AND ${Llm.md5U01Sql("'annuc_' || CAST(vec_id AS VARCHAR)")} < thr),
-             ${Llm.routedAsgSql(UpdRouteSalt)}
+    Some(s"""WITH $updAsgSql
              SELECT c_id AS cell, CAST(COUNT(*) AS BIGINT) AS n_vecs,
                     CAST(0 AS BIGINT) AS n_delta,
                     CAST(SUM(vec_id) AS BIGINT) AS id_sum

@@ -633,10 +633,8 @@ object Curation {
     "q_sample_hard_negatives",
     (s, dir) => {
       val probed = Llm.ivfOccProbed(s, dir)
-      val idx = probed.select(col("vec_id").as("n_id"), col("v").as("nv"),
-        col("nrm").as("nn"), expr("element_at(pc, 1).c_id").as("cell"))
-      val qry = probed.select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("nrm").as("qn"), explode(expr("transform(pc, p -> p.c_id)")).as("cell"))
+      val idx = Llm.probedIdx(probed)
+      val qry = Llm.probedQry(probed)
       val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
       qry.join(idx, Seq("cell")).filter(col("q_id") =!= col("n_id"))
         .withColumn("cos", round(
@@ -651,10 +649,7 @@ object Curation {
     Some(s"""WITH ${Llm.vecsSql},
              ${Llm.ivfOccCentSql},
              ${Llm.routedAsgSql(Llm.EmbRouteSalt)},
-             idx AS (SELECT vec_id AS n_id, v AS nv, nrm AS nn, c_id AS cell
-                     FROM asg WHERE arn = 1),
-             qry AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn, c_id AS cell
-                     FROM asg WHERE arn <= ${Llm.IvfProbes}),
+             ${Llm.ivfIdxQrySql},
              p AS (SELECT q_id, n_id,
                     ROUND(list_dot_product(qv, nv) / (qn * nn), 4) AS cos
                    FROM qry JOIN idx USING (cell) WHERE q_id <> n_id),
@@ -1578,7 +1573,7 @@ object Curation {
     * everything after runs on the ≤ 8·|sources| candidate frame
     * (map-only posexplode of the 8-literal decay array — no join), with
     * the 1-row budget broadcast and ONE partition-less cumulative window
-    * over that bounded frame (PlanLintSpec registry). Output ≤ |sources|
+    * over that bounded frame (`PlanLintSpec` bounds it by its rows). Output ≤ |sources|
     * rows.
     */
   private[graft] def mixEpochsFrom(docs: DataFrame): DataFrame = {

@@ -42,25 +42,6 @@ object Graph {
     */
   private val PrInit = 1000000000L
 
-  /** PageRank with damping 0.85 over the UNDIRECTED bipartite graph
-    * customer —(ordered from)— supplier, distilled from orders ⋈ lineitem
-    * (distinct pairs; both directions materialized, so every node has
-    * out-degree ≥ 1 and there is no dangling mass). Nodes carry disjoint
-    * integer ids (customer 2k, supplier 2k+1); output is the top-20 nodes
-    * by final rank with the id split back into (node_type, node_key) —
-    * all-integer (D1), fully deterministic tie-break.
-    *
-    * Scale shape: per superstep, contributions are one equi-join of the
-    * skinny rank frame onto the degree-annotated edge list (both hash-
-    * partitioned on src — a production run would co-bucket them once)
-    * followed by one map-combinable integer sum keyed dst, then a
-    * node-keyed LEFT join folds teleport back in. The rank frame is
-    * re-materialized per superstep (localCheckpoint — the
-    * ConnectedComponents pattern) so superstep t never replays 1..t−1;
-    * the driver sees no data at all, only the loop counter. At 100 TB
-    * this is textbook Pregel-on-shuffle: cost per iteration is one
-    * shuffle of |E| skinny rows + one of |V|.
-    */
   /** The degree-annotated bipartite edge list (src, dst, deg) PERSISTED
     * once per corpus ([[Artifacts.persisted]], fingerprint over BOTH
     * source tables): graph construction — the orders ⋈ lineitem join +
@@ -82,6 +63,46 @@ object Graph {
       edges.join(deg, "src")
     }
 
+  /** Oracle twin of [[bipartiteEdges]]: CTEs `pairs`, `edges` (both
+    * orientations) and `deg` (src, deg).
+    */
+  private def bipartiteSql: String =
+    """pairs AS (SELECT DISTINCT o_custkey AS c, l_suppkey AS sk
+                  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
+             edges AS (SELECT c * 2 AS src, sk * 2 + 1 AS dst FROM pairs
+                       UNION ALL
+                       SELECT sk * 2 + 1 AS src, c * 2 AS dst FROM pairs),
+             deg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS deg
+                     FROM edges GROUP BY src)"""
+
+  /** Each bipartite edge with the degrees of both ends: (dst, src, deg,
+    * ddeg), deg = deg(src) and ddeg = deg(dst) — the degree-mixing
+    * input of [[qGraphMixing]] and [[qGraphAssortativity]].
+    */
+  private def degreePairs(s: SparkSession, dir: String): DataFrame = {
+    val e = bipartiteEdges(s, dir)
+    e.join(e.select(col("src").as("dst"), col("deg").as("ddeg")).distinct(), "dst")
+  }
+
+  /** PageRank with damping 0.85 over the UNDIRECTED bipartite graph
+    * customer —(ordered from)— supplier, distilled from orders ⋈ lineitem
+    * (distinct pairs; both directions materialized, so every node has
+    * out-degree ≥ 1 and there is no dangling mass). Nodes carry disjoint
+    * integer ids (customer 2k, supplier 2k+1); output is the top-20 nodes
+    * by final rank with the id split back into (node_type, node_key) —
+    * all-integer (D1), fully deterministic tie-break.
+    *
+    * Scale shape: per superstep, contributions are one equi-join of the
+    * skinny rank frame onto the degree-annotated edge list (both hash-
+    * partitioned on src — a production run would co-bucket them once)
+    * followed by one map-combinable integer sum keyed dst, then a
+    * node-keyed LEFT join folds teleport back in. The rank frame is
+    * re-materialized per superstep (localCheckpoint — the
+    * ConnectedComponents pattern) so superstep t never replays 1..t−1;
+    * the driver sees no data at all, only the loop counter. At 100 TB
+    * this is textbook Pregel-on-shuffle: cost per iteration is one
+    * shuffle of |E| skinny rows + one of |V|.
+    */
   private val qGraphPagerank = Q(
     "q_graph_pagerank",
     (s, dir) => {
@@ -120,13 +141,7 @@ object Graph {
         .orderBy(col("rank_micro").desc, col("node_type"), col("node_key"))
         .limit(20)
     },
-    Some(s"""WITH pairs AS (SELECT DISTINCT o_custkey AS c, l_suppkey AS sk
-                  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-             edges AS (SELECT c * 2 AS src, sk * 2 + 1 AS dst FROM pairs
-                       UNION ALL
-                       SELECT sk * 2 + 1 AS src, c * 2 AS dst FROM pairs),
-             deg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS deg
-                     FROM edges GROUP BY src),
+    Some(s"""WITH $bipartiteSql,
              nodes AS (SELECT DISTINCT src AS id FROM edges),
              r0 AS MATERIALIZED (SELECT id, CAST($PrInit AS BIGINT) AS r FROM nodes),
              c1 AS (SELECT e.dst AS id, CAST(SUM(r0.r // d.deg) AS BIGINT) AS m
@@ -233,9 +248,7 @@ object Graph {
   private val qGraphMixing = Q(
     "q_graph_mixing",
     (s, dir) => {
-      val e = bipartiteEdges(s, dir) // (src, dst, deg) with deg = deg(src)
-      val dd = e.select(col("src").as("dst"), col("deg").as("ddeg")).distinct()
-      val cells = e.join(dd, "dst")
+      val cells = degreePairs(s, dir)
         .select(expr("CAST(length(bin(deg)) AS BIGINT)").as("jb"),
           expr("CAST(length(bin(ddeg)) AS BIGINT)").as("kb"),
           col("deg"), col("ddeg"))
@@ -250,13 +263,7 @@ object Graph {
           col("mean_src_deg"), col("mean_dst_deg"))
         .orderBy("jb", "kb")
     },
-    Some("""WITH pairs AS (SELECT DISTINCT o_custkey AS c, l_suppkey AS sk
-                  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-            edges AS (SELECT c * 2 AS src, sk * 2 + 1 AS dst FROM pairs
-                      UNION ALL
-                      SELECT sk * 2 + 1 AS src, c * 2 AS dst FROM pairs),
-            deg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS deg
-                    FROM edges GROUP BY src),
+    Some(s"""WITH $bipartiteSql,
             an AS (SELECT e.src, e.dst, d1.deg AS deg, d2.deg AS ddeg
                    FROM edges e JOIN deg d1 ON e.src = d1.src
                    JOIN deg d2 ON e.dst = d2.src),
@@ -296,9 +303,7 @@ object Graph {
   private val qGraphAssortativity = Q(
     "q_graph_assortativity",
     (s, dir) => {
-      val e = bipartiteEdges(s, dir) // (src, dst, deg) with deg = deg(src)
-      val dd = e.select(col("src").as("dst"), col("deg").as("ddeg")).distinct()
-      e.join(dd, "dst")
+      degreePairs(s, dir)
         .agg(count(lit(1)).as("m_d"),
           sum(expr("CAST(deg AS DECIMAL(38, 0))")).as("sj"),
           sum(expr("CAST(deg AS DECIMAL(38, 0)) * deg")).as("sjj"),
@@ -315,13 +320,7 @@ object Graph {
           expr("CASE WHEN den = 0 THEN 0L ELSE (abs(num) * 10000L) div den END")
             .as("r_abs_bp"))
     },
-    Some("""WITH pairs AS (SELECT DISTINCT o_custkey AS c, l_suppkey AS sk
-                  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-            edges AS (SELECT c * 2 AS src, sk * 2 + 1 AS dst FROM pairs
-                      UNION ALL
-                      SELECT sk * 2 + 1 AS src, c * 2 AS dst FROM pairs),
-            deg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS deg
-                    FROM edges GROUP BY src),
+    Some(s"""WITH $bipartiteSql,
             an AS (SELECT d1.deg AS deg, d2.deg AS ddeg
                    FROM edges e JOIN deg d1 ON e.src = d1.src
                    JOIN deg d2 ON e.dst = d2.src),
@@ -442,15 +441,24 @@ object Graph {
                               GREATEST(node, peer) AS b FROM kept)"""
 
   /** Per-node triangle-participation census (node, tri_cnt) over the
-    * shared sparsified co-purchase graph — the degree-oriented wedge
-    * machinery, factored out (r13) so `q_graph_triangles` (the ranking)
-    * and `q_graph_clustering` (the tri/(deg choose 2) ratio) share ONE
-    * spelling in both engines. Each triangle is found exactly once as a
-    * wedge at its (deg, id)-lexicographic min corner closed by an
-    * oriented edge; fan-out O(√|E|) per pivot.
+    * shared sparsified co-purchase graph ([[triangles]]), so
+    * `q_graph_triangles` (the ranking) and `q_graph_clustering` (the
+    * tri/(deg choose 2) ratio) share ONE spelling in both engines.
     */
   private def triCounts(s: SparkSession, dir: String): DataFrame = {
-    val edges = sparseEdges(s, dir)
+    val (_, tri) = triangles(sparseEdges(s, dir))
+    tri.select(col("x").as("node"))
+      .unionByName(tri.select(col("y").as("node")))
+      .unionByName(tri.select(col("z").as("node")))
+      .groupBy("node").agg(count(lit(1)).as("tri_cnt"))
+  }
+
+  /** The degree census `deg` (n, deg) of an undirected edge list (a, b)
+    * and its triangles `tri` (x, y, z), each found once as a wedge at
+    * its (deg, id)-lexicographic min corner closed by an oriented edge;
+    * fan-out O(√|E|) per pivot. [[triWedgesSql]] is its twin.
+    */
+  private def triangles(edges: DataFrame): (DataFrame, DataFrame) = {
     val deg = edges.select(col("a").as("n")).unionByName(edges.select(col("b").as("n")))
       .groupBy("n").agg(count(lit(1)).as("deg"))
     // degree-oriented edges: src ≺ dst under the lexicographic pair
@@ -477,18 +485,14 @@ object Graph {
         col("e1.src") === col("e2.src") && wedgeLt)
       .select(col("e1.src").as("x"), col("e1.dst").as("y"), col("e2.dst").as("z"))
       .join(ori.select(col("src").as("y"), col("dst").as("z")), Seq("y", "z"), "left_semi")
-    tri.select(col("x").as("node"))
-      .unionByName(tri.select(col("y").as("node")))
-      .unionByName(tri.select(col("z").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("tri_cnt"))
+    (deg, tri)
   }
 
-  /** The deg/ori/tri/corners/tcnt CTE chain of the same census, shared by
-    * the `q_graph_triangles` and `q_graph_clustering` oracles (tcnt is
-    * MATERIALIZED — the `q_graph_kcore` lesson: DuckDB's default inlining
-    * re-expands a multiply-consumed CTE). Expects `edges` in scope.
+  /** Oracle twin of [[triangles]]: the deg/ori/tri CTE chain, shared by
+    * the census below and the `q_graph_jaccard_nbr` oracle. Expects
+    * `edges` in scope.
     */
-  private def triCensusSql: String =
+  private def triWedgesSql: String =
     s"""deg AS MATERIALIZED (SELECT n, CAST(COUNT(*) AS BIGINT) AS deg FROM (
                        SELECT a AS n FROM edges UNION ALL SELECT b AS n FROM edges)
                      GROUP BY n),
@@ -504,7 +508,15 @@ object Graph {
                        ON e1.src = e2.src
                       AND (e1.ddst < e2.ddst OR (e1.ddst = e2.ddst AND e1.dst < e2.dst))
                      WHERE EXISTS (SELECT 1 FROM ori e3
-                                   WHERE e3.src = e1.dst AND e3.dst = e2.dst)),
+                                   WHERE e3.src = e1.dst AND e3.dst = e2.dst))"""
+
+  /** The corners/tcnt census over [[triWedgesSql]], shared by the
+    * `q_graph_triangles` and `q_graph_clustering` oracles (tcnt is
+    * MATERIALIZED — the `q_graph_kcore` lesson: DuckDB's default inlining
+    * re-expands a multiply-consumed CTE). Expects `edges` in scope.
+    */
+  private def triCensusSql: String =
+    s"""$triWedgesSql,
              corners AS (SELECT x AS node FROM tri
                          UNION ALL SELECT y FROM tri
                          UNION ALL SELECT z FROM tri),
@@ -697,25 +709,7 @@ object Graph {
     "q_graph_jaccard_nbr",
     (s, dir) => {
       val edges = sparseEdges(s, dir)
-      val deg = edges.select(col("a").as("n")).unionByName(edges.select(col("b").as("n")))
-        .groupBy("n").agg(count(lit(1)).as("deg"))
-      val ann = edges
-        .join(deg.select(col("n").as("a"), col("deg").as("da")), "a")
-        .join(deg.select(col("n").as("b"), col("deg").as("db")), "b")
-      val aLtB = col("da") < col("db") ||
-        (col("da") === col("db") && col("a") < col("b"))
-      // not repartitioned — see triCounts' ori note (that regressed the
-      // wedge machinery by forcing SMJs over the wedge stream)
-      val ori = ann.select(
-          when(aLtB, col("a")).otherwise(col("b")).as("src"),
-          when(aLtB, col("b")).otherwise(col("a")).as("dst"),
-          when(aLtB, col("db")).otherwise(col("da")).as("ddst"))
-      val wedgeLt = col("e1.ddst") < col("e2.ddst") ||
-        (col("e1.ddst") === col("e2.ddst") && col("e1.dst") < col("e2.dst"))
-      val tri = ori.as("e1").join(ori.as("e2"),
-          col("e1.src") === col("e2.src") && wedgeLt)
-        .select(col("e1.src").as("x"), col("e1.dst").as("y"), col("e2.dst").as("z"))
-        .join(ori.select(col("src").as("y"), col("dst").as("z")), Seq("y", "z"), "left_semi")
+      val (deg, tri) = triangles(edges)
       val common = tri.select(explode(array(
           struct(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b")),
           struct(least(col("x"), col("z")).as("a"), greatest(col("x"), col("z")).as("b")),
@@ -734,22 +728,7 @@ object Graph {
         .limit(20)
     },
     Some(s"""WITH $sparseEdgesSql,
-             deg AS (SELECT n, CAST(COUNT(*) AS BIGINT) AS deg FROM (
-                       SELECT a AS n FROM edges UNION ALL SELECT b AS n FROM edges)
-                     GROUP BY n),
-             ori AS (SELECT CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND e.a < e.b)
-                                 THEN e.a ELSE e.b END AS src,
-                            CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND e.a < e.b)
-                                 THEN e.b ELSE e.a END AS dst,
-                            CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND e.a < e.b)
-                                 THEN db.deg ELSE da.deg END AS ddst
-                     FROM edges e JOIN deg da ON e.a = da.n JOIN deg db ON e.b = db.n),
-             tri AS (SELECT e1.src AS x, e1.dst AS y, e2.dst AS z
-                     FROM ori e1 JOIN ori e2
-                       ON e1.src = e2.src
-                      AND (e1.ddst < e2.ddst OR (e1.ddst = e2.ddst AND e1.dst < e2.dst))
-                     WHERE EXISTS (SELECT 1 FROM ori e3
-                                   WHERE e3.src = e1.dst AND e3.dst = e2.dst)),
+             $triWedgesSql,
              te AS (SELECT LEAST(x, y) AS a, GREATEST(x, y) AS b FROM tri
                     UNION ALL SELECT LEAST(x, z), GREATEST(x, z) FROM tri
                     UNION ALL SELECT LEAST(y, z), GREATEST(y, z) FROM tri),

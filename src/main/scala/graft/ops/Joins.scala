@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Artifacts, Q, Tables}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -254,40 +255,51 @@ object Joins {
             FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
             GROUP BY p.p_brand ORDER BY p.p_brand"""))
 
-  private val qJoinAsof = Q(
-    "q_join_asof",
-    (s, dir) => {
-      // As-of join: each purchase matched to the latest click of the same
-      // user at/before it. No native as-of in Spark SQL — union + running
-      // MAX window (clicks' ts is monotone within the window order, so MAX
-      // of the click-ts column ≡ latest click). One shuffle on user_id,
-      // no self-join: this is the 100 TB-friendly formulation.
-      val ev = Tables.events(s, dir)
-        .filter(col("event_type").isin("click", "purchase"))
-        .select(
-          col("event_id"), col("user_id"), col("ts_us"), col("event_type"),
-          when(col("event_type") === "click", 1L).otherwise(0L).as("is_click"),
-          when(col("event_type") === "click", col("ts_us")).as("click_ts"))
-      val w = Window.partitionBy("user_id")
-        .orderBy(col("ts_us"), col("is_click").desc, col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      ev.withColumn("last_click_us", max("click_ts").over(w))
-        .filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts_us"), col("last_click_us"))
-        .orderBy("user_id", "ts_us", "event_id")
-    },
-    Some("""WITH u AS (
+  /** As-of join: each purchase (event_id, user_id, ts_us, ...) with
+    * `last_click_us`, the latest click of the same user at/before it.
+    * No native as-of in Spark SQL — union + running MAX window (clicks'
+    * ts is monotone within the window order, so MAX of the click-ts
+    * column ≡ latest click). One shuffle on user_id, no self-join: this
+    * is the 100 TB-friendly formulation. [[asofSql]] (CTE `a`) is its
+    * twin.
+    */
+  private def asofPurchases(s: SparkSession, dir: String): DataFrame = {
+    val ev = Tables.events(s, dir)
+      .filter(col("event_type").isin("click", "purchase"))
+      .select(
+        col("event_id"), col("user_id"), col("ts_us"), col("event_type"),
+        when(col("event_type") === "click", 1L).otherwise(0L).as("is_click"),
+        when(col("event_type") === "click", col("ts_us")).as("click_ts"))
+    val w = Window.partitionBy("user_id")
+      .orderBy(col("ts_us"), col("is_click").desc, col("event_id"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    ev.withColumn("last_click_us", max("click_ts").over(w))
+      .filter(col("event_type") === "purchase")
+  }
+
+  private def asofSql: String =
+    """u AS (
               SELECT event_id, user_id, epoch_us(ts) AS ts_us, event_type,
                      CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS is_click,
                      CASE WHEN event_type = 'click' THEN epoch_us(ts) END AS click_ts
-              FROM events WHERE event_type IN ('click','purchase'))
-            SELECT event_id, user_id, ts_us, last_click_us FROM (
+              FROM events WHERE event_type IN ('click','purchase')),
+            a AS (SELECT event_id, user_id, ts_us, last_click_us FROM (
               SELECT event_id, user_id, ts_us, event_type,
                      MAX(click_ts) OVER (PARTITION BY user_id
                        ORDER BY ts_us, is_click DESC, event_id
                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS last_click_us
               FROM u) t
-            WHERE event_type = 'purchase'
+              WHERE event_type = 'purchase')"""
+
+  private val qJoinAsof = Q(
+    "q_join_asof",
+    (s, dir) => {
+      asofPurchases(s, dir)
+        .select(col("event_id"), col("user_id"), col("ts_us"), col("last_click_us"))
+        .orderBy("user_id", "ts_us", "event_id")
+    },
+    Some(s"""WITH $asofSql
+            SELECT event_id, user_id, ts_us, last_click_us FROM a
             ORDER BY user_id, ts_us, event_id"""))
 
   /** AS-OF join with a TOLERANCE window (r11 — pandas
@@ -308,17 +320,7 @@ object Joins {
   private val qJoinAsofTolerance = Q(
     "q_join_asof_tolerance",
     (s, dir) => {
-      val ev = Tables.events(s, dir)
-        .filter(col("event_type").isin("click", "purchase"))
-        .select(
-          col("event_id"), col("user_id"), col("ts_us"), col("event_type"),
-          when(col("event_type") === "click", 1L).otherwise(0L).as("is_click"),
-          when(col("event_type") === "click", col("ts_us")).as("click_ts"))
-      val w = Window.partitionBy("user_id")
-        .orderBy(col("ts_us"), col("is_click").desc, col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      ev.withColumn("last_click_us", max("click_ts").over(w))
-        .filter(col("event_type") === "purchase")
+      asofPurchases(s, dir)
         .withColumn("bucket", expr(
           """CASE WHEN last_click_us IS NULL THEN 2L
                   WHEN ts_us - last_click_us <= 1800000000L THEN 0L
@@ -333,22 +335,12 @@ object Joins {
         .withColumn("match_share_bp",
           expr("n_matched * 10000L div n_purchases"))
     },
-    Some("""WITH u AS (
-              SELECT event_id, user_id, epoch_us(ts) AS ts_us, event_type,
-                     CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS is_click,
-                     CASE WHEN event_type = 'click' THEN epoch_us(ts) END AS click_ts
-              FROM events WHERE event_type IN ('click','purchase')),
+    Some(s"""WITH $asofSql,
             p AS (SELECT ts_us, last_click_us,
                    CASE WHEN last_click_us IS NULL THEN 2
                         WHEN ts_us - last_click_us <= 1800000000 THEN 0
                         ELSE 1 END AS bucket
-                  FROM (
-              SELECT event_id, ts_us, event_type,
-                     MAX(click_ts) OVER (PARTITION BY user_id
-                       ORDER BY ts_us, is_click DESC, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS last_click_us
-              FROM u) t
-                  WHERE event_type = 'purchase')
+                  FROM a)
             SELECT CAST(COUNT(*) AS BIGINT) AS n_purchases,
              CAST(SUM(CASE WHEN bucket = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_matched,
              CAST(SUM(CASE WHEN bucket = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_stale,

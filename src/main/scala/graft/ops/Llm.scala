@@ -1918,12 +1918,29 @@ object Llm {
         .select("q_id", "n_id", "cos"),
       "cos")
 
-  /** Probe-side frame shared by the IVF variants: one row per
-    * (query, probed cell).
+  /** Index-side frame shared by the IVF variants: each vector in its
+    * elected (first) cell. [[ivfIdxQrySql]]'s `idx` is its twin.
     */
-  private def probedQry(probed: DataFrame): DataFrame =
+  private[ops] def probedIdx(probed: DataFrame): DataFrame =
+    probed.select(col("vec_id").as("n_id"), col("v").as("nv"),
+      col("nrm").as("nn"), expr("element_at(pc, 1).c_id").as("cell"))
+
+  /** Probe-side frame shared by the IVF variants: one row per
+    * (query, probed cell). [[ivfIdxQrySql]]'s `qry` is its twin.
+    */
+  private[ops] def probedQry(probed: DataFrame): DataFrame =
     probed.select(col("vec_id").as("q_id"), col("v").as("qv"),
       col("nrm").as("qn"), explode(expr("transform(pc, p -> p.c_id)")).as("cell"))
+
+  /** Oracle twin of [[probedIdx]]/[[probedQry]] over an `asg` election
+    * CTE: `idx` (each vector in its rank-1 cell) and `qry` (each vector
+    * in its [[IvfProbes]] best cells).
+    */
+  private[ops] def ivfIdxQrySql: String =
+    s"""idx AS (SELECT vec_id AS n_id, v AS nv, nrm AS nn, c_id AS cell
+                     FROM asg WHERE arn = 1),
+             qry AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn, c_id AS cell
+                     FROM asg WHERE arn <= $IvfProbes)"""
 
   /** Occupancy cap for the cell equi-join: every cell whose load exceeds
     * `target` is split into ceil(load/target) sub-cells; an index row
@@ -2160,8 +2177,7 @@ object Llm {
       .withColumn("pc", expr(cellsSpark(s"$IvfProbes")))
       .select(col("vec_id"), col("v"), col("nrm"), col("pc"))
       .localCheckpoint(true) // A/B sf0.1: 0.52 s with, 0.61 s without
-    val idx = probed.select(col("vec_id").as("n_id"), col("v").as("nv"),
-      col("nrm").as("nn"), expr("element_at(pc, 1).c_id").as("cell"))
+    val idx = probedIdx(probed)
     // each (q, n) pair appears at most once: n has ONE index cell
     cellTopK(idx, probedQry(probed))
   }
@@ -2191,9 +2207,7 @@ object Llm {
     */
   private[graft] def ivfTopkRouted(s: SparkSession, dir: String): DataFrame = {
     val probed = ivfOccProbed(s, dir)
-    val idx = probed.select(col("vec_id").as("n_id"), col("v").as("nv"),
-      col("nrm").as("nn"), expr("element_at(pc, 1).c_id").as("cell"))
-    cellTopK(idx, probedQry(probed))
+    cellTopK(probedIdx(probed), probedQry(probed))
   }
 
   private val qSimIvf = Q(
@@ -2208,10 +2222,7 @@ object Llm {
     Some(s"""WITH $vecsSql,
              $ivfOccCentSql,
              ${routedAsgSql(EmbRouteSalt)},
-             idx AS (SELECT vec_id AS n_id, v AS nv, nrm AS nn, c_id AS cell
-                     FROM asg WHERE arn = 1),
-             qry AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn, c_id AS cell
-                     FROM asg WHERE arn <= $IvfProbes),
+             $ivfIdxQrySql,
              $cellTopKSql"""))
 
   /** Out-degree bound of the NSW k-NN graph (each node links to its M
@@ -2279,8 +2290,7 @@ object Llm {
       .withColumn("pc", expr(cellsSpark(s"$IvfProbes")))
       .select(col("vec_id"), col("v"), col("nrm"), col("pc"))
       .localCheckpoint(true) // feeds two actions: topM's and the beams' cuts
-    val idx = probed.select(col("vec_id").as("n_id"), col("v").as("nv"),
-      col("nrm").as("nn"), expr("element_at(pc, 1).c_id").as("cell"))
+    val idx = probedIdx(probed)
     // ONE job folds the probe join into the per-query top-NswM (the
     // [[topKByScore]] aggregate — pairs are unique per (q, n): each
     // neighbor lives in exactly one cell, so the fold ranks identically
@@ -2533,10 +2543,7 @@ object Llm {
     Some(s"""WITH $vecsSql,
              $ivfCentSql,
              $ivfAsgSql,
-             idx AS (SELECT vec_id AS n_id, v AS nv, nrm AS nn, c_id AS cell
-                     FROM asg WHERE arn = 1),
-             qry AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn, c_id AS cell
-                     FROM asg WHERE arn <= $IvfProbes),
+             $ivfIdxQrySql,
              p AS MATERIALIZED (SELECT q_id, n_id,
                    ROUND(list_dot_product(qv, nv) / (qn * nn), 4) AS cos
                   FROM qry JOIN idx USING (cell) WHERE q_id <> n_id),
@@ -2588,8 +2595,7 @@ object Llm {
         .select(col("vec_id"), col("v"), col("nrm"), col("pc"), col("ins"))
         .localCheckpoint(true) // feeds two actions: edges' cut and the beams
       val base = probed.filter(!col("ins"))
-      val idx = base.select(col("vec_id").as("n_id"), col("v").as("nv"),
-        col("nrm").as("nn"), expr("element_at(pc, 1).c_id").as("cell"))
+      val idx = probedIdx(base)
       // base-generation graph: the q_sim_nsw build restricted to base
       // rows. Per-query top-M/seed cuts use the top-k fold in place of
       // the row_number window — pairs are unique per (q, n) (one cell
@@ -2740,8 +2746,7 @@ object Llm {
     "q_sim_range_search",
     (s, dir) => {
       val probed = ivfOccProbed(s, dir)
-      val idx = probed.select(col("vec_id").as("n_id"), col("v").as("nv"),
-        col("nrm").as("nn"), expr("element_at(pc, 1).c_id").as("cell"))
+      val idx = probedIdx(probed)
       probedQry(probed).join(idx, Seq("cell"))
         .filter(col("q_id") =!= col("n_id"))
         .withColumn("cos", cosCol)
@@ -2754,10 +2759,7 @@ object Llm {
     Some(s"""WITH $vecsSql,
              $ivfOccCentSql,
              ${routedAsgSql(EmbRouteSalt)},
-             idx AS (SELECT vec_id AS n_id, v AS nv, nrm AS nn, c_id AS cell
-                     FROM asg WHERE arn = 1),
-             qry AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn, c_id AS cell
-                     FROM asg WHERE arn <= $IvfProbes),
+             $ivfIdxQrySql,
              p AS (SELECT q_id, n_id,
                      ROUND(list_dot_product(qv, nv) / (qn * nn), 4) AS cos
                    FROM qry JOIN idx USING (cell) WHERE q_id <> n_id)
@@ -2830,6 +2832,53 @@ object Llm {
     */
   private val RecallEvalQueries = 64
 
+  /** The recall evaluation's query sample (q_id, qv, qn) — about
+    * [[RecallEvalQueries]] vectors hash-sampled under `salt` — and its
+    * exact top-3 (q_id, n_id) by a full corpus scan: the truth side that
+    * `q_sim_recall_eval` and `q_sim_recall_sweep` score the IVF search
+    * against. [[recallExactSql]] is its twin.
+    */
+  private def recallExact(s: SparkSession, dir: String, salt: String): (DataFrame, DataFrame) = {
+    val vs = vecs(s, dir)
+    val qthr = Tables(s, dir, "embeddings").agg(count(lit(1)).as("n"))
+      .select(expr(s"CAST($RecallEvalQueries AS DOUBLE) / CAST(n AS DOUBLE)").as("thr"))
+    val qs = vs.crossJoin(broadcast(qthr))
+      .filter(expr(md5U01Spark(s"concat('$salt', CAST(vec_id AS STRING))")) < col("thr"))
+      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
+    val wq = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
+    val exact = vs
+      .select(col("vec_id").as("n_id"), col("v").as("nv"), col("nrm").as("nn"))
+      .crossJoin(broadcast(qs))
+      .filter(col("q_id") =!= col("n_id"))
+      .withColumn("cos", cosCol)
+      .select("q_id", "n_id", "cos") // drop arrays before the shuffle
+      .withColumn("rnk", row_number().over(wq))
+      .filter(col("rnk") <= 3)
+      .select("q_id", "n_id")
+    (qs, exact)
+  }
+
+  /** Oracle twin of [[recallExact]] (CTEs `qprm`, `qs`, `ex0`, `exr`,
+    * `ex`), followed by the embeddings IVF election and its `idx`.
+    * Expects `n` ([[vecsSql]]) in scope.
+    */
+  private def recallExactSql(salt: String): String =
+    s"""qprm AS (SELECT CAST($RecallEvalQueries AS DOUBLE) / COUNT(*) AS qthr
+                      FROM embeddings),
+             qs AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn
+                    FROM n CROSS JOIN qprm
+                    WHERE ${md5U01Sql(s"'$salt' || CAST(vec_id AS VARCHAR)")} < qthr),
+             ex0 AS (SELECT q_id, n.vec_id AS n_id,
+                      ROUND(list_dot_product(qv, n.v) / (qn * n.nrm), 4) AS cos
+                     FROM qs, n WHERE q_id <> n.vec_id),
+             exr AS (SELECT q_id, n_id, row_number() OVER (PARTITION BY q_id
+                       ORDER BY cos DESC, n_id) AS rnk FROM ex0),
+             ex AS (SELECT q_id, n_id FROM exr WHERE rnk <= 3),
+             $ivfOccCentSql,
+             ${routedAsgSql(EmbRouteSalt)},
+             idx AS (SELECT vec_id AS n_id, v AS nv, nrm AS nn, c_id AS cell
+                     FROM asg WHERE arn = 1)"""
+
   /** Index quality assurance as a DECLARED operator — the continuous-eval
     * job a production vector pipeline runs beside its index builds:
     * recall@3 of the `q_sim_ivf` search contract against the exact top-3,
@@ -2850,25 +2899,9 @@ object Llm {
   private val qSimRecallEval = Q(
     "q_sim_recall_eval",
     (s, dir) => {
-      val vs = vecs(s, dir)
-      val qthr = Tables(s, dir, "embeddings").agg(count(lit(1)).as("n"))
-        .select(expr(s"CAST($RecallEvalQueries AS DOUBLE) / CAST(n AS DOUBLE)").as("thr"))
-      val qs = vs.crossJoin(broadcast(qthr))
-        .filter(expr(md5U01Spark("concat('rc_', CAST(vec_id AS STRING))")) < col("thr"))
-        .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-      val wq = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-      val exact = vs
-        .select(col("vec_id").as("n_id"), col("v").as("nv"), col("nrm").as("nn"))
-        .crossJoin(broadcast(qs))
-        .filter(col("q_id") =!= col("n_id"))
-        .withColumn("cos", cosCol)
-        .select("q_id", "n_id", "cos") // drop arrays before the shuffle
-        .withColumn("rnk", row_number().over(wq))
-        .filter(col("rnk") <= 3)
-        .select("q_id", "n_id")
+      val (qs, exact) = recallExact(s, dir, "rc_")
       val probed = ivfOccProbed(s, dir)
-      val idx = probed.select(col("vec_id").as("n_id"), col("v").as("nv"),
-        col("nrm").as("nn"), expr("element_at(pc, 1).c_id").as("cell"))
+      val idx = probedIdx(probed)
       val qry = probedQry(probed)
         .join(broadcast(qs.select("q_id")), Seq("q_id"))
       val ann = cellTopK(idx, qry).select("q_id", "n_id")
@@ -2881,21 +2914,7 @@ object Llm {
           "CASE WHEN n_pairs = 0 THEN CAST(0 AS BIGINT) ELSE (n_hits * 10000) DIV n_pairs END"))
     },
     Some(s"""WITH $vecsSql,
-             qprm AS (SELECT CAST($RecallEvalQueries AS DOUBLE) / COUNT(*) AS qthr
-                      FROM embeddings),
-             qs AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn
-                    FROM n CROSS JOIN qprm
-                    WHERE ${md5U01Sql("'rc_' || CAST(vec_id AS VARCHAR)")} < qthr),
-             ex0 AS (SELECT q_id, n.vec_id AS n_id,
-                      ROUND(list_dot_product(qv, n.v) / (qn * n.nrm), 4) AS cos
-                     FROM qs, n WHERE q_id <> n.vec_id),
-             exr AS (SELECT q_id, n_id, row_number() OVER (PARTITION BY q_id
-                       ORDER BY cos DESC, n_id) AS rnk FROM ex0),
-             ex AS (SELECT q_id, n_id FROM exr WHERE rnk <= 3),
-             $ivfOccCentSql,
-             ${routedAsgSql(EmbRouteSalt)},
-             idx AS (SELECT vec_id AS n_id, v AS nv, nrm AS nn, c_id AS cell
-                     FROM asg WHERE arn = 1),
+             ${recallExactSql("rc_")},
              qry AS (SELECT a.vec_id AS q_id, a.v AS qv, a.nrm AS qn, c_id AS cell
                      FROM asg a JOIN (SELECT DISTINCT q_id FROM qs) s
                        ON a.vec_id = s.q_id
@@ -2917,6 +2936,58 @@ object Llm {
                          ELSE (COALESCE(SUM(hit), 0) * 10000) // COUNT(*) END
                       AS BIGINT) AS recall_bp
              FROM j"""))
+
+  /** `e` (the `vecs` convention) under the sampled √n quantizer
+    * ([[ivfCentArr]], broadcast as the 1-row `cents` array): each vector's
+    * [[IvfProbes]] best cells `pc`, its elected `cell`, and that cell's
+    * centroid `cv` — the residual base of `q_sim_ivfpq`, `q_sim_rerank`
+    * and `q_sim_pq`, with `q_sim_ivf`'s empty-sample guard. The frame
+    * still carries `cents`: each caller drops it before its cut.
+    * [[ivfResidualSql]] is its twin.
+    */
+  private def centProbed(s: SparkSession, dir: String, e: DataFrame): DataFrame =
+    e.crossJoin(broadcast(ivfCentArr(s, dir)))
+      .filter(expr("size(cents) > 0"))
+      .withColumn("pc", expr(cellsSpark(s"$IvfProbes")))
+      .withColumn("cell", expr("element_at(pc, 1).c_id"))
+      .withColumn("cv", expr(
+        "element_at(filter(cents, c -> c.c_id = element_at(pc, 1).c_id), 1).cv"))
+
+  /** Index side of the int8-residual search: each vector's per-dimension
+    * int8 residual code against its cell centroid, read back as the
+    * dequantized reconstruction `nv` (at rest only the codes would live).
+    * [[int8IdxSql]] is its twin.
+    */
+  private def int8Idx(probed: DataFrame): DataFrame =
+    probed
+      .withColumn("nv", expr(
+        "zip_with(cv, v, (c, x) -> c + floor((x - c) * 127D) / 127D)"))
+      .withColumn("nn", expr("sqrt(graft_dot(nv, nv))"))
+      .select(col("vec_id").as("n_id"), col("cell"), col("nv"), col("nn"))
+
+  /** Oracle twin of [[centProbed]]: the embeddings, the sampled
+    * quantizer, its election `asg`, and `ac` (vec_id, v, cell, cv).
+    */
+  private def ivfResidualSql: String =
+    s"""$vecsSql,
+             $ivfCentSql,
+             $ivfAsgSql,
+             a AS (SELECT vec_id, v, c_id AS cell FROM asg WHERE arn = 1),
+             ac AS (SELECT a.vec_id, a.v, a.cell, cv
+                    FROM a JOIN cent ON a.cell = cent.c_id)"""
+
+  /** Oracle twin of [[int8Idx]] and [[probedQry]]: CTEs `av`, `idx`
+    * and `qry` over [[ivfResidualSql]].
+    */
+  private def int8IdxSql: String =
+    s"""av AS (SELECT vec_id AS n_id, cell,
+                     list_transform(range(len(v)), i ->
+                       cv[i + 1] + floor((v[i + 1] - cv[i + 1]) * 127) / 127) AS nv
+                    FROM ac),
+             idx AS (SELECT n_id, cell, nv,
+                      sqrt(list_dot_product(nv, nv)) AS nn FROM av),
+             qry AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn, c_id AS cell
+                     FROM asg WHERE arn <= $IvfProbes)"""
 
   /** IVF-PQ-style compressed ANN — the `q_sim_ivf` coarse index with the
     * `q_vec_quantize` int8 machinery applied to the RESIDUAL v − centroid
@@ -2943,42 +3014,15 @@ object Llm {
   private val qSimIvfPq = Q(
     "q_sim_ivfpq",
     (s, dir) => {
-      val e = vecs(s, dir)
-      val probed = e.crossJoin(broadcast(ivfCentArr(s, dir)))
-        // empty-sample guard, same as q_sim_ivf
-        .filter(expr("size(cents) > 0"))
-        .withColumn("pc", expr(cellsSpark(s"$IvfProbes")))
-        .withColumn("cell", expr("element_at(pc, 1).c_id"))
-        // the assigned cell's centroid vector, pulled out of the
-        // broadcast array BEFORE the checkpoint so `cents` (k·d doubles)
-        // never materializes per-row in storage
-        .withColumn("cv", expr(
-          "element_at(filter(cents, c -> c.c_id = element_at(pc, 1).c_id), 1).cv"))
+      // `cents` (k·d doubles) is dropped BEFORE the checkpoint, so it
+      // never materializes per-row in storage
+      val probed = centProbed(s, dir, vecs(s, dir))
         .select(col("vec_id"), col("v"), col("nrm"), col("pc"), col("cell"), col("cv"))
         .localCheckpoint(true) // A/B sf0.1: 0.91 s with, 1.05 s without
-      // index side: per-dimension int8 residual code, read back as the
-      // dequantized reconstruction (at rest only the codes would live)
-      val idx = probed
-        .withColumn("nv", expr(
-          "zip_with(cv, v, (c, x) -> c + floor((x - c) * 127D) / 127D)"))
-        .withColumn("nn", expr("sqrt(graft_dot(nv, nv))"))
-        .select(col("vec_id").as("n_id"), col("cell"), col("nv"), col("nn"))
-      cellTopK(idx, probedQry(probed))
+      cellTopK(int8Idx(probed), probedQry(probed))
     },
-    Some(s"""WITH $vecsSql,
-             $ivfCentSql,
-             $ivfAsgSql,
-             a AS (SELECT vec_id, v, c_id AS cell FROM asg WHERE arn = 1),
-             ac AS (SELECT a.vec_id, a.v, a.cell, cv
-                    FROM a JOIN cent ON a.cell = cent.c_id),
-             av AS (SELECT vec_id AS n_id, cell,
-                     list_transform(range(len(v)), i ->
-                       cv[i + 1] + floor((v[i + 1] - cv[i + 1]) * 127) / 127) AS nv
-                    FROM ac),
-             idx AS (SELECT n_id, cell, nv,
-                      sqrt(list_dot_product(nv, nv)) AS nn FROM av),
-             qry AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn, c_id AS cell
-                     FROM asg WHERE arn <= $IvfProbes),
+    Some(s"""WITH $ivfResidualSql,
+             $int8IdxSql,
              $cellTopKSql"""))
 
   /** Shortlist size for the two-stage retrieve-then-refine search. */
@@ -3136,21 +3180,11 @@ object Llm {
   private val qSimRerank = Q(
     "q_sim_rerank",
     (s, dir) => {
-      val probed = vecs(s, dir).crossJoin(broadcast(ivfCentArr(s, dir)))
-        .filter(expr("size(cents) > 0"))
-        .withColumn("pc", expr(cellsSpark(s"$IvfProbes")))
-        .withColumn("cell", expr("element_at(pc, 1).c_id"))
-        .withColumn("cv", expr(
-          "element_at(filter(cents, c -> c.c_id = element_at(pc, 1).c_id), 1).cv"))
+      val probed = centProbed(s, dir, vecs(s, dir))
         .select(col("vec_id"), col("v"), col("nrm"), col("pc"), col("cell"), col("cv"))
         .localCheckpoint(true) // A/B sf0.1: 1.72 s with, 1.99 s without
-      val idx = probed
-        .withColumn("nv", expr(
-          "zip_with(cv, v, (c, x) -> c + floor((x - c) * 127D) / 127D)"))
-        .withColumn("nn", expr("sqrt(graft_dot(nv, nv))"))
-        .select(col("vec_id").as("n_id"), col("cell"), col("nv"), col("nn"))
       val short = topKByScore(
-        probedQry(probed).join(idx, Seq("cell"))
+        probedQry(probed).join(int8Idx(probed), Seq("cell"))
           .filter(col("q_id") =!= col("n_id"))
           .withColumn("cos", cosCol)
           .select("q_id", "n_id", "cos"),
@@ -3167,20 +3201,8 @@ object Llm {
           .select("q_id", "n_id", "cos"),
         "cos")
     },
-    Some(s"""WITH $vecsSql,
-             $ivfCentSql,
-             $ivfAsgSql,
-             a AS (SELECT vec_id, v, c_id AS cell FROM asg WHERE arn = 1),
-             ac AS (SELECT a.vec_id, a.v, a.cell, cv
-                    FROM a JOIN cent ON a.cell = cent.c_id),
-             av AS (SELECT vec_id AS n_id, cell,
-                     list_transform(range(len(v)), i ->
-                       cv[i + 1] + floor((v[i + 1] - cv[i + 1]) * 127) / 127) AS nv
-                    FROM ac),
-             idx AS (SELECT n_id, cell, nv,
-                      sqrt(list_dot_product(nv, nv)) AS nn FROM av),
-             qry AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn, c_id AS cell
-                     FROM asg WHERE arn <= $IvfProbes),
+    Some(s"""WITH $ivfResidualSql,
+             $int8IdxSql,
              $cellTopKCtesSql,
              sl AS (SELECT q_id, n_id FROM r WHERE rnk <= $RerankShortlist),
              rr AS (SELECT sl.q_id, sl.n_id,
@@ -3279,14 +3301,7 @@ object Llm {
       // spread: the per-vector cell assignment + PQ residual encode
       // below is the key's dominant CPU
       val e = vecsOf(Tables.spread(s, dir, "embeddings", "vec_id"))
-      val probed = e.crossJoin(broadcast(ivfCentArr(s, dir)))
-        .filter(expr("size(cents) > 0"))
-        .withColumn("pc", expr(cellsSpark(s"$IvfProbes")))
-        .withColumn("cell", expr("element_at(pc, 1).c_id"))
-        // the assigned cell's centroid, pulled from the broadcast array
-        // (same spelling as q_sim_ivfpq)
-        .withColumn("cv", expr(
-          "element_at(filter(cents, c -> c.c_id = element_at(pc, 1).c_id), 1).cv"))
+      val probed = centProbed(s, dir, e)
         .crossJoin(broadcast(pqCbArr(s, dir)))
         .filter(expr("size(cb) > 0"))
         // encode the residual; reconstruct as centroid + decoded residual
@@ -3302,12 +3317,7 @@ object Llm {
         .select(col("vec_id").as("n_id"), col("cell"), col("nv"), col("nn"))
       cellTopK(idx, probedQry(probed))
     },
-    Some(s"""WITH $vecsSql,
-             $ivfCentSql,
-             $ivfAsgSql,
-             a AS (SELECT vec_id, v, c_id AS cell FROM asg WHERE arn = 1),
-             ac AS (SELECT a.vec_id, a.v, a.cell, cv
-                    FROM a JOIN cent ON a.cell = cent.c_id),
+    Some(s"""WITH $ivfResidualSql,
              res AS (SELECT vec_id, cell, cv,
                       list_transform(range(len(v)), i -> v[i + 1] - cv[i + 1]) AS rv
                      FROM ac),
@@ -3339,6 +3349,65 @@ object Llm {
                      FROM asg WHERE arn <= $IvfProbes),
              $cellTopKSql"""))
 
+  /** Each vector of `e` assigned to its nearest centroid of the 1-row
+    * `cents` array (the shared [[cellsSpark]] rule), as (vec_id, cell,
+    * qv) with `qv` its int8-quantized components — the k-means step's
+    * assignment, before the caller's cut. The empty-sample guard: on an
+    * empty `cents` (P ≈ e^-√n, real only for tiny corpora) element_at
+    * would fabricate a NULL cell row (or throw under ANSI) while the
+    * oracle's CROSS JOIN with an empty cent CTE returns zero rows.
+    */
+  private def quantizedAssign(e: DataFrame, cents: DataFrame): DataFrame =
+    e.crossJoin(broadcast(cents))
+      .filter(expr("size(cents) > 0"))
+      .withColumn("cell", expr(s"element_at(${cellsSpark("1")}, 1).c_id"))
+      .select(col("vec_id"), col("cell"),
+        expr("transform(v, x -> CAST(floor(x * 127) AS BIGINT))").as("qv"))
+
+  /** Per cell of an assignment ([[quantizedAssign]]): the member count
+    * and the position-weighted fingerprint of the refined centroid,
+    * whose components are integer floor means. [[lloydCensusSql]] is its
+    * twin.
+    */
+  private def lloydCensus(assigned: DataFrame): DataFrame = {
+    val members = assigned.groupBy("cell").agg(count(lit(1)).as("n_members"))
+    val refined = assigned
+      .select(col("cell"), posexplode(col("qv")).as(Seq("dim", "q")))
+      .groupBy("cell", "dim")
+      .agg(sum("q").as("sq"), count(lit(1)).as("cnt"))
+      .withColumn("aq", expr("CAST(floor(sq / CAST(cnt AS DOUBLE)) AS BIGINT)"))
+      .groupBy("cell")
+      .agg(sum(expr("(dim + 1) * aq")).as("fp"))
+    members.join(refined, "cell")
+      .select("cell", "n_members", "fp")
+      .orderBy("cell")
+  }
+
+  /** The integer Lloyd mean of Lloyd round `r` over its assignment CTE
+    * `a<r>`: CTEs `q<r>`, `g<r>` and `m<r>` (cell, dim, aq).
+    */
+  private def lloydMeanSql(r: Int): String =
+    s"""q$r AS (SELECT cell, CAST(u.i AS INT) AS dim,
+                     CAST(floor(v[CAST(u.i + 1 AS INT)] * 127) AS BIGINT) AS qv
+                    FROM a$r, unnest(range(len(v))) u(i)),
+             g$r AS (SELECT cell, dim, SUM(qv) AS sq, COUNT(*) AS cnt
+                    FROM q$r GROUP BY cell, dim),
+             m$r AS (SELECT cell, dim,
+                     CAST(floor(sq / CAST(cnt AS DOUBLE)) AS BIGINT) AS aq FROM g$r)"""
+
+  /** Oracle twin of [[lloydCensus]] for Lloyd round `r`: its mean
+    * ([[lloydMeanSql]]) and the final census SELECT over `a<r>`.
+    */
+  private def lloydCensusSql(r: Int): String =
+    s"""${lloydMeanSql(r)},
+             memb AS (SELECT cell, CAST(COUNT(*) AS BIGINT) AS n_members
+                      FROM a$r GROUP BY cell),
+             f AS (SELECT cell, CAST(SUM((dim + 1) * aq) AS BIGINT) AS fp
+                   FROM m$r GROUP BY cell)
+             SELECT memb.cell, n_members, f.fp
+             FROM memb JOIN f ON memb.cell = f.cell
+             ORDER BY memb.cell"""
+
   /** One Lloyd refinement step of the IVF coarse index: assign every
     * vector to its nearest sampled centroid ([[ivfCentArr]] — the same
     * argmax-cosine rule `q_sim_ivf` indexes by), then recompute each
@@ -3362,46 +3431,15 @@ object Llm {
   private val qVecKmeansStep = Q(
     "q_vec_kmeans_step",
     (s, dir) => {
-      val assigned = vecs(s, dir).crossJoin(broadcast(ivfCentArr(s, dir)))
-        // guard the (P ≈ e^-√n, real only for tiny corpora) empty sample:
-        // element_at on an empty cents array would fabricate a NULL cell
-        // row (or throw under ANSI) while the oracle's CROSS JOIN with an
-        // empty cent CTE returns zero rows
-        .filter(expr("size(cents) > 0"))
-        .withColumn("cell", expr(s"element_at(${cellsSpark("1")}, 1).c_id"))
-        .select(col("vec_id"), col("cell"),
-          expr("transform(v, x -> CAST(floor(x * 127) AS BIGINT))").as("qv"))
+      val assigned = quantizedAssign(vecs(s, dir), ivfCentArr(s, dir))
         .localCheckpoint(true) // A/B sf0.1: 0.75 s with, 0.91 s without
-      val members = assigned.groupBy("cell").agg(count(lit(1)).as("n_members"))
-      val refined = assigned
-        .select(col("cell"), posexplode(col("qv")).as(Seq("dim", "q")))
-        .groupBy("cell", "dim")
-        .agg(sum("q").as("sq"), count(lit(1)).as("cnt"))
-        .withColumn("aq", expr("CAST(floor(sq / CAST(cnt AS DOUBLE)) AS BIGINT)"))
-        .groupBy("cell")
-        .agg(sum(expr("(dim + 1) * aq")).as("fp"))
-      members.join(refined, "cell")
-        .select("cell", "n_members", "fp")
-        .orderBy("cell")
+      lloydCensus(assigned)
     },
     Some(s"""WITH $vecsSql,
              $ivfCentSql,
              $ivfAsgSql,
-             a AS (SELECT vec_id, v, c_id AS cell FROM asg WHERE arn = 1),
-             q AS (SELECT cell, CAST(u.i AS INT) AS dim,
-                    CAST(floor(v[CAST(u.i + 1 AS INT)] * 127) AS BIGINT) AS qv
-                   FROM a, unnest(range(len(v))) u(i)),
-             g AS (SELECT cell, dim, SUM(qv) AS sq, COUNT(*) AS cnt
-                   FROM q GROUP BY cell, dim),
-             m AS (SELECT cell, dim,
-                    CAST(floor(sq / CAST(cnt AS DOUBLE)) AS BIGINT) AS aq FROM g),
-             memb AS (SELECT cell, CAST(COUNT(*) AS BIGINT) AS n_members
-                      FROM a GROUP BY cell),
-             f AS (SELECT cell, CAST(SUM((dim + 1) * aq) AS BIGINT) AS fp
-                   FROM m GROUP BY cell)
-             SELECT memb.cell, n_members, f.fp
-             FROM memb JOIN f ON memb.cell = f.cell
-             ORDER BY memb.cell"""))
+             a1 AS (SELECT vec_id, v, c_id AS cell FROM asg WHERE arn = 1),
+             ${lloydCensusSql(1)}"""))
 
   /** One Lloyd refinement round producing the NEXT coarse-quantizer
     * array in the `cents` broadcast convention (c_id, cv, cn): assign
@@ -3471,35 +3509,15 @@ object Llm {
     (s, dir) => {
       val e = vecs(s, dir)
       val cents1 = lloydRound(e, ivfCentArr(s, dir))
-      val assigned = e.crossJoin(broadcast(cents1))
-        .filter(expr("size(cents) > 0"))
-        .withColumn("cell", expr(s"element_at(${cellsSpark("1")}, 1).c_id"))
-        .select(col("vec_id"), col("cell"),
-          expr("transform(v, x -> CAST(floor(x * 127) AS BIGINT))").as("qv"))
+      val assigned = quantizedAssign(e, cents1)
         .localCheckpoint(true) // A/B sf0.1: 1.11 s with, 1.29 s without
-      val members = assigned.groupBy("cell").agg(count(lit(1)).as("n_members"))
-      val refined = assigned
-        .select(col("cell"), posexplode(col("qv")).as(Seq("dim", "q")))
-        .groupBy("cell", "dim")
-        .agg(sum("q").as("sq"), count(lit(1)).as("cnt"))
-        .withColumn("aq", expr("CAST(floor(sq / CAST(cnt AS DOUBLE)) AS BIGINT)"))
-        .groupBy("cell")
-        .agg(sum(expr("(dim + 1) * aq")).as("fp"))
-      members.join(refined, "cell")
-        .select("cell", "n_members", "fp")
-        .orderBy("cell")
+      lloydCensus(assigned)
     },
     Some(s"""WITH $vecsSql,
              $ivfCentSql,
              $ivfAsgSql,
              a1 AS (SELECT vec_id, v, c_id AS cell FROM asg WHERE arn = 1),
-             q1 AS (SELECT cell, CAST(u.i AS INT) AS dim,
-                     CAST(floor(v[CAST(u.i + 1 AS INT)] * 127) AS BIGINT) AS qv
-                    FROM a1, unnest(range(len(v))) u(i)),
-             g1 AS (SELECT cell, dim, SUM(qv) AS sq, COUNT(*) AS cnt
-                    FROM q1 GROUP BY cell, dim),
-             m1 AS (SELECT cell, dim,
-                     CAST(floor(sq / CAST(cnt AS DOUBLE)) AS BIGINT) AS aq FROM g1),
+             ${lloydMeanSql(1)},
              c1 AS (SELECT cell AS c_id, list(CAST(aq AS DOUBLE) / 127.0 ORDER BY dim) AS cv
                     FROM m1 GROUP BY cell),
              c1n AS (SELECT c_id, cv, sqrt(list_dot_product(cv, cv)) AS cn
@@ -3509,20 +3527,7 @@ object Llm {
                          ROUND(list_dot_product(v, cv) / (nrm * cn), 4) DESC, c_id) AS arn
                       FROM n CROSS JOIN c1n),
              a2 AS (SELECT vec_id, v, c_id AS cell FROM asg2 WHERE arn = 1),
-             q2 AS (SELECT cell, CAST(u.i AS INT) AS dim,
-                     CAST(floor(v[CAST(u.i + 1 AS INT)] * 127) AS BIGINT) AS qv
-                    FROM a2, unnest(range(len(v))) u(i)),
-             g2 AS (SELECT cell, dim, SUM(qv) AS sq, COUNT(*) AS cnt
-                    FROM q2 GROUP BY cell, dim),
-             m2 AS (SELECT cell, dim,
-                     CAST(floor(sq / CAST(cnt AS DOUBLE)) AS BIGINT) AS aq FROM g2),
-             memb AS (SELECT cell, CAST(COUNT(*) AS BIGINT) AS n_members
-                      FROM a2 GROUP BY cell),
-             f AS (SELECT cell, CAST(SUM((dim + 1) * aq) AS BIGINT) AS fp
-                   FROM m2 GROUP BY cell)
-             SELECT memb.cell, n_members, f.fp
-             FROM memb JOIN f ON memb.cell = f.cell
-             ORDER BY memb.cell"""))
+             ${lloydCensusSql(2)}"""))
 
   // ----------------------------------------------------------------- text
 
@@ -4025,18 +4030,7 @@ object Llm {
     * `featurizeVec` makes for documents.
     */
   private[graft] def chunkVec(s: SparkSession, dir: String): DataFrame = {
-    val C = 32
-    val stride = 24 // C - overlap(8), the q_text_chunk tiling
-    val ct = Tables(s, dir, "documents")
-      .withColumn("t", split(col("text"), " "))
-      .withColumn("n_tokens", size(col("t")).cast("long"))
-      .withColumn("n_chunks", expr(
-        s"CASE WHEN n_tokens <= $C THEN CAST(1 AS BIGINT) ELSE (n_tokens - $C + ${stride - 1}) DIV $stride + 1 END"))
-      .select(col("doc_id"), col("t"), col("n_tokens"),
-        explode(expr("sequence(0, CAST(n_chunks - 1 AS INT))")).as("cid"))
-      .withColumn("chunk_id", col("cid").cast("long"))
-      .withColumn("start_tok", expr(s"chunk_id * $stride + 1"))
-      .withColumn("n_tok_chunk", expr(s"least(CAST($C AS BIGINT), n_tokens - start_tok + 1)"))
+    val ct = chunkTiles(s, dir)
       .select((col("doc_id") * lit(ChunkIdBase) + col("chunk_id")).as("cvid"),
         explode(expr("slice(t, CAST(start_tok AS INT), CAST(n_tok_chunk AS INT))")).as("tok"))
     denseVec(hashFeat(ct, "cvid"), "cvid").filter(col("nrm") > 0)
@@ -4109,10 +4103,7 @@ object Llm {
         cent AS MATERIALIZED (SELECT vec_id AS c_id, v AS cv, nrm AS cn FROM n CROSS JOIN prm
                  WHERE ${md5U01Sql("'dctr_' || CAST(vec_id AS VARCHAR)")} < thr),
         ${routedAsgSql("dctrr_")},
-        idx AS (SELECT vec_id AS n_id, v AS nv, nrm AS nn, c_id AS cell
-                FROM asg WHERE arn = 1),
-        qry AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn, c_id AS cell
-                FROM asg WHERE arn <= $IvfProbes)"""
+        $ivfIdxQrySql"""
 
   /** Corpus DRIFT monitor — the two-population frequency-shift report a
     * production ingest runs between crawl generations (C4→C4.1, monthly
@@ -5116,16 +5107,13 @@ object Llm {
   /** Fixed-size token chunking with overlap — the context-window prep
     * step an embedding/training pipeline runs over every document before
     * vectorizing: 32-token chunks on a 24-token stride (8-token overlap),
-    * each chunk identified by (doc_id, chunk_id) with its md5 for
-    * downstream exact-dedup of chunks. Integer-only arithmetic, map-only
+    * one row per (doc_id, chunk_id) carrying the doc's tokens `t` and the
+    * chunk's `start_tok`/`n_tok_chunk`. Integer-only arithmetic, map-only
     * explode (the token array never leaves its row until the bounded
-    * per-doc chunk fan-out of ≤ ceil(n_tokens/24) rows).
+    * per-doc chunk fan-out of ≤ ceil(n_tokens/24) rows). The one tiling
+    * [[chunked]] hashes and [[chunkVec]] featurizes.
     */
-  /** Shared chunk table (doc_id, chunk_id, start_tok, n_tok_chunk,
-    * chunk_md5) for q_text_chunk and q_dedup_chunk — one tokenization/
-    * hashing rule so the dedup can never drift from the chunking.
-    */
-  private[graft] def chunked(s: SparkSession, dir: String): DataFrame = {
+  private def chunkTiles(s: SparkSession, dir: String): DataFrame = {
     val C = 32
     val stride = 24 // C - overlap(8)
     Tables(s, dir, "documents")
@@ -5138,10 +5126,17 @@ object Llm {
       .withColumn("chunk_id", col("cid").cast("long"))
       .withColumn("start_tok", expr(s"chunk_id * $stride + 1"))
       .withColumn("n_tok_chunk", expr(s"least(CAST($C AS BIGINT), n_tokens - start_tok + 1)"))
+  }
+
+  /** Shared chunk table (doc_id, chunk_id, start_tok, n_tok_chunk,
+    * chunk_md5) for q_text_chunk and q_dedup_chunk — one tokenization/
+    * hashing rule so the dedup can never drift from the chunking.
+    */
+  private[graft] def chunked(s: SparkSession, dir: String): DataFrame =
+    chunkTiles(s, dir)
       .withColumn("chunk_md5", md5(
         expr("concat_ws(' ', slice(t, CAST(start_tok AS INT), CAST(n_tok_chunk AS INT)))").cast("binary")))
       .select("doc_id", "chunk_id", "start_tok", "n_tok_chunk", "chunk_md5")
-  }
 
   /** Oracle twin of [[chunked]]: CTE chain ending in
     * ch(doc_id, chunk_id, start_tok, n_tok_chunk, chunk_md5). */
@@ -5309,6 +5304,29 @@ object Llm {
               FROM documents))
             ORDER BY doc_id"""))
 
+  /** Documents with their normalized text `norm`, its md5 `h`, token
+    * and distinct-token counts, and the canonical flag (named `canon`:
+    * the min doc_id of its `h`) — the frame the curation filter and its
+    * yield funnel gate. [[normTokensSql]] (CTE `nt`, flag
+    * `is_canonical`) is its twin.
+    */
+  private def normTokens(s: SparkSession, dir: String, canon: String): DataFrame =
+    Tables(s, dir, "documents")
+      .withColumn("norm", normCol)
+      .withColumn("h", md5(col("norm").cast("binary")))
+      .withColumn("t", split(col("norm"), " "))
+      .withColumn("n_tokens", size(col("t")).cast("long"))
+      .withColumn("n_uniq", size(array_distinct(col("t"))).cast("long"))
+      .withColumn(canon, col("doc_id") === min("doc_id").over(Window.partitionBy("h")))
+
+  private def normTokensSql: String =
+    s"""nt AS (SELECT doc_id, h, n_tokens, n_uniq,
+                    doc_id = MIN(doc_id) OVER (PARTITION BY h) AS is_canonical
+                  FROM (SELECT doc_id, md5(norm) AS h,
+                          CAST(len(string_split(norm, ' ')) AS BIGINT) AS n_tokens,
+                          CAST(len(list_distinct(string_split(norm, ' '))) AS BIGINT) AS n_uniq
+                        FROM (SELECT doc_id, $normSql AS norm FROM documents)))"""
+
   /** Capstone corpus-curation pipeline — the §2.11 operators composed the
     * way a training-data job runs them: canonicalize text → elect one
     * canonical doc per normalized form → token-level quality gates
@@ -5319,30 +5337,17 @@ object Llm {
   private val qPipelineFilter = Q(
     "q_pipeline_filter",
     (s, dir) => {
-      val wH = Window.partitionBy("h")
-      Tables(s, dir, "documents")
-        .withColumn("norm", normCol)
-        .withColumn("h", md5(col("norm").cast("binary")))
-        .withColumn("t", split(col("norm"), " "))
-        .withColumn("n_tokens", size(col("t")).cast("long"))
-        .withColumn("n_uniq", size(array_distinct(col("t"))).cast("long"))
-        .withColumn("is_canonical", col("doc_id") === min("doc_id").over(wH))
+      normTokens(s, dir, "is_canonical")
         .withColumn("kept",
           col("is_canonical") && col("n_tokens") >= 5L &&
             col("n_uniq") * 2L >= col("n_tokens"))
         .select("doc_id", "h", "n_tokens", "n_uniq", "kept")
         .orderBy("doc_id")
     },
-    Some(s"""SELECT doc_id, h, n_tokens, n_uniq,
+    Some(s"""WITH $normTokensSql
+            SELECT doc_id, h, n_tokens, n_uniq,
             (is_canonical AND n_tokens >= 5 AND n_uniq * 2 >= n_tokens) AS kept
-            FROM (SELECT doc_id, h, n_tokens, n_uniq,
-                    doc_id = MIN(doc_id) OVER (PARTITION BY h) AS is_canonical
-                  FROM (SELECT doc_id, md5(norm) AS h,
-                          CAST(len(string_split(norm, ' ')) AS BIGINT) AS n_tokens,
-                          CAST(len(list_distinct(string_split(norm, ' '))) AS BIGINT) AS n_uniq
-                        FROM (SELECT doc_id, $normSql AS norm
-                              FROM documents)))
-            ORDER BY doc_id"""))
+            FROM nt ORDER BY doc_id"""))
 
   /** Per-stage yield funnel over the curation filter chain — the data
     * lineage report every production pipeline publishes next to its
@@ -5359,14 +5364,7 @@ object Llm {
   private val qPipelineYield = Q(
     "q_pipeline_yield",
     (s, dir) => {
-      val wH = Window.partitionBy("h")
-      Tables(s, dir, "documents")
-        .withColumn("norm", normCol)
-        .withColumn("h", md5(col("norm").cast("binary")))
-        .withColumn("t", split(col("norm"), " "))
-        .withColumn("n_tokens", size(col("t")).cast("long"))
-        .withColumn("n_uniq", size(array_distinct(col("t"))).cast("long"))
-        .withColumn("c1", col("doc_id") === min("doc_id").over(wH))
+      normTokens(s, dir, "c1")
         .withColumn("c2", col("c1") && col("n_tokens") >= 5L)
         .withColumn("c3", col("c2") && col("n_uniq") * 2L >= col("n_tokens"))
         .agg(count(lit(1)).as("n0"),
@@ -5379,19 +5377,13 @@ object Llm {
         .withColumn("keep_bp", expr("n_out * 10000 div n_in"))
         .orderBy("stage")
     },
-    Some(s"""WITH f AS (SELECT doc_id,
-                 doc_id = MIN(doc_id) OVER (PARTITION BY h) AS c1,
-                 n_tokens, n_uniq
-               FROM (SELECT doc_id, md5(norm) AS h,
-                       CAST(len(string_split(norm, ' ')) AS BIGINT) AS n_tokens,
-                       CAST(len(list_distinct(string_split(norm, ' '))) AS BIGINT) AS n_uniq
-                     FROM (SELECT doc_id, $normSql AS norm FROM documents))),
+    Some(s"""WITH $normTokensSql,
              g AS (SELECT CAST(COUNT(*) AS BIGINT) AS n0,
-                     CAST(SUM(CASE WHEN c1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-                     CAST(SUM(CASE WHEN c1 AND n_tokens >= 5 THEN 1 ELSE 0 END) AS BIGINT) AS n2,
-                     CAST(SUM(CASE WHEN c1 AND n_tokens >= 5 AND n_uniq * 2 >= n_tokens
+                     CAST(SUM(CASE WHEN is_canonical THEN 1 ELSE 0 END) AS BIGINT) AS n1,
+                     CAST(SUM(CASE WHEN is_canonical AND n_tokens >= 5 THEN 1 ELSE 0 END) AS BIGINT) AS n2,
+                     CAST(SUM(CASE WHEN is_canonical AND n_tokens >= 5 AND n_uniq * 2 >= n_tokens
                               THEN 1 ELSE 0 END) AS BIGINT) AS n3
-                   FROM f)
+                   FROM nt)
             SELECT stage, n_in, n_out, n_out * 10000 // n_in AS keep_bp FROM (
               SELECT '1_dedup_canonical' AS stage, n0 AS n_in, n1 AS n_out FROM g
               UNION ALL SELECT '2_length_floor', n1, n2 FROM g
@@ -5588,6 +5580,33 @@ object Llm {
                          THEN 1 ELSE 0 END AS BIGINT) AS flagged
              FROM d LEFT JOIN c USING (doc_id) ORDER BY d.doc_id"""))
 
+  /** Connected-component labels (id, lbl) of the near-dup graph: the
+    * pairs of [[jaccardPairs]] at Jaccard ≥ 0.4, closed transitively by
+    * [[ConnectedComponents]] — the clusters `q_dedup_cluster` reports and
+    * `q_dedup_canonical_best` elects a keeper in. [[dupReachSql]] is its
+    * twin.
+    */
+  private def dupLabels(s: SparkSession, dir: String): DataFrame = {
+    val pairs = jaccardPairs(s, dir).filter(col("jac") >= 0.4)
+      .select(col("d1").as("a"), col("d2").as("b"))
+    ConnectedComponents.labels(pairs)._1
+  }
+
+  /** Oracle twin of [[dupLabels]] up to its closure: [[pairsSql]], the
+    * kept edges `ed`, both orientations `ud`, and the recursive `reach`
+    * (a, b). Needs `WITH RECURSIVE`.
+    */
+  private def dupReachSql: String =
+    s"""$pairsSql,
+             ed AS (SELECT d1, d2 FROM pr
+                    JOIN cnt c1 ON d1 = c1.doc_id JOIN cnt c2 ON d2 = c2.doc_id
+                    WHERE FLOOR(inter / CAST(c1.n_sh + c2.n_sh - inter AS DOUBLE) * 10000) / 10000 >= 0.4),
+             ud AS (SELECT d1 AS a, d2 AS b FROM ed
+                    UNION SELECT d2, d1 FROM ed),
+             reach(a, b) AS (SELECT a, b FROM ud
+                             UNION
+                             SELECT r.a, u.b FROM reach r JOIN ud u ON r.b = u.a)"""
+
   /** Transitive near-duplicate clustering — connected components over the
     * near-dup pair graph, electing one canonical representative (the min
     * doc_id) per dup GROUP, not per pair: A~B and B~C must collapse to one
@@ -5605,24 +5624,14 @@ object Llm {
   private val qDedupCluster = Q(
     "q_dedup_cluster",
     (s, dir) => {
-      val pairs = jaccardPairs(s, dir).filter(col("jac") >= 0.4)
-        .select(col("d1").as("a"), col("d2").as("b"))
-      val (lbl, _) = ConnectedComponents.labels(pairs)
+      val lbl = dupLabels(s, dir)
       val sz = lbl.groupBy(col("lbl").as("rep")).agg(count(lit(1)).as("n_members"))
       lbl.select(col("id").as("doc_id"), col("lbl").as("rep"))
         .join(sz, "rep")
         .select(col("doc_id"), col("rep"), col("n_members"))
         .orderBy("doc_id")
     },
-    Some(s"""WITH RECURSIVE $pairsSql,
-             ed AS (SELECT d1, d2 FROM pr
-                    JOIN cnt c1 ON d1 = c1.doc_id JOIN cnt c2 ON d2 = c2.doc_id
-                    WHERE FLOOR(inter / CAST(c1.n_sh + c2.n_sh - inter AS DOUBLE) * 10000) / 10000 >= 0.4),
-             ud AS (SELECT d1 AS a, d2 AS b FROM ed
-                    UNION SELECT d2, d1 FROM ed),
-             reach(a, b) AS (SELECT a, b FROM ud
-                             UNION
-                             SELECT r.a, u.b FROM reach r JOIN ud u ON r.b = u.a),
+    Some(s"""WITH RECURSIVE $dupReachSql,
              lbl AS (SELECT a AS doc_id, LEAST(a, MIN(b)) AS rep
                      FROM reach GROUP BY a)
              SELECT l.doc_id, l.rep, CAST(s.n_members AS BIGINT) AS n_members
@@ -5727,9 +5736,7 @@ object Llm {
   private val qDedupCanonicalBest = Q(
     "q_dedup_canonical_best",
     (s, dir) => {
-      val pairs = jaccardPairs(s, dir).filter(col("jac") >= 0.4)
-        .select(col("d1").as("a"), col("d2").as("b"))
-      val (lbl, _) = ConnectedComponents.labels(pairs)
+      val lbl = dupLabels(s, dir)
       val len = Tables(s, dir, "documents")
         .select(col("doc_id").as("id"), col("n_chars"))
       // the (len desc, id asc) extremum packed as one orderable struct:
@@ -5746,15 +5753,7 @@ object Llm {
           col("member_idsum"))
         .orderBy("rep")
     },
-    Some(s"""WITH RECURSIVE $pairsSql,
-             ed AS (SELECT d1, d2 FROM pr
-                    JOIN cnt c1 ON d1 = c1.doc_id JOIN cnt c2 ON d2 = c2.doc_id
-                    WHERE FLOOR(inter / CAST(c1.n_sh + c2.n_sh - inter AS DOUBLE) * 10000) / 10000 >= 0.4),
-             ud AS (SELECT d1 AS a, d2 AS b FROM ed
-                    UNION SELECT d2, d1 FROM ed),
-             reach(a, b) AS (SELECT a, b FROM ud
-                             UNION
-                             SELECT r.a, u.b FROM reach r JOIN ud u ON r.b = u.a),
+    Some(s"""WITH RECURSIVE $dupReachSql,
              lbl AS (SELECT a AS id, LEAST(a, MIN(b)) AS lbl
                      FROM reach GROUP BY a),
              m AS (SELECT l.id, l.lbl, d.n_chars
@@ -6091,6 +6090,22 @@ object Llm {
                    ELSE sc.n_top * 10000 // sc.n_bigrams END AS lm_bp
             FROM d LEFT JOIN sc USING (doc_id) ORDER BY d.doc_id"""))
 
+  /** The tokenized documents (doc_id, source, toks) and their bigram
+    * stream (source, bg, w1, w2): the one stream both bigram LMs
+    * ([[qTextLmBackoff]], [[qTextLmKn]]) train on and score, so their
+    * rows compare one for one.
+    */
+  private def bigramStream(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val docs = Tables.spread(s, dir, "documents", "doc_id")
+      .select(col("doc_id"), col("source"), split(col("text"), " ").as("toks"))
+    val bg = docs.select(col("source"), explode(expr(
+        "transform(slice(toks, 1, size(toks) - 1), (t, i) -> concat(t, ' ', toks[i + 1]))"))
+        .as("bg"))
+      .withColumn("w1", expr("split_part(bg, ' ', 1)"))
+      .withColumn("w2", expr("split_part(bg, ' ', 2)"))
+    (docs, bg)
+  }
+
   /** Stupid-Backoff bigram LM scoring across crawl GENERATIONS — the
     * distributed n-gram LM of Brants et al. EMNLP'07 ("Large Language
     * Models in Machine Translation"), whose whole point was that at
@@ -6117,13 +6132,7 @@ object Llm {
   private val qTextLmBackoff = Q(
     "q_text_lm_backoff",
     (s, dir) => {
-      val docs = Tables.spread(s, dir, "documents", "doc_id")
-        .select(col("doc_id"), col("source"), split(col("text"), " ").as("toks"))
-      val bg = docs.select(col("source"), explode(expr(
-          "transform(slice(toks, 1, size(toks) - 1), (t, i) -> concat(t, ' ', toks[i + 1]))"))
-          .as("bg"))
-        .withColumn("w1", expr("split_part(bg, ' ', 1)"))
-        .withColumn("w2", expr("split_part(bg, ' ', 2)"))
+      val (docs, bg) = bigramStream(s, dir)
       val isTrain = "try_cast(substring(source, 4) AS BIGINT) < 10"
       val tr = bg.filter(expr(isTrain))
       val bi = tr.groupBy("bg").agg(count(lit(1)).as("c2"))
@@ -6201,13 +6210,7 @@ object Llm {
   private val qTextLmKn = Q(
     "q_text_lm_kn",
     (s, dir) => {
-      val docs = Tables.spread(s, dir, "documents", "doc_id")
-        .select(col("doc_id"), col("source"), split(col("text"), " ").as("toks"))
-      val bg = docs.select(col("source"), explode(expr(
-          "transform(slice(toks, 1, size(toks) - 1), (t, i) -> concat(t, ' ', toks[i + 1]))"))
-          .as("bg"))
-        .withColumn("w1", expr("split_part(bg, ' ', 1)"))
-        .withColumn("w2", expr("split_part(bg, ' ', 2)"))
+      val (_, bg) = bigramStream(s, dir)
       val bi = bg.filter(expr("try_cast(substring(source, 4) AS BIGINT) < 10"))
         .groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
       val lf = bi.groupBy("w1").agg(sum("c2").as("c1r"), count(lit(1)).as("n1f"))
@@ -6320,7 +6323,8 @@ object Llm {
 
   /** The exact tercile thresholds (t1, t2) of a scored frame via the
     * bounded integer-score histogram + ONE partition-less cumulative
-    * window (declared in the PlanLint registry for both consumers).
+    * window, whose input is one row per distinct score: `PlanLintSpec`'s
+    * growth rule measures it at two scale factors.
     */
   private def commonnessTerciles(scored: DataFrame): DataFrame = {
     val tot = scored.agg(count(lit(1)).as("n"))
@@ -6332,6 +6336,29 @@ object Llm {
       .agg(min(when(col("cum") * 3 >= col("n"), col("mp"))).as("t1"),
         min(when(col("cum") * 3 >= col("n") * 2, col("mp"))).as("t2"))
   }
+
+  /** Oracle twin of [[commonnessScored]] and [[commonnessTerciles]]:
+    * `s2` (doc_id, source, mp) and the thresholds `thr` (t1, t2).
+    */
+  private def commonnessSql: String =
+    """t AS (SELECT doc_id, u.tok AS w
+                  FROM documents, unnest(string_split(text, ' ')) u(tok)
+                  WHERE length(u.tok) >= 1),
+            v AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c FROM t GROUP BY w),
+            n AS (SELECT CAST(SUM(c) AS BIGINT) AS nt FROM v),
+            p AS (SELECT w, c * 1000000 // nt AS pm FROM v CROSS JOIN n),
+            sc AS (SELECT doc_id, SUM(p.pm) // COUNT(*) AS mp
+                   FROM t JOIN p USING (w) GROUP BY doc_id),
+            s2 AS (SELECT d.doc_id, d.source, COALESCE(sc.mp, 0) AS mp
+                   FROM documents d LEFT JOIN sc USING (doc_id)),
+            tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM s2),
+            h AS (SELECT mp, CAST(COUNT(*) AS BIGINT) AS c FROM s2 GROUP BY mp),
+            cu AS (SELECT mp, SUM(c) OVER (ORDER BY mp
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+                   FROM h),
+            thr AS (SELECT MIN(CASE WHEN cum * 3 >= n THEN mp END) AS t1,
+                     MIN(CASE WHEN cum * 3 >= n * 2 THEN mp END) AS t2
+                    FROM cu CROSS JOIN tot)"""
 
   private val qTextPplBuckets = Q(
     "q_text_ppl_buckets",
@@ -6347,24 +6374,7 @@ object Llm {
           min("mp").as("min_micro"), max("mp").as("max_micro"))
         .orderBy("source", "bucket")
     },
-    Some("""WITH t AS (SELECT doc_id, u.tok AS w
-                  FROM documents, unnest(string_split(text, ' ')) u(tok)
-                  WHERE length(u.tok) >= 1),
-            v AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c FROM t GROUP BY w),
-            n AS (SELECT CAST(SUM(c) AS BIGINT) AS nt FROM v),
-            p AS (SELECT w, c * 1000000 // nt AS pm FROM v CROSS JOIN n),
-            sc AS (SELECT doc_id, SUM(p.pm) // COUNT(*) AS mp
-                   FROM t JOIN p USING (w) GROUP BY doc_id),
-            s2 AS (SELECT d.source, COALESCE(sc.mp, 0) AS mp
-                   FROM documents d LEFT JOIN sc USING (doc_id)),
-            tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM s2),
-            h AS (SELECT mp, CAST(COUNT(*) AS BIGINT) AS c FROM s2 GROUP BY mp),
-            cu AS (SELECT mp, SUM(c) OVER (ORDER BY mp
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-                   FROM h),
-            thr AS (SELECT MIN(CASE WHEN cum * 3 >= n THEN mp END) AS t1,
-                     MIN(CASE WHEN cum * 3 >= n * 2 THEN mp END) AS t2
-                    FROM cu CROSS JOIN tot),
+    Some(s"""WITH $commonnessSql,
             bk AS (SELECT source,
                     CASE WHEN mp < t1 THEN 'tail'
                          WHEN mp < t2 THEN 'middle' ELSE 'head' END AS bucket, mp
@@ -6380,27 +6390,6 @@ object Llm {
     */
   private val SweepLevels = Seq(1L, 2L, 4L)
 
-  /** Probe-count recall/cost SWEEP — the tuning curve behind every IVF
-    * deployment's nprobe knob, next to `q_sim_recall_eval`'s single
-    * scorecard: recall@3 and candidate volume at probes ∈ {1, 2, 4} in
-    * ONE query, so the cost/recall trade is a table, not three runs.
-    * Query sample salt `rcs_` is independent of the scorecard's `rc_`
-    * (shared-seed-leakage rule). Each candidate carries the rank of the
-    * probe cell that introduced it (the shared `cellsSpark` election —
-    * arn in the oracle), fans out to the levels ≥ that rank (a
-    * candidate found in probe cell 3 exists only at level 4), and each
-    * level elects its own top-3 under the family's (cos desc, n_id)
-    * contract. n_cand per level is the COST column — the measured
-    * pair-scoring volume the level pays.
-    *
-    * Scale shape: exact side = m fixed queries × corpus (linear, the
-    * recall_eval discipline); ANN side = the sampled query frame only
-    * (m × probes × cell rows), where a per-(q, level) WINDOW top-3 is
-    * fine because the frame is sample-sized — the corpus-sized serving
-    * paths keep the sort-free `graft_topk` aggregate. Output all-integer,
-    * 3 rows. InvariantsSpec pins recall monotone in probes and the
-    * level-4 row ≥ the family floor.
-    */
   /** Phase-2 epoch cap for the anneal allocation: the head set may be
     * repeated at most 4× (the near-free repeat region of the
     * data-constrained scaling law `q_mix_epochs` encodes).
@@ -6450,24 +6439,7 @@ object Llm {
           expr("tokens * weight_micro div 1000000L").as("alloc_tokens"))
       p1.unionByName(p2).orderBy("phase", "bucket")
     },
-    Some("""WITH t AS (SELECT doc_id, u.tok AS w
-                  FROM documents, unnest(string_split(text, ' ')) u(tok)
-                  WHERE length(u.tok) >= 1),
-            v AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c FROM t GROUP BY w),
-            n AS (SELECT CAST(SUM(c) AS BIGINT) AS nt FROM v),
-            p AS (SELECT w, c * 1000000 // nt AS pm FROM v CROSS JOIN n),
-            sc AS (SELECT doc_id, SUM(p.pm) // COUNT(*) AS mp
-                   FROM t JOIN p USING (w) GROUP BY doc_id),
-            s2 AS (SELECT d.doc_id, COALESCE(sc.mp, 0) AS mp
-                   FROM documents d LEFT JOIN sc USING (doc_id)),
-            tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM s2),
-            h AS (SELECT mp, CAST(COUNT(*) AS BIGINT) AS c FROM s2 GROUP BY mp),
-            cu AS (SELECT mp, SUM(c) OVER (ORDER BY mp
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-                   FROM h),
-            thr AS (SELECT MIN(CASE WHEN cum * 3 >= n THEN mp END) AS t1,
-                     MIN(CASE WHEN cum * 3 >= n * 2 THEN mp END) AS t2
-                    FROM cu CROSS JOIN tot),
+    Some(s"""WITH $commonnessSql,
             nt2 AS (SELECT doc_id,
                      CAST(len(list_filter(string_split(text, ' '), x -> length(x) >= 1)) AS BIGINT) AS ntok
                     FROM documents),
@@ -6492,28 +6464,33 @@ object Llm {
             FROM (SELECT * FROM p1 UNION ALL SELECT * FROM p2)
             ORDER BY phase, bucket"""))
 
+  /** Probe-count recall/cost SWEEP — the tuning curve behind every IVF
+    * deployment's nprobe knob, next to `q_sim_recall_eval`'s single
+    * scorecard: recall@3 and candidate volume at probes ∈ {1, 2, 4} in
+    * ONE query, so the cost/recall trade is a table, not three runs.
+    * Query sample salt `rcs_` is independent of the scorecard's `rc_`
+    * (shared-seed-leakage rule). Each candidate carries the rank of the
+    * probe cell that introduced it (the shared `cellsSpark` election —
+    * arn in the oracle), fans out to the levels ≥ that rank (a
+    * candidate found in probe cell 3 exists only at level 4), and each
+    * level elects its own top-3 under the family's (cos desc, n_id)
+    * contract. n_cand per level is the COST column — the measured
+    * pair-scoring volume the level pays.
+    *
+    * Scale shape: exact side = m fixed queries × corpus (linear, the
+    * recall_eval discipline); ANN side = the sampled query frame only
+    * (m × probes × cell rows), where a per-(q, level) WINDOW top-3 is
+    * fine because the frame is sample-sized — the corpus-sized serving
+    * paths keep the sort-free `graft_topk` aggregate. Output all-integer,
+    * 3 rows. InvariantsSpec pins recall monotone in probes and the
+    * level-4 row ≥ the family floor.
+    */
   private val qSimRecallSweep = Q(
     "q_sim_recall_sweep",
     (s, dir) => {
-      val vs = vecs(s, dir)
-      val qthr = Tables(s, dir, "embeddings").agg(count(lit(1)).as("n"))
-        .select(expr(s"CAST($RecallEvalQueries AS DOUBLE) / CAST(n AS DOUBLE)").as("thr"))
-      val qs = vs.crossJoin(broadcast(qthr))
-        .filter(expr(md5U01Spark("concat('rcs_', CAST(vec_id AS STRING))")) < col("thr"))
-        .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-      val wq = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-      val exact = vs
-        .select(col("vec_id").as("n_id"), col("v").as("nv"), col("nrm").as("nn"))
-        .crossJoin(broadcast(qs))
-        .filter(col("q_id") =!= col("n_id"))
-        .withColumn("cos", cosCol)
-        .select("q_id", "n_id", "cos")
-        .withColumn("rnk", row_number().over(wq))
-        .filter(col("rnk") <= 3)
-        .select("q_id", "n_id")
+      val (qs, exact) = recallExact(s, dir, "rcs_")
       val probed = ivfOccProbed(s, dir)
-      val idx = probed.select(col("vec_id").as("n_id"), col("v").as("nv"),
-        col("nrm").as("nn"), expr("element_at(pc, 1).c_id").as("cell"))
+      val idx = probedIdx(probed)
       val qryPr = probed
         .join(broadcast(qs.select("q_id")),
           probed("vec_id") === col("q_id"))
@@ -6548,21 +6525,7 @@ object Llm {
         .orderBy("probes")
     },
     Some(s"""WITH $vecsSql,
-             qprm AS (SELECT CAST($RecallEvalQueries AS DOUBLE) / COUNT(*) AS qthr
-                      FROM embeddings),
-             qs AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn
-                    FROM n CROSS JOIN qprm
-                    WHERE ${md5U01Sql("'rcs_' || CAST(vec_id AS VARCHAR)")} < qthr),
-             ex0 AS (SELECT q_id, n.vec_id AS n_id,
-                      ROUND(list_dot_product(qv, n.v) / (qn * n.nrm), 4) AS cos
-                     FROM qs, n WHERE q_id <> n.vec_id),
-             exr AS (SELECT q_id, n_id, row_number() OVER (PARTITION BY q_id
-                       ORDER BY cos DESC, n_id) AS rnk FROM ex0),
-             ex AS (SELECT q_id, n_id FROM exr WHERE rnk <= 3),
-             $ivfOccCentSql,
-             ${routedAsgSql(EmbRouteSalt)},
-             idx AS (SELECT vec_id AS n_id, v AS nv, nrm AS nn, c_id AS cell
-                     FROM asg WHERE arn = 1),
+             ${recallExactSql("rcs_")},
              qpr AS (SELECT a.vec_id AS q_id, a.v AS qv, a.nrm AS qn,
                        c_id AS cell, arn AS pr
                      FROM asg a JOIN (SELECT DISTINCT q_id FROM qs) s

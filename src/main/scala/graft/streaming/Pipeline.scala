@@ -113,13 +113,38 @@ object Pipeline {
     events.withWatermark("ts_ts", "10 minutes")
       .dropDuplicatesWithinWatermark("event_id")
 
+  /** Event-time inactivity that closes a session: 30 minutes. */
+  private[streaming] val SessionGapUs = 30L * 60 * 1000 * 1000
+
+  /** The session gap fold both state APIs run ([[sessionize]],
+    * [[SessionProcessor]]): one user's `events`, in (tsUs, event_id)
+    * order, extend the `open` session while each arrives within `gapUs`
+    * of its end, and otherwise close it and open a new one. Returns the
+    * closed sessions and the one left open.
+    */
+  private[streaming] def foldSessions(user: Long, open: Option[Session],
+      events: Iterator[Event], gapUs: Long): (Vector[Session], Option[Session]) = {
+    var cur = open
+    val closed = Vector.newBuilder[Session]
+    events.toVector.sortBy(e => (e.tsUs, e.event_id)).foreach { e =>
+      cur match {
+        case Some(s) if e.tsUs - s.endUs < gapUs =>
+          cur = Some(s.copy(endUs = e.tsUs, n_events = s.n_events + 1,
+            sum_value = s.sum_value + e.value))
+        case other =>
+          other.foreach(closed += _)
+          cur = Some(Session(user, e.tsUs, e.tsUs, 1L, e.value))
+      }
+    }
+    (closed.result(), cur)
+  }
+
   /** Custom stateful sessionization via flatMapGroupsWithState: per-user
     * sessions closed after 30 minutes of event-time inactivity. Emits a
     * session when the gap rule closes it (plus on state timeout).
     */
   def sessionize(events: Dataset[Event]): Dataset[Session] = {
     import events.sparkSession.implicits._
-    val gapUs = 30L * 60 * 1000 * 1000
     events
       .withColumn("ts_ts", expr("timestamp_micros(tsUs)"))
       .withWatermark("ts_ts", "10 minutes")
@@ -133,26 +158,12 @@ object Pipeline {
             state.remove()
             out.iterator
           } else {
-            val sorted = it.toVector.sortBy(e => (e.tsUs, e.event_id))
-            var cur = state.getOption
-            val closed = Vector.newBuilder[Session]
-            sorted.foreach { e =>
-              cur match {
-                case Some(s) if e.tsUs - s.endUs < gapUs =>
-                  cur = Some(s.copy(endUs = e.tsUs, n_events = s.n_events + 1,
-                    sum_value = s.sum_value + e.value))
-                case other =>
-                  other.foreach(closed += _)
-                  cur = Some(Session(userId, e.tsUs, e.tsUs, 1L, e.value))
-              }
+            val (closed, open) = foldSessions(userId, state.getOption, it, SessionGapUs)
+            open.foreach { s =>
+              state.update(s)
+              state.setTimeoutTimestamp(s.endUs / 1000 + SessionGapUs / 1000)
             }
-            cur match {
-              case Some(s) =>
-                state.update(s)
-                state.setTimeoutTimestamp(s.endUs / 1000 + gapUs / 1000)
-              case None => ()
-            }
-            closed.result().iterator
+            closed.iterator
           }
       }
   }
@@ -195,7 +206,7 @@ object Pipeline {
       .as[Event]
       .groupByKey(_.user_id)
       .transformWithState(
-        new SessionProcessor(30L * 60 * 1000000),
+        new SessionProcessor(SessionGapUs),
         TimeMode.EventTime(), OutputMode.Append())
   }
 

@@ -6,11 +6,13 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulPro
 
 /** Sessionization on the Spark 4 `transformWithState` arbitrary-state API
   * (the successor to flatMapGroupsWithState; Pipeline.sessionize keeps the
-  * classic formulation — both are part of the engine's stateful surface).
+  * classic formulation on the default state store — both are part of the
+  * engine's stateful surface, and both run the one gap fold,
+  * `Pipeline.foldSessions`).
   *
   * State: one open [[Session]] per user in a typed ValueState backed by the
   * RocksDB state store. An event extends the open session when it arrives
-  * within `gapUs` of its end, else the open session is emitted and a new
+  * within the gap of its end, else the open session is emitted and a new
   * one starts. An event-time timer closes sessions that go idle past the
   * gap; timers registered for superseded session ends are ignored via the
   * expiry-vs-current-end guard.
@@ -25,24 +27,13 @@ class SessionProcessor(gapUs: Long) extends StatefulProcessor[Long, Event, Sessi
 
   override def handleInputRows(
       user: Long, rows: Iterator[Event], timers: TimerValues): Iterator[Session] = {
-    val sorted = rows.toVector.sortBy(e => (e.tsUs, e.event_id))
-    var cur = if (session.exists()) Option(session.get()) else None
-    val closed = Vector.newBuilder[Session]
-    sorted.foreach { e =>
-      cur match {
-        case Some(s) if e.tsUs - s.endUs < gapUs =>
-          cur = Some(s.copy(endUs = e.tsUs, n_events = s.n_events + 1,
-            sum_value = s.sum_value + e.value))
-        case other =>
-          other.foreach(closed += _)
-          cur = Some(Session(user, e.tsUs, e.tsUs, 1L, e.value))
-      }
-    }
-    cur.foreach { s =>
+    val (closed, open) = Pipeline.foldSessions(
+      user, if (session.exists()) Option(session.get()) else None, rows, gapUs)
+    open.foreach { s =>
       session.update(s)
       getHandle.registerTimer(s.endUs / 1000L + gapUs / 1000L)
     }
-    closed.result().iterator
+    closed.iterator
   }
 
   override def handleExpiredTimer(

@@ -6,34 +6,20 @@ import org.apache.spark.sql.functions.col
   * unexpected O(n²) physical join, or to a single-task window over an
   * input that grows with the corpus. Guards the scale posture (ARCHITECTURE)
   * against regressions — e.g. a refactor that silently turns an equi-join
-  * into a nested-loop join would fail here, not at 100 TB. The rule is
-  * structural: a nested loop passes when Catalyst bounds one of its sides,
-  * whatever the query, and only the loops it cannot bound are named; a
-  * partition-less window is judged by the rows it reads
-  * ([[PlanLintSpec.growingWindows]]), and no key is named.
+  * into a nested-loop join would fail here, not at 100 TB. The rules are
+  * structural and name no key: a nested loop passes when Catalyst bounds
+  * one of its sides, and otherwise when its smaller side does not grow
+  * with the corpus; a partition-less window is judged by the rows it
+  * reads ([[PlanLintSpec.growing]]).
   */
 class PlanLintSpec extends SparkSpec {
 
   // A join with no equi-join key runs as a nested loop: every row of one
   // side meets every row of the other. It stays linear when Catalyst can
   // bound one side (`maxRows` ≤ [[PlanLintSpec.BoundedSide]]): a global
-  // aggregate's 1-row total, a ≤ 64-row top-K frame. These keys also hold
-  // nested loops whose sides are bounded by the data's design, not by any
-  // operator Catalyst sees, each counted:
-  private val unboundedNestedLoopOk = Map(
-    // region × nation: 5 × 25 rows at every scale factor
-    "q_join_cross" -> 1,
-    // the per-language trigram profiles, one row per language (5), are
-    // broadcast onto the documents
-    "q_text_langid_ngram" -> 1,
-    // the exact arm broadcasts the m sampled queries (m ≈ 64 by the
-    // hash-sample threshold, whatever the corpus size) onto the corpus
-    "q_sim_recall_eval" -> 1,
-    "q_sim_recall_sweep" -> 1,
-    // the all-pairs frame over the ≤ |days| daily census, a calendar
-    // dimension constant in corpus size
-    "q_win_theil_sen" -> 1)
-
+  // aggregate's 1-row total, a ≤ 64-row top-K frame. A side bounded by the
+  // data's design instead (region × nation, the per-language profiles,
+  // the hash-sampled recall queries, the calendar's day pairs) is measured.
   SparkEntry.declared.foreach { q =>
     test(s"${q.name}: no unexpected nested-loop/cartesian join") {
       val qe = q.fn(spark, sf).queryExecution
@@ -42,19 +28,13 @@ class PlanLintSpec extends SparkSpec {
       val physical = PlanLintSpec.physicalNestedLoops(qe.executedPlan)
       assert(physical == loops.size,
         s"${q.name}: $physical physical nested loop(s), ${loops.size} keyless logical join(s)\n${qe.executedPlan}")
-      val unbounded = loops.filterNot(PlanLintSpec.linear).size
-      val loopCap = unboundedNestedLoopOk.getOrElse(q.name, 0)
-      assert(unbounded <= loopCap,
-        s"${q.name}: $unbounded nested-loop join(s) with no side of at most " +
-          s"${PlanLintSpec.BoundedSide} rows, declared bound $loopCap\n${qe.optimizedPlan}")
-      assert(loopCap == 0 || unbounded > 0,
-        s"${q.name}: stale exemption, no unbounded nested-loop join left")
       // artifact-BUILD windows behind a persisted read are audited by the
       // artifact's own inline-spelling tests
-      val growing = PlanLintSpec.growingWindows(spark, qe.optimizedPlan,
-        q.fn(spark, sf.replace("sf0.001", "sf0.01")).queryExecution.optimizedPlan)
+      lazy val small = q.fn(spark, PlanLintSpec.at(sf, "sf0.01")).queryExecution.optimizedPlan
+      lazy val large = q.fn(spark, PlanLintSpec.at(sf, "sf0.1")).queryExecution.optimizedPlan
+      val growing = PlanLintSpec.growing(spark, qe.optimizedPlan, small, large)
       assert(growing.isEmpty,
-        s"${q.name}: partition-less window input rows, sf0.001 → sf0.01: " +
+        s"${q.name}: single-task input rows, sf0.01 → sf0.1: " +
           s"${growing.mkString(", ")}\n${qe.optimizedPlan}")
     }
   }
@@ -83,24 +63,31 @@ class PlanLintSpec extends SparkSpec {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.{count, expr, lit, sum}
     def growing(q: String => org.apache.spark.sql.DataFrame) =
-      PlanLintSpec.growingWindows(spark, q(sf).queryExecution.optimizedPlan,
-        q(sf.replace("sf0.001", "sf0.01")).queryExecution.optimizedPlan)
+      PlanLintSpec.growing(spark, q(sf).queryExecution.optimizedPlan,
+        q(PlanLintSpec.at(sf, "sf0.01")).queryExecution.optimizedPlan,
+        q(PlanLintSpec.at(sf, "sf0.1")).queryExecution.optimizedPlan)
     val running = sum("n").over(Window.orderBy("k"))
     val orders = (dir: String) => Tables(spark, dir, "orders")
       .select(col("o_orderkey").as("k"), lit(1L).as("n"))
-    assert(growing(orders(_).withColumn("cum", running)).map(_._2) == Seq(1500L -> 15000L))
+    assert(growing(orders(_).withColumn("cum", running)).map(_._2) == Seq(15000L -> 150000L))
+    // documents hold 500 rows at sf0.001 and at sf0.01, 5,000 at sf0.1
+    val docs = (dir: String) => Tables(spark, dir, "documents")
+      .select(col("doc_id").as("k"), lit(1L).as("n"))
+    assert(growing(docs(_).withColumn("cum", running)).map(_._2) == Seq(500L -> 5000L))
     val perDay = (dir: String) => Tables.events(spark, dir)
       .groupBy(expr("ts_us DIV 86400000000").as("k")).agg(count(lit(1)).as("n"))
       .withColumn("cum", running)
     assert(growing(perDay).isEmpty)
     // a Catalyst-bounded input passes uncounted
     assert(growing(orders(_).limit(64).withColumn("cum", running)).isEmpty)
-  }
-
-  test("every lint exemption names a declared key") {
-    val names = SparkEntry.declared.map(_.name).toSet
-    val unknown = unboundedNestedLoopOk.keySet -- names
-    assert(unknown.isEmpty, s"exemptions for undeclared keys: $unknown")
+    // a nested loop is judged by its smaller side: orders × region grows
+    // only on the orders side, orders × documents on both
+    val region = (dir: String) => Tables(spark, dir, "orders").select("o_orderkey")
+      .crossJoin(Tables(spark, dir, "region").select("r_regionkey"))
+    assert(growing(region).isEmpty)
+    val pairs = (dir: String) => Tables(spark, dir, "orders").select("o_orderkey")
+      .crossJoin(Tables(spark, dir, "documents").select("doc_id"))
+    assert(growing(pairs).map(_._2) == Seq(500L -> 5000L))
   }
 
   test("a byte-light exchange keeps core width under EngineSession.tune") {
@@ -654,35 +641,52 @@ object PlanLintSpec {
     case w: Window if w.partitionSpec.isEmpty => w
   }.distinctBy(_.canonicalized)
 
-  /** A window with no partition keys reads its whole input in one task,
-    * which stays cheap only while that input does not grow with the
-    * corpus. A window passes when Catalyst bounds its input (`maxRows` ≤
-    * [[BoundedSide]]), or when its input rows in `large` (the query at
-    * sf0.01) are at most max([[BoundedSide]], 2 × those in `small`, the
-    * query at sf0.001), the windows paired by their order in the plans.
-    * Returns each failing window's name and (small, large) rows. Over 10×
-    * the data a row-keyed input grows ~10×, a calendar or value grid
-    * stays nearly flat. At sf0.001 / sf0.01 / sf0.1 the 20 windows once
-    * exempted by key name read 1,500 / 14,999 / 149,743 rows (the cents
-    * of `q_agg_mannwhitney` and `q_agg_ks_test`) and 5,998 / 59,821 /
-    * 583,090 (`q_agg_spearman`'s prices), now ≤ 48 value-range shards
-    * each; the other 17 moved at most 346 / 357 / 596
-    * (`q_text_ppl_buckets`).
+  /** `dir` with its scale-factor directory name replaced by `scale`. */
+  def at(dir: String, scale: String): String = dir.replaceAll("sf[0-9.]+$", scale)
+
+  /** Single-task work that grows with the corpus. A window with no
+    * partition keys reads its whole input in one task; a nested loop
+    * meets every row of one side with every row of the other. Each stays
+    * cheap only while that input, or the loop's smaller side, does not
+    * grow with the corpus. The shapes come from `probe` (the query at
+    * sf0.001): a window whose input, or a loop with a side, Catalyst
+    * bounds (`maxRows` ≤ [[BoundedSide]]) passes uncounted. The others are
+    * counted in `small` (the query at sf0.01) and `large` (at sf0.1),
+    * paired by their order in the plans, and pass when the large count is
+    * at most max([[BoundedSide]], 2 × the small one). Returns each failing
+    * window's name, or `nested loop`, with its (small, large) rows.
+    *
+    * At that step every fixture table grows 4–10× (documents 500 → 5,000,
+    * embeddings 500 → 2,000, orders 15,000 → 150,000); region, nation, the
+    * 30 days, the 20 sources and the 5 languages stay flat. sf0.001 would
+    * not do as the small side: documents and embeddings hold 500 rows at
+    * sf0.001 and at sf0.01, so no window over text or vectors could fail.
+    * The input of `commonnessTerciles`' window is one row per distinct
+    * score: 346 / 357 / 596 rows at sf0.001 / sf0.01 / sf0.1.
     */
-  def growingWindows(spark: SparkSession, small: LogicalPlan,
+  def growing(spark: SparkSession, probe: LogicalPlan, small: => LogicalPlan,
       large: => LogicalPlan): Seq[(String, (Long, Long))] = {
     def rows(plan: LogicalPlan) = spark.sessionState.executePlan(plan).toRdd.count()
-    val ws = unpartitionedWindows(small)
-    val judged = ws.indices.filterNot(ws(_).child.maxRows.exists(_ <= BoundedSide))
-    if (judged.isEmpty) Nil
-    else {
-      val big = unpartitionedWindows(large)
-      require(big.size == ws.size, s"${ws.size} vs ${big.size} partition-less windows")
-      judged.map { i =>
-        ws(i).windowExpressions.map(_.name).mkString("/") ->
-          (rows(ws(i).child) -> rows(big(i).child))
-      }.filter { case (_, (a, b)) => b > math.max(BoundedSide, 2 * a) }
+    def bounded(plan: LogicalPlan) = plan.maxRows.exists(_ <= BoundedSide)
+    // each shape's inputs: a window's child, or a loop's two sides
+    def windows(plan: LogicalPlan) = unpartitionedWindows(plan).map(w => Seq(w.child))
+    def loops(plan: LogicalPlan) = nestedLoops(plan).map(j => Seq(j.left, j.right))
+    def judged(shapes: LogicalPlan => Seq[Seq[LogicalPlan]], name: Int => String) = {
+      val ps = shapes(probe)
+      val idx = ps.indices.filterNot(i => ps(i).exists(bounded))
+      if (idx.isEmpty) Nil
+      else {
+        val (s, l) = (shapes(small), shapes(large))
+        require(s.size == ps.size && l.size == ps.size,
+          s"${ps.size} / ${s.size} / ${l.size} shapes at sf0.001 / sf0.01 / sf0.1")
+        idx.map { i =>
+          // a loop is as large as its smaller side
+          name(i) -> s(i).zip(l(i)).map { case (a, b) => rows(a) -> rows(b) }.minBy(_._2)
+        }.filter { case (_, (a, b)) => b > math.max(BoundedSide, 2 * a) }
+      }
     }
+    judged(windows, i => unpartitionedWindows(probe)(i).windowExpressions.map(_.name).mkString("/")) ++
+      judged(loops, _ => "nested loop")
   }
 }
 

@@ -17,7 +17,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * operator that spells one of them out again starts a second store.
   * Nothing starts a child process: each costs about 10 ms, and the hop's
   * micro-batches once started dozens through Hadoop's shell fallbacks
-  * ([[LocalFiles]]).
+  * ([[LocalFiles]]). A sub-plan that two keys share is spelled in ONE
+  * place, with one oracle twin beside it: a copy is a second place every
+  * fix must reach, which is how the engine and its DuckDB twin drift. So
+  * no run of [[CopyRun]] code lines appears twice under `src/main/scala`
+  * (comments and blank lines dropped, lines holding a string literal
+  * kept whole, so oracle SQL counts).
   */
 class SourceLintSpec extends AnyFunSuite {
 
@@ -90,6 +95,62 @@ class SourceLintSpec extends AnyFunSuite {
       .partition(_.startsWith(artifacts))
     assert(own.nonEmpty, s"no artifact store found in $artifacts")
     assert(others.isEmpty, "artifact store spelled outside Artifacts:\n" + others.mkString("\n"))
+  }
+
+  /** The shortest run of code lines the copy rule reports. */
+  private val CopyRun = 8
+
+  /** The lines of `f` the copy rule compares, with their line numbers:
+    * trimmed, with blank lines, `//` comments and `/* … */` blocks
+    * (scaladoc included) dropped; a line inside or holding a string
+    * literal is kept whole.
+    */
+  private def codeLines(f: java.io.File): Vector[(Int, String)] = {
+    val out = Vector.newBuilder[(Int, String)]
+    var inBlock = false
+    var inString = false
+    val lines = scala.util.Using.resource(scala.io.Source.fromFile(f, "UTF-8"))(_.getLines().toVector)
+    lines.zipWithIndex.foreach { case (raw, i) =>
+      var line = raw.trim
+      val opensOrCloses = "\"\"\"".r.findAllIn(line).size % 2 == 1
+      if (inString) {
+        out += (i + 1 -> line)
+        if (opensOrCloses) inString = false
+      } else {
+        if (inBlock) {
+          val end = line.indexOf("*/")
+          line = if (end < 0) "" else line.substring(end + 2).trim
+          inBlock = end < 0
+        }
+        if (line.contains('"')) {
+          out += (i + 1 -> line)
+          if (opensOrCloses) inString = true
+        } else {
+          if (line.startsWith("/*")) {
+            val end = line.indexOf("*/")
+            line = if (end < 0) "" else line.substring(end + 2).trim
+            inBlock = end < 0
+          }
+          if (line.contains("//")) line = line.substring(0, line.indexOf("//")).trim
+          if (line.nonEmpty) out += (i + 1 -> line)
+        }
+      }
+    }
+    out.result()
+  }
+
+  test(s"no run of $CopyRun code lines appears twice under src/main/scala") {
+    val files = sources(new java.io.File("src/main/scala")).map(f => f.getPath -> codeLines(f))
+    val at = files.flatMap { case (path, lines) =>
+      lines.sliding(CopyRun).zipWithIndex.collect {
+        case (w, j) if w.size == CopyRun => w.map(_._2) -> (path, j, w.head._1)
+      }
+    }.groupMap(_._1)(_._2).values.filter(_.size > 1)
+    // report each run once, at its first window
+    val starts = at.flatten.map { case (path, j, _) => path -> j }.toSet
+    val runs = at.filter(_.exists { case (path, j, _) => !starts(path -> (j - 1)) })
+      .map(_.map { case (path, _, line) => s"$path:$line" }.mkString(" = "))
+    assert(runs.isEmpty, s"${runs.size} copied run(s) of $CopyRun+ lines:\n" + runs.mkString("\n"))
   }
 
   test("no source starts a child process") {
